@@ -39,16 +39,20 @@ PLANS_DIR = REPO / "plans" / "r06"
 
 def _inputs(spark):
     sf_dir = B.SF_DIR
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
-    docs.count()
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").cache()
-    li.count()
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").cache()
-    ev.count()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     tdf, _ = B._transcripts(spark, B.CPUS)
     docs_id_part = docs.withColumn("part", (F.col("doc_id") % 7).cast("int"))
-    return {"docs": docs, "li": li, "ev": ev, "tdf": tdf,
-            "docs_id_part": docs_id_part, "sf_dir": sf_dir}
+    I = {"docs": docs, "li": li, "ev": ev, "tdf": tdf,
+         "docs_id_part": docs_id_part, "sf_dir": sf_dir}
+    _cache_inputs(I)
+    return I
+
+
+def _cache_inputs(I):
+    for k in ("docs", "li", "ev", "tdf"):
+        I[k].cache().count()
 
 
 # ---------------------------------------------------------------------------
@@ -321,6 +325,11 @@ def main():
                 df = BUILDERS[n](spark, I)
                 df.write.format("noop").mode("overwrite").save()
                 reps.append(round(time.perf_counter() - t0, 3))
+                # drop what the builder cached or persisted
+                # (b_incremental_minhash) so storage blocks do not pile up
+                # over reps, then re-cache the shared inputs it also drops
+                spark.catalog.clearCache()
+                _cache_inputs(I)
             out[n] = {"best": min(reps), "reps": reps}
             print(json.dumps({n: out[n]}))
         print("TOTAL_BEST", round(sum(v["best"] for v in out.values()), 3))

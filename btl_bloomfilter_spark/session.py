@@ -13,8 +13,11 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import warnings
 
 from pyspark.sql import SparkSession
+
+_PERIODIC_GC = "spark.cleaner.periodicGC.interval"
 
 _DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -28,9 +31,9 @@ _DEFAULTS = {
     # their fresh-JVM floor by pass 2) from storage-memory pressure.
     # The stock remedy is Spark's own periodic-GC tick (default 30min,
     # far longer than most query bursts); 60s keeps the cleaner live
-    # without measurable pause cost.  Static conf: applies to sessions
-    # this module creates; a pre-existing session keeps its own value.
-    "spark.cleaner.periodicGC.interval": "60s",
+    # without measurable pause cost.  Read once when the SparkContext
+    # starts: a pre-existing context keeps its own value.
+    _PERIODIC_GC: "60s",
 }
 
 
@@ -102,13 +105,22 @@ def get_spark(
     if shuffle_partitions is not None:
         wanted["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     wanted.update({k: str(v) for k, v in (extra_conf or {}).items()})
+    gc_interval = wanted.pop(_PERIODIC_GC)
+    held = spark.sparkContext.getConf().get(_PERIODIC_GC, None)
+    if held != gc_interval:
+        # spark.conf.set may record this core conf without effect, so
+        # the context's own conf is the only reliable check
+        warnings.warn(
+            f"get_spark: the pre-existing SparkContext has {_PERIODIC_GC}="
+            f"{held or 'unset (30min default)'}, not {gc_interval}; its "
+            f"ContextCleaner keeps that interval",
+            stacklevel=2,
+        )
     for k, v in wanted.items():
         try:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)
         except Exception:
-            import warnings
-
             warnings.warn(
                 f"get_spark: conf {k}={v} could not be applied to the pre-existing "
                 f"SparkSession (static conf); the session keeps its original value",
