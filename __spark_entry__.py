@@ -53,7 +53,7 @@ def entry(spark: SparkSession) -> DataFrame:
     t = _load(spark, "/root/testdata/sf0.001", "documents")
     docs = t["documents"]
     bf = build_sketch(
-        docs, "text", lambda: BloomFilter.for_capacity(n=500_000, fpr=1e-3, k=8), fanin=8
+        docs, "text", lambda: BloomFilter.for_capacity(n=500_000, fpr=1e-3, k=8)
     )
     # zero-copy probe (mapInArrow over the raw UTF-8 buffers) — the
     # library's hot path; keep=["lang"] prunes the probed text from the
@@ -291,7 +291,7 @@ def q20_bloom_membership(spark, sf_dir):
     from btl_bloomfilter_spark.functions.probe import bloom_seen_fraction
 
     docs = _load(spark, sf_dir, "documents")["documents"]
-    bf = build_sketch(docs, "text", lambda: BloomFilter.for_capacity(n=2_000_000, fpr=1e-3, k=8), fanin=8)
+    bf = build_sketch(docs, "text", lambda: BloomFilter.for_capacity(n=2_000_000, fpr=1e-3, k=8))
     pos = docs.select(bloom_seen_fraction(spark, bf, "text").alias("frac"))
     neg = spark.range(5000).select(
         F.concat(F.lit("zzneg"), F.col("id").cast("string"), F.lit("zzpayloadzz")).alias("t")
@@ -338,7 +338,7 @@ def q22_cms_heavy_hitters(spark, sf_dir):
     from btl_bloomfilter_spark.plans.agg import build_sketch
 
     ev = _load(spark, sf_dir, "events")["events"]
-    cms = build_sketch(ev, "event_type", lambda: CountMinSketch.from_error(0.001, 0.01), fanin=8)
+    cms = build_sketch(ev, "event_type", lambda: CountMinSketch.from_error(0.001, 0.01))
     exact = ev.groupBy("event_type").agg(F.count("*").alias("exact"))
     rows = exact.collect()
     keys = [r["event_type"] for r in rows]
@@ -359,8 +359,8 @@ def q23_quantile_sketches(spark, sf_dir):
     from btl_bloomfilter_spark.plans.agg import build_sketch
 
     li = _load(spark, sf_dir, "lineitem")["lineitem"].select(F.col("l_extendedprice").alias("x"))
-    kll = build_sketch(li, "x", lambda: KLL(k=200), fanin=8)
-    td = build_sketch(li, "x", lambda: TDigest(delta=200), fanin=8)
+    kll = build_sketch(li, "x", lambda: KLL(k=200))
+    td = build_sketch(li, "x", lambda: TDigest(delta=200))
     qs = [0.1, 0.5, 0.9, 0.99]
     exact = li.agg(F.expr(f"percentile(x, array({', '.join(map(str, qs))}))").alias("p")).collect()[0]["p"]
     out = []
@@ -533,7 +533,7 @@ def q27_counting_bloom(spark, sf_dir):
 
     ev = _load(spark, sf_dir, "events")["events"]
     cbf = build_sketch(
-        ev, "event_type", lambda: CountingBloomFilter(1 << 20, 4, 0, counter_bits=32), fanin=8
+        ev, "event_type", lambda: CountingBloomFilter(1 << 20, 4, 0, counter_bits=32)
     )
     exact = {r["event_type"]: r["c"] for r in ev.groupBy("event_type").agg(F.count("*").alias("c")).collect()}
     keys = sorted(exact)
@@ -658,7 +658,7 @@ def q30_transcript_membership(spark, sf_dir):
     from btl_bloomfilter_spark.sources.transcripts import negative_corpus
 
     t = _transcripts_for(spark, sf_dir)
-    bf = build_sketch(t, "text", lambda: BloomFilter(1 << 24, 4, 12), fanin=8)
+    bf = build_sketch(t, "text", lambda: BloomFilter(1 << 24, 4, 12))
     pos_min = (
         with_probe_columns(t.select("text"), bf, "text", frac_col="f", keep=[])
         .agg(F.min("f"))
@@ -714,8 +714,8 @@ def q32_turn_length_quantiles(spark, sf_dir):
 
     t = _transcripts_for(spark, sf_dir)
     lens = t.select(F.size(F.split(F.trim("text"), r"\s+")).cast("double").alias("x")).cache()
-    kll = build_sketch(lens, "x", lambda: KLL(k=200), fanin=8)
-    td = build_sketch(lens, "x", lambda: TDigest(delta=200), fanin=8)
+    kll = build_sketch(lens, "x", lambda: KLL(k=200))
+    td = build_sketch(lens, "x", lambda: TDigest(delta=200))
     qs = [0.1, 0.5, 0.9, 0.99]
     exact = lens.agg(
         F.expr(f"percentile(x, array({', '.join(map(str, qs))}))").alias("p")
@@ -734,7 +734,7 @@ def q33_heavy_hitter_tools(spark, sf_dir):
 
     t = _transcripts_for(spark, sf_dir)
     tools = t.where(F.col("tool").isNotNull()).select("tool")
-    cms = build_sketch(tools, "tool", lambda: CountMinSketch.from_error(0.001, 0.01), fanin=8)
+    cms = build_sketch(tools, "tool", lambda: CountMinSketch.from_error(0.001, 0.01))
     exact = {
         r["tool"]: r["c"]
         for r in tools.groupBy("tool").agg(F.count("*").alias("c")).orderBy(F.desc("c")).limit(10).collect()
@@ -766,7 +766,7 @@ def q35_spaced_seed_membership(spark, sf_dir):
     # two length-12 patterns sharing the masked position 4
     patterns = ["111101111111", "111101111011"]
     bf = build_sketch(
-        docs, "text", lambda: BloomFilter(1 << 24, 2, spaced_seeds=patterns), fanin=8
+        docs, "text", lambda: BloomFilter(1 << 24, 2, spaced_seeds=patterns)
     )
     pos_min = (
         with_probe_columns(docs, bf, "text", frac_col="f", keep=[])
@@ -818,7 +818,7 @@ def q37_canonical_membership(spark, sf_dir):
 
     docs = _load(spark, sf_dir, "documents")["documents"]
     bf = build_sketch(
-        docs, "text", lambda: BloomFilter(1 << 24, 3, 12, canonical=True), fanin=8
+        docs, "text", lambda: BloomFilter(1 << 24, 3, 12, canonical=True)
     )
     pos_min = (
         with_probe_columns(docs, bf, "text", frac_col="f", keep=[])
@@ -974,7 +974,7 @@ def q39_fasta_workflow(spark, sf_dir):
     import math
 
     h = max(1, int((m / path.stat().st_size) * math.log(2)))
-    bf = build_sketch(seqs, "seq", lambda: BloomFilter(m, h, 15, dfpr=1e-3), fanin=8)
+    bf = build_sketch(seqs, "seq", lambda: BloomFilter(m, h, 15, dfpr=1e-3))
     pos_min = (
         with_probe_columns(seqs, bf, "seq", frac_col="f", keep=[]).agg(F.min("f")).collect()[0][0]
     )
@@ -1791,7 +1791,6 @@ def q57_theta_set_ops(spark, sf_dir):
             t.filter(F.col("tool") == tool).select("conv_id"),
             "conv_id",
             lambda: ThetaSketch(k=k),
-            fanin=8,
         )
     a, b = sets["a"], sets["b"]
     results = {
@@ -2160,8 +2159,8 @@ def q64_bloom_cardinality(spark, sf_dir):
     t = _transcripts_for(spark, sf_dir)
     keys = t.select(F.col("conv_id").alias("kx")).cache()
     exact = keys.distinct().count()
-    bf = build_sketch(keys, "kx", lambda: BloomFilter(1 << 22, 4, 0), fanin=8)
-    hll = build_sketch(keys, "kx", lambda: HyperLogLog(p=13), fanin=8)
+    bf = build_sketch(keys, "kx", lambda: BloomFilter(1 << 22, 4, 0))
+    hll = build_sketch(keys, "kx", lambda: HyperLogLog(p=13))
     keys.unpersist()
     b_est = bf.estimate_cardinality()
     h_est = float(hll.estimate())

@@ -146,7 +146,7 @@ def bench_queries(spark, sf_dir: str, cpus: int) -> tuple[dict, dict]:
 
     def q_transcript_bloom_build():
         bf = build_sketch(
-            tdf, "text", lambda: BloomFilter(BLOOM_M, BLOOM_H, BLOOM_K), fanin=16
+            tdf, "text", lambda: BloomFilter(BLOOM_M, BLOOM_H, BLOOM_K)
         )
         state["bloom_tx"] = bf
         return bf.pop()
@@ -173,12 +173,12 @@ def bench_queries(spark, sf_dir: str, cpus: int) -> tuple[dict, dict]:
         from btl_bloomfilter_spark.operators.bloom import BlockedBloomFilter
 
         bf = build_sketch(
-            tdf, "text", lambda: BlockedBloomFilter(BLOOM_M, BLOOM_H, BLOOM_K), fanin=16
+            tdf, "text", lambda: BlockedBloomFilter(BLOOM_M, BLOOM_H, BLOOM_K)
         )
         return bf.pop()
 
     def q_doc_bloom_build():
-        bf = build_sketch(docs, "text", lambda: BloomFilter(1 << 25, 5, 8), fanin=16)
+        bf = build_sketch(docs, "text", lambda: BloomFilter(1 << 25, 5, 8))
         return bf.pop()
 
     def q_hll_by_event_type():
@@ -199,18 +199,16 @@ def bench_queries(spark, sf_dir: str, cpus: int) -> tuple[dict, dict]:
             tdf.where(F.col("role") == "user").select("conv_id"),
             "conv_id",
             lambda: ThetaSketch(k=4096),
-            fanin=16,
         )
         b = build_sketch(
             tdf.where(F.col("role") == "assistant").select("conv_id"),
             "conv_id",
             lambda: ThetaSketch(k=4096),
-            fanin=16,
         )
         return (theta_union([a, b]).estimate(), theta_intersect(a, b).estimate())
 
     def q_cms_events():
-        cms = build_sketch(ev, "event_type", lambda: CountMinSketch.from_error(0.001, 0.01), fanin=16)
+        cms = build_sketch(ev, "event_type", lambda: CountMinSketch.from_error(0.001, 0.01))
         return cms.estimate_batch(["error"])[0]
 
     def q_cms_join_size():
@@ -228,13 +226,13 @@ def bench_queries(spark, sf_dir: str, cpus: int) -> tuple[dict, dict]:
 
     def q_kll_prices():
         k = build_sketch(
-            li.select(F.col("l_extendedprice").alias("x")), "x", lambda: KLL(k=200), fanin=16
+            li.select(F.col("l_extendedprice").alias("x")), "x", lambda: KLL(k=200)
         )
         return k.quantile(0.5)
 
     def q_tdigest_prices():
         t = build_sketch(
-            li.select(F.col("l_extendedprice").alias("x")), "x", lambda: TDigest(delta=200), fanin=16
+            li.select(F.col("l_extendedprice").alias("x")), "x", lambda: TDigest(delta=200)
         )
         return t.quantile(0.99)
 
@@ -376,7 +374,6 @@ def bench_queries(spark, sf_dir: str, cpus: int) -> tuple[dict, dict]:
             lambda: BloomFilter(
                 BLOOM_M, 2, 0, spaced_seeds=["111001100111", "110110011011"], canonical=True
             ),
-            fanin=16,
         )
         return bf.pop()
 
@@ -387,7 +384,7 @@ def bench_queries(spark, sf_dir: str, cpus: int) -> tuple[dict, dict]:
     # 3-4x first-rep spike from exactly this.  Steady state is what we
     # benchmark, so the warm-up must exercise the full allocation
     # footprint, not a limit(3000) miniature.
-    build_sketch(tdf, "text", lambda: BloomFilter(BLOOM_M, BLOOM_H, BLOOM_K), fanin=16)
+    build_sketch(tdf, "text", lambda: BloomFilter(BLOOM_M, BLOOM_H, BLOOM_K))
     # the canonical-spaced kernel (NTMSM64 fold) is a different code
     # path with ~2x the scratch footprint — warm it at FULL size too
     # (a limit(3000) mini-warm-up left an 18s first timed rep vs the
@@ -398,7 +395,6 @@ def bench_queries(spark, sf_dir: str, cpus: int) -> tuple[dict, dict]:
         lambda: BloomFilter(
             BLOOM_M, 2, 0, spaced_seeds=["111001100111", "110110011011"], canonical=True
         ),
-        fanin=16,
     )
     warm_bf = build_sketch(tdf.limit(3000), "text", lambda: BloomFilter(BLOOM_M, BLOOM_H, BLOOM_K))
     tdf.limit(3000).select(bloom_seen_fraction(spark, warm_bf, "text").alias("f")).agg(
@@ -1801,12 +1797,12 @@ def run_single_build(cpus: int) -> dict:
         tdf = transcripts_df(spark, n_convs, partitions=64).cache()
     n = tdf.count()  # same input + partitioning at every level
     mk = lambda: BloomFilter(BLOOM_M, BLOOM_H, BLOOM_K)
-    build_sketch(tdf, "text", mk, fanin=16)  # warm-up (untimed)
+    build_sketch(tdf, "text", mk)  # warm-up (untimed)
     best = float("inf")
     reps = 2 if cpus < 8 else 3  # best-of-N; the box is timing-noisy
     for _ in range(reps):
         t0 = time.perf_counter()
-        build_sketch(tdf, "text", mk, fanin=16)
+        build_sketch(tdf, "text", mk)
         best = min(best, time.perf_counter() - t0)
     spark.stop()
     return {"cpus": cpus, "sec": round(best, 3), "n_turns": n, "turns_per_sec": round(n / best, 1)}

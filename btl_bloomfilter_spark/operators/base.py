@@ -9,10 +9,11 @@ array ≡ N private arrays ORed afterwards):
     merge(a, b)* → finalize
 
 That shape is exactly what Spark needs for a distributed build:
-per-partition states via ``mapInPandas`` (Arrow batches, no per-row
-Python) + tree-wise merge (plans/agg.py).  Subclasses must guarantee
-``merge`` is associative+commutative and ``update`` order-independent
-(verified by tests/test_merge_laws.py under partition permutations).
+per-partition states via one ``mapInArrow`` kernel (Arrow batches, no
+per-row Python) + a reduce-scatter or driver merge (plans/agg.py).
+Subclasses must guarantee ``merge`` is associative+commutative and
+``update`` order-independent (verified by tests/test_merge_laws.py
+under partition permutations).
 """
 
 from __future__ import annotations
@@ -113,7 +114,7 @@ class Sketch(ABC):
     # Array-register sketches (Bloom, counting, HLL) can split their
     # state into contiguous byte-range slices: the merge of slice s
     # needs only slice s of every partial, so a single groupBy(slice)
-    # stage merges with parallelism = n_slices instead of fan-in — on
+    # stage merges with parallelism = n_slices instead of one task — on
     # a cluster the reduce bandwidth then scales with executors
     # (classic reduce-scatter), and the driver assembles only the
     # final m/8 bytes.

@@ -371,7 +371,7 @@ def quantile_histogram(
     if buckets < 2:
         raise ValueError("buckets must be >= 2")
     df = df.where(F.col(col).isNotNull())  # NULLs belong to no bucket
-    sk = build_sketch(df.select(col), col, lambda: KLL(k=k), fanin=16)
+    sk = build_sketch(df.select(col), col, lambda: KLL(k=k))
     qs = [i / buckets for i in range(1, buckets)]
     edges = [float(e) for e in sk.quantiles(qs)]
 

@@ -204,8 +204,8 @@ def iblt_diff(
     def mk():
         return IBLT(seglen=seglen, salt=salt)
 
-    ta = build_sketch(df_a, col, mk, repartition=repartition, strategy="tree")
-    tb = build_sketch(df_b, col, mk, repartition=repartition, strategy="tree")
+    ta = build_sketch(df_a, col, mk, repartition=repartition)
+    tb = build_sketch(df_b, col, mk, repartition=repartition)
     d = ta.subtract(tb)
     left, right, complete = d.decode()
     return left, right, complete, d

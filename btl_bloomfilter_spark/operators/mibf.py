@@ -1078,7 +1078,7 @@ def _assemble_u32(pairs: DataFrame, total_len: int, *, val_col: str = "id") -> n
     """Densify (rpos, val) rows into a uint32 array of ``total_len``
     WITHOUT a driver row round-trip: each reduce task builds the dense
     bytes of one contiguous rpos range (reduce-scatter, the analog of
-    plans.agg.build_sketch_sliced), and the driver concatenates the
+    plans.agg.build_sketch's sliced merge), and the driver concatenates the
     slice blobs — driver traffic is exactly 4·total_len bytes (the
     array it must hold anyway), independent of row count."""
     import math
@@ -1179,7 +1179,6 @@ def build_mibf(
     hash_num: int = 3,
     k: int = 8,
     seed_salt: int = 0,
-    fanin: int = 16,
     repair: bool = True,
     checkpoint_dir: str | None = None,
     lineage: str = "",
@@ -1207,8 +1206,8 @@ def build_mibf(
     MIBFQuerySupport.hpp:489-493).
 
     ``checkpoint_dir``/``lineage`` checkpoint the two heaviest stages:
-    pass 1 forwards to plans.agg.build_sketch (per-partition bit-vector
-    partials with lineage + fill metrics), and pass 2 persists the
+    pass 1 forwards to plans.agg.build_sketch (bit-vector slices of
+    every partition with lineage + fill metrics), and pass 2 persists the
     (rpos, id, c) count table — the full window re-hash plus the
     build's only big shuffle — under ``<checkpoint_dir>/mibf_counts``
     keyed by the filter params + lineage.  A rerun with matching
@@ -1280,7 +1279,6 @@ def build_mibf(
             hash_num=hash_num,
             k=k,
             seed_salt=seed_salt,
-            fanin=fanin,
             repair=repair,
             checkpoint_dir=checkpoint_dir,
             lineage=lineage,
@@ -1303,7 +1301,6 @@ def _build_mibf_passes(
     hash_num: int,
     k: int,
     seed_salt: int,
-    fanin: int,
     repair: bool,
     checkpoint_dir: str | None,
     lineage: str,
@@ -1320,7 +1317,6 @@ def _build_mibf_passes(
         lambda: BloomFilter(
             m_bits, hash_num, k, seed_salt=seed_salt, spaced_seeds=spaced_seeds, canonical=canonical
         ),
-        fanin=fanin,
         checkpoint_dir=checkpoint_dir,
         lineage=lineage,
     )

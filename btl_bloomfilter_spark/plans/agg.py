@@ -1,29 +1,35 @@
 """Distributed sketch-build plans.
 
 The reference parallelizes by having OpenMP threads atomically update
-one shared array (`Tests/AdHoc/ParallelFilter.cpp:109-120`).  The
-Spark-native equivalent is:
+one shared array (`Tests/AdHoc/ParallelFilter.cpp:109-120`).  Here
+every partition builds a private sketch and an associative,
+commutative merge combines them, so partition order never matters
+(tests verify under permutations).  ``build_sketch`` is one plan:
 
-    scan (column-pruned) → [repartition] → mapInPandas per-partition
-    build (Arrow batches, numpy kernels, zero per-row Python) →
-    tree-wise merge via groupBy(pid % fanin).applyInPandas →
-    driver finalize
+    scan (column-pruned) → [repartition] → coalesce(R) →
+    mapInArrow kernel → merge → driver finalize
 
-Merging replaces atomicity: every sketch's ``merge`` is associative +
-commutative, so partition order never matters (tests verify under
-permutations).  The tree fan-in bounds both shuffle width and driver
-memory — with 10k partitions and fanin=16 no single task ever merges
-more than 16 blobs, and the driver only ever collects ≤ fanin rows.
+R = max(16, min(256, 2·defaultParallelism)).  The coalesce is narrow:
+it does nothing for inputs of ≤ R partitions and otherwise caps the
+kernel at R tasks without a shuffle.  The kernel feeds a string column
+to ``update_arrow`` (zero-copy UTF-8 buffers) and every other column to
+``update()`` through PySpark's own Arrow→pandas conversion, then emits
+``state_slices(R)`` rows; a sketch with no byte-range layout emits one
+whole-blob row.  Sliced sketches merge by a groupBy(slice)
+reduce-scatter: each of R reduce tasks merges one byte range of every
+partial and the driver concatenates m/8 bytes.  One-row sketches
+collect ≤ R blobs and merge on the driver.  Either way driver and
+per-reducer memory are bounded by R, not by the input's partitions.
 
-Checkpointing (north_rule): stage-0 partials can be persisted to a
-Parquet state table with per-partition lineage + fill metrics; a rerun
-with the same params resumes from it without rescanning the source.
+Checkpointing (north_rule): with ``checkpoint_dir`` the kernel output
+is persisted to a Parquet state table with partition ids, lineage and
+per-partition fill metrics; a rerun with the same params resumes
+through the same merge without rescanning the source.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 from typing import Callable, Sequence
 
@@ -33,166 +39,134 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.base import Sketch
 
-PARTIAL_SCHEMA = "pid long, blob binary, n_rows long, metrics string"
-
-
-def _build_fn(make_sketch: Callable[[], Sketch], colname: str):
-    def fn(batches):
-        from pyspark import TaskContext
-
-        sk = make_sketch()
-        n_rows = 0
-        for pdf in batches:
-            sk.update(pdf[colname])
-            n_rows += len(pdf)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pd.DataFrame(
-            {
-                "pid": [pid],
-                "blob": [sk.serialize()],
-                "n_rows": [n_rows],
-                "metrics": [json.dumps(sk.metrics())],
-            }
-        )
-
-    return fn
-
-
-def _build_fn_arrow(make_sketch: Callable[[], Sketch], colname: str):
-    """mapInArrow builder: feeds the sketch the raw Arrow column —
-    zero-copy UTF-8 buffers, no pandas string materialization (which
-    costs ~40% of partial-build wall time on text-heavy batches)."""
-
-    def fn(batches):
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        sk = make_sketch()
-        n_rows = 0
-        for rb in batches:
-            sk.update_arrow(rb.column(rb.schema.get_field_index(colname)))
-            n_rows += rb.num_rows
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.record_batch(
-            [
-                pa.array([pid], pa.int64()),
-                pa.array([sk.serialize()], pa.binary()),
-                pa.array([n_rows], pa.int64()),
-                pa.array([json.dumps(sk.metrics())], pa.string()),
-            ],
-            names=["pid", "blob", "n_rows", "metrics"],
-        )
-
-    return fn
-
-
-def _merge_stream_fn(batches):
-    """Merge every partial in this (coalesced) partition via the
-    sketch's batched bulk path."""
-    from pyspark import TaskContext
-
-    blobs: list[bytes] = []
-    n_rows = 0
-    for pdf in batches:
-        for blob, nr in zip(pdf["blob"], pdf["n_rows"]):
-            blobs.append(bytes(blob))
-            n_rows += int(nr)
-    if not blobs:
-        return
-    sk = Sketch.merge_blobs(blobs)
-    ctx = TaskContext.get()
-    yield pd.DataFrame(
-        {
-            "pid": [ctx.partitionId() if ctx is not None else 0],
-            "blob": [sk.serialize()],
-            "n_rows": [n_rows],
-            "metrics": [json.dumps(sk.metrics())],
-        }
-    )
-
-
-def partial_sketches(
-    df: DataFrame,
-    col: str,
-    make_sketch: Callable[[], Sketch],
-    *,
-    repartition: int | None = None,
-    proto: Sketch | None = None,
-) -> DataFrame:
-    """Stage 0: one serialized partial sketch per partition.
-
-    ``select(col)`` first so Catalyst prunes columns at the scan.
-    ``proto`` lets callers that already built a prototype avoid a
-    second full-size allocation (a GB-scale filter is real memory).
-    """
-    sdf = df.select(col)
-    if repartition:
-        sdf = sdf.repartition(repartition)
-    probe = proto if proto is not None else make_sketch()
-    if hasattr(probe, "update_arrow") and dict(sdf.dtypes)[col] == "string":
-        return sdf.mapInArrow(_build_fn_arrow(make_sketch, col), PARTIAL_SCHEMA)
-    return sdf.mapInPandas(_build_fn(make_sketch, col), PARTIAL_SCHEMA)
-
-
 SLICED_SCHEMA = "slice long, blob binary, n_rows long, n_entry long, t_entry long"
+_SLICED_COLS = [c.split()[0] for c in SLICED_SCHEMA.split(", ")]
+#: bumped whenever the persisted kernel rows change shape, so a state
+#: table written by another layout is rebuilt instead of misread
+_CHECKPOINT_LAYOUT = 2
 
 
-def _build_fn_arrow_sliced(make_sketch: Callable[[], Sketch], colname: str, n_slices: int):
-    """mapInArrow builder emitting R state slices per partition
-    (reduce-scatter stage 1).  Partition counters ride on slice 0."""
+def _n_slices(spark: SparkSession) -> int:
+    """R: the slice count of the reduce-scatter merge, and the bound on
+    kernel tasks and on blobs collected to the driver."""
+    return max(16, min(256, spark.sparkContext.defaultParallelism * 2))
+
+
+def _uses_arrow(proto: Sketch, sdf: DataFrame, col: str) -> bool:
+    return hasattr(proto, "update_arrow") and dict(sdf.dtypes)[col] == "string"
+
+
+def _pandas_conversion(timezone: str):
+    """PySpark's own Arrow→pandas conversion, the one ``mapInPandas``
+    applies (dates as ``datetime.date``, timestamps as naive wall times
+    in the session time zone).  A plain ``Array.to_pandas()`` differs
+    on timestamps, so sketches would see other values than under the
+    pandas UDF path."""
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
+
+    ser = ArrowStreamPandasSerializer(timezone, False, False)
+    return lambda arr: ser.arrow_to_pandas(arr, 0)
+
+
+def _kernel(
+    make_sketch: Callable[[], Sketch],
+    col: str,
+    n_slices: int | None,
+    *,
+    arrow: bool,
+    timezone: str,
+    with_metrics: bool,
+):
+    """mapInArrow body: one sketch per partition → ``state_slices(n_slices)``
+    rows, or one whole-blob row when ``n_slices`` is None or the sketch
+    has no byte-range layout.  Partition counters ride on the first row;
+    so do ``pid`` and ``metrics`` when checkpointing (``metrics()`` is
+    not free: a Bloom popcount costs ~40 ms per 8 MiB partial)."""
 
     def fn(batches):
         import pyarrow as pa
+        from pyspark import TaskContext
 
         sk = make_sketch()
+        if arrow:
+            update = sk.update_arrow
+        else:
+            to_pandas = _pandas_conversion(timezone)
+            update = lambda arr: sk.update(to_pandas(arr))
         n_rows = 0
         for rb in batches:
-            sk.update_arrow(rb.column(rb.schema.get_field_index(colname)))
+            update(rb.column(rb.schema.get_field_index(col)))
             n_rows += rb.num_rows
-        slices = sk.state_slices(n_slices)
-        n = len(slices)
-        yield pa.record_batch(
-            [
-                pa.array(list(range(n)), pa.int64()),
-                pa.array(slices, pa.binary()),
-                pa.array([n_rows] + [0] * (n - 1), pa.int64()),
-                pa.array([getattr(sk, "n_entry", 0)] + [0] * (n - 1), pa.int64()),
-                pa.array([getattr(sk, "t_entry", 0)] + [0] * (n - 1), pa.int64()),
-            ],
-            names=["slice", "blob", "n_rows", "n_entry", "t_entry"],
-        )
+        blobs = sk.state_slices(n_slices) if n_slices else None
+        if blobs is None:
+            blobs = [sk.serialize()]
+        pad = [0] * (len(blobs) - 1)
+        arrays = [
+            pa.array(range(len(blobs)), pa.int64()),
+            pa.array(blobs, pa.binary()),
+            pa.array([n_rows] + pad, pa.int64()),
+            pa.array([getattr(sk, "n_entry", 0)] + pad, pa.int64()),
+            pa.array([getattr(sk, "t_entry", 0)] + pad, pa.int64()),
+        ]
+        names = list(_SLICED_COLS)
+        if with_metrics:
+            pid = TaskContext.get().partitionId()
+            arrays.append(pa.array([pid] * len(blobs), pa.int64()))
+            arrays.append(pa.array([json.dumps(sk.metrics())] + [None] * len(pad), pa.string()))
+            names += ["pid", "metrics"]
+        yield pa.record_batch(arrays, names=names)
 
     return fn
 
 
-def build_sketch_sliced(
+def _partials(
     df: DataFrame,
     col: str,
     make_sketch: Callable[[], Sketch],
+    proto: Sketch,
+    n_slices: int | None,
     *,
     repartition: int | None = None,
-    n_slices: int | None = None,
-) -> Sketch:
-    """Reduce-scatter build for array-register sketches.
-
-    Stage 1 (mapInArrow): per-partition sketch → R byte-range slices.
-    Stage 2 (groupBy(slice)): each of the R reduce tasks ORs only its
-    range of every partial — merge parallelism is R, not fan-in, so
-    reduce bandwidth scales with the cluster.  Driver collects exactly
-    m/8 bytes (the R merged dense slices) and concatenates.
-    """
+    with_metrics: bool = False,
+) -> DataFrame:
+    """Stage 1: the kernel DataFrame.  ``select(col)`` first so Catalyst
+    prunes columns at the scan; ``proto`` is only inspected (a GB-scale
+    filter is real memory, so callers pass the one they already made)."""
     spark = df.sparkSession
-    proto = make_sketch()
-    params = proto.params()
-    cls = type(proto)
-    if n_slices is None:
-        n_slices = max(16, min(256, spark.sparkContext.defaultParallelism * 2))
     sdf = df.select(col)
     if repartition:
         sdf = sdf.repartition(repartition)
-    sliced = sdf.mapInArrow(_build_fn_arrow_sliced(make_sketch, col, n_slices), SLICED_SCHEMA)
+    kernel = _kernel(
+        make_sketch,
+        col,
+        n_slices,
+        arrow=_uses_arrow(proto, sdf, col),
+        timezone=spark.conf.get("spark.sql.session.timeZone"),
+        with_metrics=with_metrics,
+    )
+    schema = SLICED_SCHEMA + (", pid long, metrics string" if with_metrics else "")
+    return sdf.coalesce(_n_slices(spark)).mapInArrow(kernel, schema)
+
+
+def _driver_merge(partials: DataFrame) -> Sketch | None:
+    """Collect the whole-blob rows (≤ R) and merge them on the driver;
+    None when the input had no partitions."""
+    blobs = [bytes(r["blob"]) for r in partials.select("blob").collect()]
+    return Sketch.merge_blobs(blobs) if blobs else None
+
+
+def merged_partials(df: DataFrame, col: str, make_sketch: Callable[[], Sketch]) -> Sketch | None:
+    """The build kernel with whole-blob rows, merged on the driver: no
+    shuffle, for small inputs such as streaming micro-batches.  None
+    when the input has no partitions."""
+    return _driver_merge(_partials(df, col, make_sketch, make_sketch(), None))
+
+
+def _merge_slices(partials: DataFrame, proto: Sketch, n_slices: int) -> Sketch:
+    """Stage 2 of a sliced build: groupBy(slice) reduce-scatter.  Each of
+    the ``n_slices`` reduce tasks ORs/adds only its byte range of every
+    partial, so merge parallelism is R, and the driver concatenates."""
+    cls, params = type(proto), proto.params()
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         sidx = int(pdf["slice"].iloc[0])
@@ -207,12 +181,12 @@ def build_sketch_sliced(
             }
         )
 
-    rows = sliced.groupBy("slice").applyInPandas(merge_group, SLICED_SCHEMA).collect()
-    rows.sort(key=lambda r: r["slice"])
+    rows = partials.select(*_SLICED_COLS).groupBy("slice").applyInPandas(merge_group, SLICED_SCHEMA).collect()
     if not rows:
-        raise ValueError("no partitions produced partial sketches")
+        return proto  # the input had no partitions
     if len(rows) != n_slices:
         raise ValueError(f"expected {n_slices} merged slices, got {len(rows)}")
+    rows.sort(key=lambda r: r["slice"])
     return cls.assemble_slices(
         params,
         [bytes(r["blob"]) for r in rows],
@@ -221,101 +195,60 @@ def build_sketch_sliced(
     )
 
 
-def tree_merge(partials: DataFrame, num_partials: int, *, fanin: int = 16) -> Sketch:
-    """Reduce partials tree-wise with NARROW (shuffle-free) stages.
-
-    Blobs are big (m/8 bytes); a hash-shuffle would spill them to
-    shuffle files and re-read.  Instead each reduction level persists
-    the current partials (so the coalesce below doesn't collapse the
-    upstream build stage's parallelism) and `coalesce(groups)` merges
-    fanin parents per task via a narrow dependency — no shuffle files,
-    no exchange.  The driver only ever collects ≤ fanin final blobs.
-    """
-    from pyspark import StorageLevel
-
-    cur = partials
-    n = max(1, num_partials)
-    persisted = []
-    while n > fanin:
-        cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
-        cur.count()  # materialize at full upstream parallelism
-        persisted.append(cur)
-        groups = math.ceil(n / fanin)
-        cur = cur.coalesce(groups).mapInPandas(_merge_stream_fn, PARTIAL_SCHEMA)
-        n = groups
-    rows = cur.collect()
-    for p in persisted:
-        p.unpersist()
-    if not rows:
-        raise ValueError("no partitions produced partial sketches")
-    return Sketch.merge_blobs([bytes(r["blob"]) for r in rows])
-
-
 def build_sketch(
     df: DataFrame,
     col: str,
     make_sketch: Callable[[], Sketch],
     *,
     repartition: int | None = None,
-    fanin: int = 16,
     checkpoint_dir: str | None = None,
     lineage: str = "",
-    strategy: str = "auto",
 ) -> Sketch:
-    """Full distributed build: partials → (checkpoint) → merge.
+    """Distributed build of one sketch over ``df[col]`` (module docstring).
 
-    strategy:
-      - "sliced" / "auto": reduce-scatter merge (build_sketch_sliced)
-        when the sketch supports byte-range slicing and no checkpoint
-        is requested — merge parallelism scales with the cluster.
-      - "tree": partial blobs + narrow coalesce tree merge; required
-        for checkpoint/resume (partials persist as the state table).
-
-    With ``checkpoint_dir`` the stage-0 partials are persisted (with
-    lineage + metrics columns); a rerun whose params match resumes
-    from them instead of rescanning the source (north_rule resume).
-    ``checkpoint_dir`` must be a driver-visible local/shared POSIX
-    path (see :func:`require_local_checkpoint_dir`).
+    With ``checkpoint_dir`` the kernel rows are persisted with lineage,
+    partition ids and per-partition ``metrics()``; a rerun whose params
+    and lineage match resumes from them instead of rescanning the
+    source, with the slice count recorded at write time.
+    ``checkpoint_dir`` must be a driver-visible local/shared POSIX path
+    (see :func:`require_local_checkpoint_dir`).
     """
     spark = df.sparkSession
+    proto = make_sketch()
+    n_slices = _n_slices(spark) if proto.state_slices(2) is not None else None
     if checkpoint_dir:
         require_local_checkpoint_dir(checkpoint_dir)
-    proto = make_sketch()
-    if (
-        strategy in ("auto", "sliced")
-        and checkpoint_dir is None
-        and proto.state_slices(2) is not None
-        and hasattr(proto, "update_arrow")
-        and dict(df.select(col).dtypes)[col] == "string"
-    ):
-        return build_sketch_sliced(df, col, make_sketch, repartition=repartition)
-    params_json = json.dumps(
-        {"cls": type(proto).__name__, "params": proto.checkpoint_params(), "col": col, "lineage": lineage},
-        sort_keys=True,
-    )
-    if checkpoint_dir and _checkpoint_matches(checkpoint_dir, params_json):
-        partials = spark.read.parquet(os.path.join(checkpoint_dir, "partials"))
-        n = partials.count()
-        return tree_merge(partials, n, fanin=fanin)
-
-    partials = partial_sketches(df, col, make_sketch, repartition=repartition, proto=proto)
-    if checkpoint_dir:
+        identity = {
+            "cls": type(proto).__name__,
+            "params": proto.checkpoint_params(),
+            "col": col,
+            "lineage": lineage,
+            "layout": _CHECKPOINT_LAYOUT,
+        }
         path = os.path.join(checkpoint_dir, "partials")
-        # invalidate BEFORE overwriting: a crash between writing new
-        # partials and new params.json must not leave the OLD params
-        # paired with NEW partials (a later run would silently resume
-        # from mismatched state)
-        stale = os.path.join(checkpoint_dir, "params.json")
-        if os.path.exists(stale):
-            os.remove(stale)
-        partials.withColumn("lineage", F.lit(lineage)).write.mode("overwrite").parquet(path)
-        with open(os.path.join(checkpoint_dir, "params.json"), "w") as f:
-            f.write(params_json)
-        partials = spark.read.parquet(path)
-        n = partials.count()
+        record = _checkpoint_record(checkpoint_dir, identity)
+        if record is not None:
+            partials = spark.read.parquet(path)
+            n_slices = record["n_slices"]
+        else:
+            partials = _partials(df, col, make_sketch, proto, n_slices, repartition=repartition, with_metrics=True)
+            # invalidate BEFORE overwriting: a crash between writing new
+            # partials and new params.json must not leave the OLD params
+            # paired with NEW partials (a later run would silently resume
+            # from mismatched state)
+            marker = os.path.join(checkpoint_dir, "params.json")
+            if os.path.exists(marker):
+                os.remove(marker)
+            partials.withColumn("lineage", F.lit(lineage)).write.mode("overwrite").parquet(path)
+            with open(marker, "w") as f:
+                json.dump({**identity, "n_slices": n_slices}, f, sort_keys=True)
+            partials = spark.read.parquet(path)
     else:
-        n = df.rdd.getNumPartitions() if repartition is None else repartition
-    return tree_merge(partials, n, fanin=fanin)
+        partials = _partials(df, col, make_sketch, proto, n_slices, repartition=repartition)
+    if n_slices is not None:
+        return _merge_slices(partials, proto, n_slices)
+    merged = _driver_merge(partials)
+    return proto if merged is None else merged
 
 
 def require_local_checkpoint_dir(checkpoint_dir: str) -> None:
@@ -339,13 +272,20 @@ def require_local_checkpoint_dir(checkpoint_dir: str) -> None:
         )
 
 
-def _checkpoint_matches(checkpoint_dir: str, params_json: str) -> bool:
+def _checkpoint_record(checkpoint_dir: str, identity: dict) -> dict | None:
+    """The params.json record of a complete checkpoint whose identity
+    matches, else None (absent, unfinished, other params or layout)."""
     p = os.path.join(checkpoint_dir, "params.json")
     success = os.path.join(checkpoint_dir, "partials", "_SUCCESS")
     if not (os.path.exists(p) and os.path.exists(success)):
-        return False
+        return None
     with open(p) as f:
-        return f.read() == params_json
+        try:
+            record = json.load(f)
+        except json.JSONDecodeError:  # torn write: rebuild, as for a mismatch
+            return None
+    stored = {k: v for k, v in record.items() if k != "n_slices"}
+    return record if stored == json.loads(json.dumps(identity)) else None
 
 
 # ---------------------------------------------------------------------------
@@ -353,34 +293,19 @@ def _checkpoint_matches(checkpoint_dir: str, params_json: str) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def grouped_partials_fn(make_sketch: Callable[[], Sketch], keys: Sequence[str], col: str):
-    def fn(batches):
-        states: dict[tuple, Sketch] = {}
-        for pdf in batches:
-            for kv, sub in pdf.groupby(list(keys), dropna=False, sort=False):
-                if not isinstance(kv, tuple):
-                    kv = (kv,)
-                sk = states.get(kv)
-                if sk is None:
-                    sk = states[kv] = make_sketch()
-                sk.update(sub[col])
-        for kv, sk in states.items():
-            row = {k: [v] for k, v in zip(keys, kv)}
-            row["blob"] = [sk.serialize()]
-            yield pd.DataFrame(row)
-
-    return fn
-
-
-def grouped_partials_fn_arrow(make_sketch: Callable[[], Sketch], keys: Sequence[str], col: str):
-    """mapInArrow grouped builder: only the (short) key columns are
-    materialized to python; the value column stays Arrow — per-key
-    slices go through update_arrow zero-copy."""
+def _grouped_kernel(
+    make_sketch: Callable[[], Sketch], keys: Sequence[str], col: str, *, arrow: bool, timezone: str
+):
+    """mapInArrow body: one partial sketch per (partition, key).  Only
+    the (short) key columns are materialized to python; the value
+    column follows the build kernel's rule — zero-copy ``update_arrow``
+    slices for strings, PySpark's pandas conversion otherwise."""
 
     def fn(batches):
         import numpy as np
         import pyarrow as pa
 
+        to_pandas = None if arrow else _pandas_conversion(timezone)
         states: dict[tuple, Sketch] = {}
         key_types: list = []
         for rb in batches:
@@ -404,11 +329,16 @@ def grouped_partials_fn_arrow(make_sketch: Callable[[], Sketch], keys: Sequence[
             if not spans:
                 continue
             ordered = vals.take(pa.array(np.concatenate(idx_blocks)))
+            if not arrow:
+                ordered = to_pandas(ordered)
             for kv, start, ln in spans:
                 sk = states.get(kv)
                 if sk is None:
                     sk = states[kv] = make_sketch()
-                sk.update_arrow(ordered.slice(start, ln))
+                if arrow:
+                    sk.update_arrow(ordered.slice(start, ln))
+                else:
+                    sk.update(ordered.iloc[start : start + ln])
         for kv, sk in states.items():
             # explicit key types: pa.array([None]) is null-typed and the
             # JVM cannot read it as the declared key column (null keys
@@ -440,7 +370,7 @@ def sketch_by_key(
     default scalar ``double``; pass e.g. ``array<double>`` for
     multi-quantile finalizes (the value is emitted as-is then).
 
-    Stage 1 (mapInPandas) builds one partial sketch per (partition,
+    Stage 1 (mapInArrow) builds one partial sketch per (partition,
     key) — the sketch analog of a map-side combine, so only
     (key, blob) rows shuffle, never raw values.  Stage 2 merges per
     key and finalizes.  With ``salt_partitions`` an intermediate
@@ -457,11 +387,14 @@ def sketch_by_key(
     out_schema = f"{key_schema}, {out_col} {out_type}"
 
     sdf = df.select(*keys, col)
-    proto = make_sketch()
-    if hasattr(proto, "update_arrow") and dict(sdf.dtypes)[col] == "string":
-        partials = sdf.mapInArrow(grouped_partials_fn_arrow(make_sketch, keys, col), partial_schema)
-    else:
-        partials = sdf.mapInPandas(grouped_partials_fn(make_sketch, keys, col), partial_schema)
+    kernel = _grouped_kernel(
+        make_sketch,
+        keys,
+        col,
+        arrow=_uses_arrow(make_sketch(), sdf, col),
+        timezone=df.sparkSession.conf.get("spark.sql.session.timeZone"),
+    )
+    partials = sdf.mapInArrow(kernel, partial_schema)
 
     def _merge_partition_fn(group_cols: list[str], payload_col: str, emit):
         """mapInPandas body: merge blobs per key WITHIN a hash-

@@ -3,8 +3,9 @@
 The reference is a batch library (SURVEY §2.8) and the north rule is
 batch too, but every sketch here is an associative, commutative
 accumulator, so streaming ingestion is just: per micro-batch build
-partials (same mapInPandas kernel as batch) → merge into a persisted
-running sketch.  `foreachBatch` gives exactly-once micro-batch
+partials (the same mapInArrow kernel as plans.agg.build_sketch, one
+whole blob per partition) → driver merge into a persisted running
+sketch.  `foreachBatch` gives exactly-once micro-batch
 semantics with the stream's own checkpointing; the running sketch is
 re-persisted atomically per batch (write-new + rename).
 
@@ -32,7 +33,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from ..operators.base import Sketch
-from ..plans.agg import partial_sketches
+from ..plans.agg import merged_partials
 
 _STATE_MAGIC_V1 = b"BFSTRM01"  # magic + int64 last batch_id + blob
 _STATE_MAGIC = b"BFSTRM02"  # magic + int64 batch_id + u32 len + lineage + blob
@@ -96,11 +97,9 @@ def merge_batch_into(
         )
     if batch_id is not None and batch_id <= last_id:
         return running if running is not None else make_sketch()
-    partials = partial_sketches(batch_df, col, make_sketch)
-    rows = partials.collect()  # micro-batches are small; no tree needed
-    if not rows:
+    batch_sketch = merged_partials(batch_df, col, make_sketch)
+    if batch_sketch is None:
         return running if running is not None else make_sketch()
-    batch_sketch = Sketch.merge_blobs([bytes(r["blob"]) for r in rows])
     if running is not None:
         running.merge(batch_sketch)
     else:
@@ -555,10 +554,7 @@ def stream_dedup(
                     str(out_dir / f"batch_id={batch_id}")
                 )
             )
-            rows = partial_sketches(kept.select(col), col, make_bloom).collect()
-            add = (
-                Sketch.merge_blobs([bytes(r["blob"]) for r in rows]) if rows else None
-            )
+            add = merged_partials(kept, col, make_bloom)
             running = bloom if bloom is not None else make_bloom()
             if add is not None:
                 running = running.merge(add)

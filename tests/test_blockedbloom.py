@@ -111,7 +111,7 @@ def test_distributed_build_bit_exact(spark):
     rows = [(f"turn text {i} {'x' * (i % 7)}",) for i in range(5000)]
     df = spark.createDataFrame(rows, "text string").repartition(8)
     dist = build_sketch(
-        df, "text", lambda: BlockedBloomFilter(1 << 18, 4), fanin=4
+        df, "text", lambda: BlockedBloomFilter(1 << 18, 4)
     )
     serial = BlockedBloomFilter(1 << 18, 4)
     serial.update([r[0] for r in rows])

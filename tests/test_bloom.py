@@ -185,7 +185,7 @@ def test_distributed_build_bit_identical(spark):
 
     df = spark.createDataFrame([(d,) for d in docs], "text string")
     for parts in (3, 16):
-        built = build_sketch(df, "text", mk, repartition=parts, fanin=4)
+        built = build_sketch(df, "text", mk, repartition=parts)
         np.testing.assert_array_equal(built.bits, serial.bits)
         assert built.n_entry == serial.n_entry
         assert built.t_entry == len(docs)

@@ -102,5 +102,5 @@ def test_distributed_reconciliation(spark):
     serial.update([k for (k,) in base] + [f"onlyA{i}" for i in range(25)])
     from btl_bloomfilter_spark.plans.agg import build_sketch
 
-    dist = build_sketch(da, "key", lambda: IBLT(seglen=table.seglen, salt=4), strategy="tree")
+    dist = build_sketch(da, "key", lambda: IBLT(seglen=table.seglen, salt=4))
     assert dist.state_bytes() == serial.state_bytes()

@@ -4,6 +4,9 @@
 - predicate pushdown reaches the scan (PushedFilters)
 - broadcast probe is a pure map: no Exchange in the plan
 - sketch build partials stage has no Exchange before the kernel
+- one build plan: one-row builds plan no Exchange, sliced builds plan
+  exactly one hashpartitioning(slice), and inputs above R partitions
+  are narrowed by a Coalesce, never by an exchange
 """
 
 import contextlib
@@ -26,10 +29,11 @@ def docs(spark, sf_dir):
 
 @pytest.mark.spark
 def test_column_pruning_on_scan(spark, docs):
-    from btl_bloomfilter_spark.plans.agg import partial_sketches
+    from btl_bloomfilter_spark.plans.agg import _n_slices, _partials
     from btl_bloomfilter_spark.operators.bloom import BloomFilter
 
-    part = partial_sketches(docs, "text", lambda: BloomFilter(1 << 14, 3, 8))
+    mk = lambda: BloomFilter(1 << 14, 3, 8)
+    part = _partials(docs, "text", mk, mk(), _n_slices(spark))
     plan = _plan(part)
     assert "ReadSchema: struct<text:string>" in plan  # only text read
     # No KEYED shuffle before the kernel: the only exchange the build
@@ -64,17 +68,51 @@ def test_probe_is_pure_map(spark, docs):
     assert "ReadSchema: struct<text:string>" in plan
 
 
-@pytest.mark.spark
-def test_sliced_build_single_exchange(spark, docs):
-    """Reduce-scatter build: exactly one Exchange (the slice groupBy)."""
-    from btl_bloomfilter_spark.plans.agg import _build_fn_arrow_sliced, SLICED_SCHEMA
-    from btl_bloomfilter_spark.operators.bloom import BloomFilter
+def _build_plans(spark, monkeypatch, build) -> list[str]:
+    """Run ``build`` and return the formatted plan of every DataFrame it
+    collects (the merge stage of build_sketch)."""
+    cls = type(spark.range(1))  # the concrete DataFrame class
+    plans = []
+    real_collect = cls.collect
+    monkeypatch.setattr(cls, "collect", lambda self: plans.append(_plan(self)) or real_collect(self))
+    build()
+    monkeypatch.undo()
+    return plans
 
-    mk = lambda: BloomFilter(1 << 14, 3, 8)
-    sliced = docs.select("text").mapInArrow(_build_fn_arrow_sliced(mk, "text", 8), SLICED_SCHEMA)
-    merged = sliced.groupBy("slice").count()
-    plan = _plan(merged)
-    assert plan.count("Exchange") <= 2  # slice hash exchange (+AQE read)
+
+@pytest.mark.spark
+def test_sliced_build_single_exchange(spark, docs, monkeypatch):
+    """Reduce-scatter build: exactly one Exchange, hash-partitioned on
+    the slice column; a one-row build plans no Exchange at all."""
+    import re
+
+    from btl_bloomfilter_spark.operators.bloom import BloomFilter
+    from btl_bloomfilter_spark.operators.hll import HyperLogLog
+    from btl_bloomfilter_spark.plans.agg import build_sketch
+
+    (sliced,) = _build_plans(spark, monkeypatch, lambda: build_sketch(docs, "text", lambda: BloomFilter(1 << 14, 3, 8)))
+    assert len(re.findall(r"hashpartitioning\(slice#", sliced)) == 1
+    assert "hashpartitioning" not in sliced.replace("hashpartitioning(slice#", "")
+    (one_row,) = _build_plans(spark, monkeypatch, lambda: build_sketch(docs, "text", lambda: HyperLogLog(p=10)))
+    assert "Exchange" not in one_row
+
+
+@pytest.mark.spark
+def test_build_above_r_coalesces(spark, monkeypatch):
+    """An input with more than R partitions is narrowed by a Coalesce
+    before the kernel, never by an exchange."""
+    import re
+
+    from btl_bloomfilter_spark.operators.bloom import BloomFilter
+    from btl_bloomfilter_spark.operators.hll import HyperLogLog
+    from btl_bloomfilter_spark.plans.agg import _n_slices, build_sketch
+
+    df = spark.range(0, 2000, numPartitions=_n_slices(spark) + 5).selectExpr("cast(id as string) as text")
+    (one_row,) = _build_plans(spark, monkeypatch, lambda: build_sketch(df, "text", lambda: HyperLogLog(p=10)))
+    assert "Coalesce" in one_row and "Exchange" not in one_row
+    (sliced,) = _build_plans(spark, monkeypatch, lambda: build_sketch(df, "text", lambda: BloomFilter(1 << 14, 3, 0)))
+    assert "Coalesce" in sliced
+    assert len(re.findall(r"^\(\d+\) Exchange", sliced, re.M)) == 1
 
 
 @pytest.mark.spark

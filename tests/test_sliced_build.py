@@ -1,77 +1,200 @@
-"""Reduce-scatter (sliced) build must equal the tree build bit-for-bit
-— topology is a performance knob, never semantic."""
+"""One whole-sketch build plan: select → [repartition] → coalesce(R) →
+one mapInArrow kernel → slice reduce-scatter or driver merge.
+
+Topology is never semantic: across a partition sweep P ∈ {1, 3, R,
+2R+5} exact sketches are byte-identical to a serial build and KLL /
+t-digest stay inside the merge bounds of tests/test_quantiles.py.
+Above R the build runs at most R tasks per stage and persists nothing.
+R is patched to an odd value so byte ranges split unevenly.
+"""
+
+import uuid
 
 import numpy as np
 import pytest
 
 from btl_bloomfilter_spark.operators.bloom import BloomFilter
 
+R = 9
+SWEEP = (1, 3, R, 2 * R + 5)
+N = 1500
 
-def _docs(n=400):
-    rng = np.random.default_rng(4)
-    vocab = [f"w{i:03d}" for i in range(200)]
-    return [" ".join(rng.choice(vocab, size=rng.integers(10, 50))) for _ in range(n)]
+
+@pytest.fixture
+def small_r(monkeypatch):
+    from btl_bloomfilter_spark.plans import agg
+
+    monkeypatch.setattr(agg, "_n_slices", lambda spark: R)
+
+
+def _table(spark, parts):
+    """N rows in exactly ``parts`` partitions, with no shuffle: text
+    (10-word docs), key (37 distinct strings) and x (doubles with
+    nulls), each column with a few nulls."""
+    from pyspark.sql import functions as F
+
+    i = F.col("id")
+    words = [F.concat(F.lit("w"), ((i * a + b) % 211).cast("string")) for a, b in zip(range(3, 33, 3), range(10))]
+    null_every = lambda n, c: F.when(i % n == 0, F.lit(None)).otherwise(c)
+    return spark.range(0, N, numPartitions=parts).select(
+        null_every(97, F.concat_ws(" ", *words)).alias("text"),
+        null_every(89, F.concat(F.lit("k"), (i % 37).cast("string"))).alias("key"),
+        null_every(83, ((i * 7919) % 10007).cast("double") / 3.0).alias("x"),
+    )
+
+
+def _exact_cases():
+    from btl_bloomfilter_spark.operators.counting import CountingBloomFilter, CountMinSketch
+    from btl_bloomfilter_spark.operators.countsketch import CountSketch
+    from btl_bloomfilter_spark.operators.hll import HyperLogLog
+    from btl_bloomfilter_spark.operators.iblt import IBLT
+
+    return [
+        ("text", lambda: BloomFilter(1 << 16, 3, 6)),
+        ("key", lambda: CountingBloomFilter(10_000, 3, 0, counter_bits=16)),
+        ("key", lambda: CountSketch(1000, 5)),
+        ("key", lambda: CountMinSketch.from_error(0.01, 0.01)),
+        ("text", lambda: HyperLogLog(p=10)),
+        ("key", lambda: IBLT(seglen=64, salt=3)),
+    ]
+
+
+def _tracked(spark, fn):
+    """Run fn under a fresh job group; return (result, numTasks of every
+    stage the group's jobs ran)."""
+    sc = spark.sparkContext
+    group = f"sweep-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = [s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds]
+    infos = [st.getStageInfo(s) for s in stages]
+    return out, [info.numTasks for info in infos if info is not None]
 
 
 @pytest.mark.spark
-def test_sliced_equals_tree_and_serial(spark):
-    from btl_bloomfilter_spark.plans.agg import build_sketch, build_sketch_sliced
+def test_partition_sweep_exact_sketches(spark, small_r, monkeypatch):
+    from btl_bloomfilter_spark.plans.agg import build_sketch
 
-    docs = _docs()
-    df = spark.createDataFrame([(d,) for d in docs], "text string").repartition(7)
-    mk = lambda: BloomFilter(1 << 18, 4, 9)
-    serial = mk()
-    serial.update(docs)
-    sliced = build_sketch_sliced(df, "text", mk, n_slices=16)
-    tree = build_sketch(df, "text", mk, strategy="tree", fanin=3)
-    np.testing.assert_array_equal(sliced.bits, serial.bits)
-    np.testing.assert_array_equal(tree.bits, serial.bits)
-    assert sliced.n_entry == tree.n_entry == serial.n_entry
-    assert sliced.t_entry == len(docs)
+    cls = type(spark.range(1))  # the concrete DataFrame class
+    persisted = []
+    real_persist = cls.persist
+    monkeypatch.setattr(cls, "persist", lambda self, *a, **k: persisted.append(self) or real_persist(self, *a, **k))
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    rows = _table(spark, 1).collect()
+    for col, mk in _exact_cases():
+        serial = mk()
+        serial.update([r[col] for r in rows])
+        for parts in SWEEP:
+            df = _table(spark, parts)
+            built, tasks = _tracked(spark, lambda: build_sketch(df, col, mk))
+            name = f"{type(serial).__name__} P={parts}"
+            assert built.serialize() == serial.serialize(), name
+            assert tasks and max(tasks) <= R, (name, tasks)
+    assert not persisted
+    assert set(jsc.getPersistentRDDs().keySet()) <= before  # earlier tests' caches may be freed meanwhile
 
 
 @pytest.mark.spark
-def test_sliced_with_nulls_and_odd_slice_count(spark):
-    from btl_bloomfilter_spark.plans.agg import build_sketch_sliced
+def test_partition_sweep_quantiles(spark, small_r):
+    from btl_bloomfilter_spark.operators.kll import KLL
+    from btl_bloomfilter_spark.operators.tdigest import TDigest
+    from btl_bloomfilter_spark.plans.agg import build_sketch
+    from tests.test_quantiles import _rank_err
 
-    docs = _docs(100)
+    data = np.array([r["x"] for r in _table(spark, 1).collect() if r["x"] is not None])
+    for parts in SWEEP:
+        df = _table(spark, parts)
+        kll, tasks = _tracked(spark, lambda: build_sketch(df, "x", lambda: KLL(k=200, seed=5)))
+        td = build_sketch(df, "x", lambda: TDigest(delta=200))
+        assert kll.n == td.n == data.size
+        assert max(tasks) <= R
+        for q in (0.1, 0.5, 0.9):
+            assert _rank_err(kll.quantile, data, q) <= 0.02, (parts, q)
+            assert _rank_err(td.quantile, data, q) <= 0.015, (parts, q)
+
+
+@pytest.mark.spark
+def test_kernel_coalesces_above_r(spark, small_r):
+    """Above R the kernel DataFrame has R partitions (one blob or R
+    slices each), so the driver collects at most R whole blobs."""
+    from btl_bloomfilter_spark.operators.hll import HyperLogLog
+    from btl_bloomfilter_spark.plans import agg
+
+    mk = lambda: HyperLogLog(p=10)
+    for parts, want in ((3, 3), (2 * R + 5, R)):
+        kernel = agg._partials(_table(spark, parts), "text", mk, mk(), None)
+        assert kernel.rdd.getNumPartitions() == want
+        assert kernel.count() == want
+
+
+@pytest.mark.spark
+def test_sliced_with_nulls_and_odd_slice_count(spark, monkeypatch):
+    from btl_bloomfilter_spark.plans import agg
+
+    monkeypatch.setattr(agg, "_n_slices", lambda spark: 13)  # uneven ranges
+    docs = [r["text"] for r in _table(spark, 1).collect()][:100]
     rows = [(d,) for d in docs] + [(None,), ("",), ("ab",)]
     df = spark.createDataFrame(rows, "text string").repartition(5)
     mk = lambda: BloomFilter(1 << 16, 3, 6)
     serial = mk()
     serial.update(docs + [None, "", "ab"])
-    built = build_sketch_sliced(df, "text", mk, n_slices=13)  # uneven ranges
+    built = agg.build_sketch(df, "text", mk)
     np.testing.assert_array_equal(built.bits, serial.bits)
 
 
 @pytest.mark.spark
 def test_sliced_counting_bloom(spark):
     from btl_bloomfilter_spark.operators.counting import CountingBloomFilter
-    from btl_bloomfilter_spark.plans.agg import build_sketch, build_sketch_sliced
+    from btl_bloomfilter_spark.plans.agg import build_sketch
 
     items = [f"k{i % 37}" for i in range(3000)] + [None]
     df = spark.createDataFrame([(x,) for x in items], "text string").repartition(6)
     mk = lambda: CountingBloomFilter(10_000, 3, 0, counter_bits=16)
     serial = mk()
     serial.update(items)
-    sliced = build_sketch_sliced(df, "text", mk, n_slices=9)
-    np.testing.assert_array_equal(sliced.counters, serial.counters)
-    assert sliced.n_entry == serial.n_entry
-    auto = build_sketch(df, "text", mk)  # auto routes sliced
-    np.testing.assert_array_equal(auto.counters, serial.counters)
-    est = sliced.estimate_batch(["k0", "k36", "nope"])
+    built = build_sketch(df, "text", mk)
+    np.testing.assert_array_equal(built.counters, serial.counters)
+    assert built.n_entry == serial.n_entry
+    est = built.estimate_batch(["k0", "k36", "nope"])
     assert est[0] >= 82 and est[2] == 0
 
 
 @pytest.mark.spark
 def test_sliced_whole_string_mode(spark):
-    from btl_bloomfilter_spark.plans.agg import build_sketch_sliced
+    from btl_bloomfilter_spark.plans.agg import build_sketch
 
     items = [f"item-{i}" for i in range(2000)] + [None]
     df = spark.createDataFrame([(x,) for x in items], "text string").repartition(4)
     mk = lambda: BloomFilter(1 << 16, 4, 0)
     serial = mk()
     serial.update(items)
-    built = build_sketch_sliced(df, "text", mk, n_slices=8)
+    built = build_sketch(df, "text", mk)
     np.testing.assert_array_equal(built.bits, serial.bits)
     assert built.contains_batch(["item-0", "item-1999"]).all()
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("shape", ["where_false", "limit_0", "empty_partitions"])
+def test_empty_input_returns_empty_sketch(spark, shape):
+    """Zero-partition plans (an always-false filter on a local relation,
+    limit(0)) and empty partitions both give the empty sketch, for a
+    sliced sketch and a one-row sketch alike."""
+    from btl_bloomfilter_spark.operators.hll import HyperLogLog
+    from btl_bloomfilter_spark.plans.agg import build_sketch
+
+    df = spark.createDataFrame([("a b c d e f g",), ("h i j",)], "text string")
+    df = {
+        "where_false": lambda: df.where("false"),
+        "limit_0": lambda: df.limit(0),
+        "empty_partitions": lambda: spark.range(0, 6, numPartitions=3)
+        .where("id < 0")
+        .selectExpr("cast(id as string) as text"),
+    }[shape]()
+    assert df.rdd.getNumPartitions() == (3 if shape == "empty_partitions" else 0)
+    for mk in (lambda: BloomFilter(1 << 12, 3, 4), lambda: HyperLogLog(p=8)):
+        assert build_sketch(df, "text", mk).serialize() == mk().serialize()

@@ -58,7 +58,7 @@ def test_bloom_membership_sentinels(spark, tdf):
     """'was this text n-gram seen anywhere?' — planted sentinels found,
     disjoint negative corpus within FPR bound."""
     mk = lambda: BloomFilter.for_capacity(n=3_000_000, fpr=1e-3, k=12)
-    bf = build_sketch(tdf, "text", mk, fanin=8)
+    bf = build_sketch(tdf, "text", mk)
     # only sentinels actually planted in this sample can be asserted present
     pdf = tdf.toPandas()
     planted = [s for s in SENTINELS if pdf.text.str.contains(s, regex=False).any()]
@@ -112,7 +112,7 @@ def test_cms_heavy_hitter_tools(spark, tdf):
     tool_df = tdf.filter(F.col("tool").isNotNull())
     exact = {r["tool"]: r["c"] for r in tool_df.groupBy("tool").agg(F.count("*").alias("c")).collect()}
     n = sum(exact.values())
-    cms = build_sketch(tool_df, "tool", lambda: CountMinSketch.from_error(0.005, 0.01), fanin=8)
+    cms = build_sketch(tool_df, "tool", lambda: CountMinSketch.from_error(0.005, 0.01))
     keys = list(exact)
     est = cms.estimate_batch(keys)
     t = np.array([exact[k] for k in keys], dtype=float)
@@ -127,8 +127,8 @@ def test_quantiles_turn_length(spark, tdf):
 
     ldf = tdf.select(F.length("text").cast("double").alias("len"))
     data = np.array([r["len"] for r in ldf.collect()])
-    kll = build_sketch(ldf, "len", lambda: KLL(k=200), fanin=8)
-    td = build_sketch(ldf, "len", lambda: TDigest(delta=200), fanin=8)
+    kll = build_sketch(ldf, "len", lambda: KLL(k=200))
+    td = build_sketch(ldf, "len", lambda: TDigest(delta=200))
     assert kll.n == len(data) and td.n == len(data)
     sd = np.sort(data)
     for q in (0.1, 0.5, 0.9, 0.99):
