@@ -2,21 +2,24 @@
 
 The reference's query path (`testBloom_rolling.cpp:19-33`) streams a
 corpus against a loaded filter.  Spark-native equivalent: broadcast
-the serialized sketch once, then probe with an Arrow-vectorized
-pandas UDF — a pure map (no shuffle), Catalyst plans it as
-`Project(ArrowEvalPython)` over a pruned scan.  Using
-`df.filter(bloom_contains(...))` is a broadcast semi-join against the
-Bloom filter, the classic BF use.
+the serialized sketch once, then probe with one Arrow UDF — a pure map
+(no shuffle) that Catalyst plans as `Project(ArrowEvalPython)` over a
+pruned scan.  String batches go to the sketch's zero-copy ``*_arrow``
+method where it has one; every other batch goes to its pandas method
+through PySpark's own Arrow→pandas conversion (the column rule of
+``plans.agg``).  Using `df.filter(bloom_contains(...))` is a broadcast
+semi-join against the Bloom filter, the classic BF use.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, SparkSession
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from ..operators.base import Sketch
+from ..plans.agg import _pandas_conversion
 
 # per-worker deserialized-sketch cache (rebuilt lazily per executor).
 # Keyed by CONTENT hash so identical sketches probed repeatedly share
@@ -24,6 +27,9 @@ from ..operators.base import Sketch
 # filters can't accumulate GBs of dense state in every Python worker.
 _WORKER_CACHE: dict[str, Sketch] = {}
 _WORKER_CACHE_MAX = 8
+
+#: pandas probe method → its zero-copy twin over Arrow string arrays
+_ARROW_METHODS = {"seen_fraction": "seen_fraction_arrow", "contains_batch": "contains_arrow"}
 
 
 def _cache_get(token: str, blob_value) -> Sketch:
@@ -41,17 +47,37 @@ def _blob_token(blob: bytes) -> str:
     return hashlib.sha1(blob).hexdigest()
 
 
-def _probe_udf(spark: SparkSession, sketch: Sketch, method: str, ret_type: str):
+def _is_text(t) -> bool:
+    return pa.types.is_string(t) or pa.types.is_large_string(t)
+
+
+def _probe_udfs(spark: SparkSession, sketch: Sketch, *specs: tuple[str, str]) -> list:
+    """One Arrow UDF per ``(method, ret_type)``, all sharing ONE
+    broadcast of the serialized sketch."""
     blob = sketch.serialize()
     bc = spark.sparkContext.broadcast(blob)
     token = _blob_token(blob)
+    timezone = spark.conf.get("spark.sql.session.timeZone")
 
-    @pandas_udf(ret_type)
-    def probe(s: pd.Series) -> pd.Series:
-        sk = _cache_get(token, bc.value)
-        return pd.Series(getattr(sk, method)(s))
+    def make(method: str, ret_type: str):
+        arrow_method = _ARROW_METHODS.get(method)
 
-    return probe
+        @arrow_udf(ret_type)
+        def probe(arr: pa.Array) -> pa.Array:
+            sk = _cache_get(token, bc.value)
+            if arrow_method and hasattr(sk, arrow_method) and _is_text(arr.type):
+                out = getattr(sk, arrow_method)(arr)
+            else:
+                out = getattr(sk, method)(_pandas_conversion(timezone)(arr))
+            return pa.array(out)
+
+        return probe
+
+    return [make(method, ret_type) for method, ret_type in specs]
+
+
+def _probe_udf(spark: SparkSession, sketch: Sketch, method: str, ret_type: str):
+    return _probe_udfs(spark, sketch, (method, ret_type))[0]
 
 
 def bloom_contains(spark: SparkSession, bf, col) -> Column:
@@ -86,53 +112,16 @@ def with_probe_columns(
     contains_col: str | None = None,
     keep: list[str] | None = None,
 ):
-    """Zero-copy probe: append seen-fraction / contains columns via
-    mapInArrow — the hot query path at scale, no pandas string
-    materialization (unlike the pandas_udf Column variants above).
-    Returns df + requested columns; plan stays a pure map.
-
-    ``keep`` prunes the OUTPUT columns (mapInArrow is opaque to
-    Catalyst, so downstream projection cannot prune through it): pass
-    the columns the consumer actually needs — e.g. ``keep=[]`` when
-    only aggregating the probe column — and the probed text column is
-    not re-serialized back across the Arrow boundary (at probe scale
-    that write-back otherwise rivals the probe compute itself)."""
-    import pyarrow as pa
-
-    spark = df.sparkSession
-    blob = sketch.serialize()
-    bc = spark.sparkContext.broadcast(blob)
-    token = _blob_token(blob)
-
+    """``df.select(*keep, <probe columns>)``: the seen-fraction and/or
+    contains columns of ``df[col]``, two UDFs over one broadcast that
+    Catalyst plans as a single ArrowEvalPython node.  ``keep`` (default:
+    every column of ``df``) is a plain select, so the scan reads only
+    ``keep`` and ``col``."""
     if keep is None:
-        keep = [f.name for f in df.schema.fields]
-    # prune the INPUT side too: mapInArrow is opaque to Catalyst in
-    # both directions, so without this select the scan reads (and the
-    # JVM→Python bridge serializes) every column of df even when only
-    # the probe column and `keep` are consumed
-    need = list(dict.fromkeys(keep + [col]))
-    if len(need) < len(df.schema.fields):
-        df = df.select(*need)
-    type_of = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    fields = [f"{c} {type_of[c]}" for c in keep]
-    if frac_col:
-        fields.append(f"{frac_col} double")
-    if contains_col:
-        fields.append(f"{contains_col} boolean")
-    out_schema = ", ".join(fields)
-
-    def fn(batches):
-        sk = _cache_get(token, bc.value)
-        for rb in batches:
-            arr = rb.column(rb.schema.get_field_index(col))
-            arrays = [rb.column(rb.schema.get_field_index(c)) for c in keep]
-            names = list(keep)
-            if frac_col:
-                arrays.append(pa.array(sk.seen_fraction_arrow(arr), pa.float64()))
-                names.append(frac_col)
-            if contains_col:
-                arrays.append(pa.array(sk.contains_arrow(arr), pa.bool_()))
-                names.append(contains_col)
-            yield pa.record_batch(arrays, names=names)
-
-    return df.mapInArrow(fn, out_schema)
+        keep = df.columns
+    wanted = [(name, method, t) for name, method, t in (
+        (frac_col, "seen_fraction", "double"),
+        (contains_col, "contains_batch", "boolean"),
+    ) if name]
+    udfs = _probe_udfs(df.sparkSession, sketch, *[(m, t) for _, m, t in wanted])
+    return df.select(*keep, *[u(col).alias(name) for u, (name, _, _) in zip(udfs, wanted)])

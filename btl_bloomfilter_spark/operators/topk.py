@@ -28,15 +28,13 @@ closest surface and is already covered by ``operators.counting``.
 MG is included as the deterministic member of the heavy-hitter family,
 same as HLL/KLL/t-digest round out the cardinality/quantile families.
 
-100-TB shape: stage 1 is a pure ``mapInPandas`` over the scan — each
-task folds Arrow-batch ``value_counts`` into one bounded pandas Series
-(compressed back to ``k`` whenever it exceeds ``compress_at``) and
-emits at most ``k`` (item, cnt) rows plus ONE meta row carrying the
-partition's row count and subtraction total.  Only ``P*(k+1)`` rows
-ever cross the single shuffle (`groupBy(item).sum` — map-side partial
-agg applies); the driver's final compress sees at most ``P*k`` rows.
-No corpus-sized state, no skew sensitivity (a hot item is one counter,
-not one shuffle key carrying its rows).
+Distributed shape: ``MGSummary`` is a ``Sketch``, so :func:`mg_topk`
+is ``plans.agg.build_sketch`` over the column cast to string.  Each
+kernel task folds Arrow-batch ``value_counts`` into one counter map
+(compressed to ``k`` whenever it exceeds ``max(8k, 1024)`` counters)
+and ships one blob of at most ``k`` counters; the driver merges the
+≤ R blobs.  No shuffle, no corpus-sized state, no skew sensitivity (a
+hot item is one counter, not one shuffle key carrying its rows).
 
 The summary is partition-dependent (WHICH borderline items survive
 depends on where the stream was cut) but the guarantee above is not —
@@ -46,13 +44,17 @@ all-heavy-found law rather than hash-comparing the summary itself.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import json
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["MGSummary", "mg_compress", "mg_partials", "mg_topk", "mg_topk_by_key"]
+from ..plans.agg import build_sketch
+from .base import Sketch
+
+__all__ = ["MGSummary", "mg_compress", "mg_topk", "mg_topk_by_key"]
 
 
 def mg_compress(counts: pd.Series, k: int) -> tuple[pd.Series, int]:
@@ -74,57 +76,72 @@ def mg_compress(counts: pd.Series, k: int) -> tuple[pd.Series, int]:
     return kept, cstar
 
 
-def mg_partials(df: DataFrame, col: str, k: int, *, compress_at: int | None = None) -> DataFrame:
-    """Per-partition MG summaries as a tiny DataFrame.
+class MGSummary(Sketch):
+    """Mergeable Misra-Gries summary: at most ``k`` (item, count)
+    counters over the non-null values seen.
 
-    Output schema ``(item string, cnt long, n_rows long, subtracted
-    long)``: data rows have ``item`` non-null and carry counts; each
-    partition additionally emits ONE meta row (``item`` NULL) with its
-    total non-null row count and its accumulated compress subtraction.
-    NULLs in ``col`` are excluded (documented, matching every other
-    sketch builder here).
-    """
-    if k <= 0:
-        raise ValueError("k must be positive")
-    cap = int(compress_at) if compress_at is not None else max(8 * k, 1024)
-    if cap < k:
-        raise ValueError("compress_at must be >= k")
-    src = df.select(F.col(col).cast("string").alias("item")).where(F.col("item").isNotNull())
+    ``update``/``update_arrow`` fold a batch's ``value_counts`` into
+    the counters and compress to ``k`` once they exceed ``max(8k,
+    1024)``; ``merge`` adds counts and compresses to ``k``.  ``counts``
+    and the serialized state always hold at most ``k`` counters."""
 
-    def fn(batches):
-        counts = pd.Series(dtype="int64")
-        n = 0
-        subtracted = 0
-        for pdf in batches:
-            vc = pdf["item"].value_counts()
-            n += int(vc.sum())
-            counts = pd.concat([counts, vc]).groupby(level=0).sum()
-            if len(counts) > cap:
-                counts, d = mg_compress(counts, k)
-                subtracted += d
-        counts, d = mg_compress(counts, k)
-        subtracted += d
-        out = pd.DataFrame(
-            {
-                "item": list(counts.index) + [None],
-                "cnt": list(counts.to_numpy()) + [0],
-                "n_rows": [0] * len(counts) + [n],
-                "subtracted": [0] * len(counts) + [subtracted],
-            }
-        )
-        yield out.astype({"cnt": "int64", "n_rows": "int64", "subtracted": "int64"})
+    def __init__(self, k: int):
+        if k <= 0:
+            raise ValueError("k must be positive")
+        self.k = int(k)
+        self._cap = max(8 * self.k, 1024)
+        self.n = 0  # total non-null values summarized
+        self.subtracted = 0  # sum of every compress subtraction (tracked bound)
+        self._counts: dict[str, int] = {}
 
-    return src.mapInPandas(fn, "item string, cnt long, n_rows long, subtracted long")
+    def update(self, values) -> None:
+        vc = pd.Series(values).dropna().astype(str).value_counts()
+        self._fold(zip(vc.index, vc.tolist()), int(vc.sum()), self._cap)
 
+    def update_arrow(self, arr) -> None:
+        vc = pc.value_counts(arr.drop_null())
+        cnts = vc.field("counts").to_numpy()
+        self._fold(zip(vc.field("values").to_pylist(), cnts.tolist()), int(cnts.sum()), self._cap)
 
-@dataclass
-class MGSummary:
-    """Driver-side merged Misra-Gries summary."""
+    def _fold(self, pairs, n: int, cap: int) -> None:
+        """Add (item, count) pairs summarizing ``n`` values, then
+        compress to ``k`` if more than ``cap`` counters remain."""
+        c = self._counts
+        for item, cnt in pairs:
+            c[item] = c.get(item, 0) + cnt
+        self.n += n
+        if len(c) > cap:
+            self._compress()
 
-    k: int
-    n: int  # total non-null rows summarized
-    subtracted: int  # sum of every compress subtraction (tracked bound)
-    counts: dict[str, int] = field(default_factory=dict)
+    def _compress(self) -> None:
+        if len(self._counts) > self.k:
+            kept, cstar = mg_compress(pd.Series(self._counts, dtype="int64"), self.k)
+            self._counts = dict(zip(kept.index, kept.tolist()))
+            self.subtracted += cstar
+
+    def merge(self, other: "MGSummary") -> "MGSummary":
+        self._require_compatible(other)
+        self.subtracted += other.subtracted
+        self._fold(other._counts.items(), other.n, self.k)
+        return self
+
+    def state_bytes(self) -> bytes:
+        self._compress()
+        state = {"n": self.n, "subtracted": self.subtracted, "counts": self._counts}
+        return json.dumps(state, ensure_ascii=False).encode()
+
+    def load_state(self, payload: bytes) -> None:
+        state = json.loads(payload)
+        self.n, self.subtracted, self._counts = state["n"], state["subtracted"], state["counts"]
+
+    def params(self) -> dict:
+        return {"k": self.k}
+
+    @property
+    def counts(self) -> dict[str, int]:
+        """item → underestimated count, at most ``k`` entries."""
+        self._compress()
+        return self._counts
 
     @property
     def err_bound(self) -> int:
@@ -193,30 +210,11 @@ def mg_topk_by_key(df: DataFrame, keys: list[str], col: str, k: int) -> DataFram
     return src.groupBy(*keys).applyInPandas(fn, out_schema)
 
 
-def mg_topk(df: DataFrame, col: str, k: int, *, compress_at: int | None = None) -> MGSummary:
-    """Distributed Misra-Gries: mapInPandas partials -> one tiny
-    ``groupBy(item).sum`` shuffle (at most ``partitions*(k+1)`` rows)
-    -> driver compress to ``k``.  Guarantees (gated by q93 and
-    tests/test_topk.py): for every item, ``est <= true`` and
+def mg_topk(df: DataFrame, col: str, k: int) -> MGSummary:
+    """Distributed Misra-Gries: ``build_sketch`` of an :class:`MGSummary`
+    over ``df[col]`` cast to string (NULLs excluded).  Guarantees (gated
+    by q93 and tests/test_topk.py): for every item, ``est <= true`` and
     ``true - est <= min(n//(k+1), subtracted)``; every item with
     ``true > n//(k+1)`` appears in the summary."""
-    parts = mg_partials(df, col, k, compress_at=compress_at)
-    merged = parts.groupBy("item").agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("subtracted").alias("subtracted"),
-    )
-    rows = merged.collect()
-    n = 0
-    subtracted = 0
-    data: dict[str, int] = {}
-    for r in rows:
-        if r["item"] is None:
-            n += r["n_rows"]
-            subtracted += r["subtracted"]
-        else:
-            data[r["item"]] = r["cnt"]
-    counts = pd.Series(data, dtype="int64")
-    counts, d = mg_compress(counts, k)
-    subtracted += d
-    return MGSummary(k=int(k), n=n, subtracted=subtracted, counts={str(i): int(c) for i, c in counts.items()})
+    items = df.select(F.col(col).cast("string").alias("item"))
+    return build_sketch(items, "item", lambda: MGSummary(k))

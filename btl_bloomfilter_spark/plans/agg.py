@@ -60,8 +60,8 @@ def _pandas_conversion(timezone: str):
     """PySpark's own Arrow→pandas conversion, the one ``mapInPandas``
     applies (dates as ``datetime.date``, timestamps as naive wall times
     in the session time zone).  A plain ``Array.to_pandas()`` differs
-    on timestamps, so sketches would see other values than under the
-    pandas UDF path."""
+    on timestamps, so sketches would see other values than under
+    ``mapInPandas``.  The build kernels and the probe UDF share it."""
     from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
 
     ser = ArrowStreamPandasSerializer(timezone, False, False)

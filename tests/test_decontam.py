@@ -92,3 +92,46 @@ def test_decontaminate_job_roundtrip(spark, tmp_path):
     p2 = spark.read.parquet(out2).toPandas().sort_values("doc_id").reset_index(drop=True)
     assert (p1.contamination_frac == p2.contamination_frac).all()
     assert set(p1[p1.quarantine].doc_id) == {100, 101, 102, 103, 104}
+
+
+@pytest.mark.spark
+def test_contamination_screen_streaming_equals_batch(spark, tmp_path):
+    """With a prebuilt filter the screen runs on a streaming ``docs``:
+    an availableNow file stream yields the batch screen's fractions."""
+    rng = np.random.default_rng(31)
+    letters = list("abcdefghij ")
+
+    def doc(n):
+        return "".join(rng.choice(letters, size=n))
+
+    bench_texts = [doc(200) for _ in range(10)]
+    rows = [(i, doc(300)) for i in range(40)] + [
+        (100 + i, doc(100) + bench_texts[i][30:150] + doc(100)) for i in range(8)
+    ] + [(200, None), (201, "")]
+    src = tmp_path / "src"
+    for j in range(3):  # three files → several micro-batches of input
+        spark.createDataFrame(rows[j::3], "doc_id long, text string").write.parquet(str(src / f"f{j}"))
+    bench = spark.createDataFrame([(t,) for t in bench_texts], "text string")
+    corpus = spark.read.parquet(*[str(src / f"f{j}") for j in range(3)])
+    batch, bloom = contamination_screen(corpus, bench, "text", k=25, keep=["doc_id"])
+    want = {r.doc_id: r.contamination_frac for r in batch.collect()}
+
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src / "*"))
+    )
+    screened, same = contamination_screen(stream, None, "text", k=25, keep=["doc_id"], bloom=bloom)
+    assert same is bloom and screened.isStreaming
+    out = tmp_path / "out"
+    (
+        screened.writeStream.format("parquet")
+        .option("path", str(out))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    got = {r.doc_id: r.contamination_frac for r in spark.read.parquet(str(out)).collect()}
+    assert got == want
+    assert min(want[100 + i] for i in range(8)) > 0.15 and want[200] == want[201] == 0.0

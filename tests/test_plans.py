@@ -2,11 +2,14 @@
 
 - column pruning reaches the parquet scan (ReadSchema)
 - predicate pushdown reaches the scan (PushedFilters)
-- broadcast probe is a pure map: no Exchange in the plan
+- broadcast probe is a pure map: no Exchange in the plan; the
+  frac and contains UDFs share one ArrowEvalPython node and one
+  broadcast
 - sketch build partials stage has no Exchange before the kernel
 - one build plan: one-row builds plan no Exchange, sliced builds plan
   exactly one hashpartitioning(slice), and inputs above R partitions
-  are narrowed by a Coalesce, never by an exchange
+  are narrowed by a Coalesce, never by an exchange; top-k is a one-row
+  build, so it plans no Exchange either
 """
 
 import contextlib
@@ -68,6 +71,29 @@ def test_probe_is_pure_map(spark, docs):
     assert "ReadSchema: struct<text:string>" in plan
 
 
+@pytest.mark.spark
+def test_probe_columns_one_node_one_broadcast(spark, docs, monkeypatch):
+    import re
+
+    from btl_bloomfilter_spark.functions.probe import with_probe_columns
+    from btl_bloomfilter_spark.operators.bloom import BloomFilter
+
+    bf = BloomFilter(1 << 14, 3, 8)
+    bf.update(["warm"])
+    sc = spark.sparkContext
+    made = []
+    real_broadcast = sc.broadcast
+    monkeypatch.setattr(sc, "broadcast", lambda value: made.append(value) or real_broadcast(value))
+    probed = with_probe_columns(docs, bf, "text", frac_col="f", contains_col="c", keep=["doc_id"])
+    monkeypatch.undo()
+    assert len(made) == 1
+    plan = _plan(probed)
+    nodes = re.findall(r"^\(\d+\) ArrowEvalPython\n.*\nArguments: (.*)$", plan, re.M)
+    assert len(nodes) == 1 and nodes[0].count("probe(text#") == 2
+    assert "MapInArrow" not in plan and "Exchange" not in plan
+    assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
+
+
 def _build_plans(spark, monkeypatch, build) -> list[str]:
     """Run ``build`` and return the formatted plan of every DataFrame it
     collects (the merge stage of build_sketch)."""
@@ -113,6 +139,15 @@ def test_build_above_r_coalesces(spark, monkeypatch):
     (sliced,) = _build_plans(spark, monkeypatch, lambda: build_sketch(df, "text", lambda: BloomFilter(1 << 14, 3, 0)))
     assert "Coalesce" in sliced
     assert len(re.findall(r"^\(\d+\) Exchange", sliced, re.M)) == 1
+
+
+@pytest.mark.spark
+def test_mg_topk_no_exchange(spark, docs, monkeypatch):
+    from btl_bloomfilter_spark.operators.topk import mg_topk
+
+    (plan,) = _build_plans(spark, monkeypatch, lambda: mg_topk(docs, "lang", 4))
+    assert "Exchange" not in plan
+    assert "MapInArrow" in plan
 
 
 @pytest.mark.spark

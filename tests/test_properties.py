@@ -1,14 +1,19 @@
 """Property-based tests (hypothesis) for the core laws:
 rolling-hash == from-scratch fold on arbitrary unicode, Bloom merge
 associativity/commutativity on arbitrary partitionings, sizing-formula
-invariants over the (n, fpr) grid (SURVEY §5 item 7)."""
+invariants over the (n, fpr) grid (SURVEY §5 item 7), Misra-Gries
+merge laws on arbitrary stream cuts and merge orders."""
+
+import collections
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from btl_bloomfilter_spark import params as P
 from btl_bloomfilter_spark.functions import hashing as H
+from btl_bloomfilter_spark.operators.base import Sketch
 from btl_bloomfilter_spark.operators.bloom import BloomFilter
+from btl_bloomfilter_spark.operators.topk import MGSummary
 
 
 def _naive_window_hash(data: bytes, start: int, k: int, seeds) -> int:
@@ -62,6 +67,38 @@ def test_bloom_merge_partition_invariance(items, cuts, perm_seed):
         acc.merge(partials[i])
     np.testing.assert_array_equal(acc.bits, serial.bits)
     assert acc.n_entry == serial.n_entry
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    items=st.lists(st.sampled_from("abcdefgh"), max_size=80),
+    k=st.integers(min_value=1, max_value=10),
+    cuts=st.lists(st.integers(min_value=0, max_value=80), max_size=8),
+    perm_seed=st.integers(min_value=0, max_value=1000),
+    via_bytes=st.booleans(),
+)
+def test_mg_merge_laws_any_cut_any_order(items, k, cuts, perm_seed, via_bytes):
+    """MGSummary partials cut anywhere and merged in any order (directly
+    or through serialize/deserialize) keep the Misra-Gries laws."""
+    bounds = sorted({0, len(items), *[c % (len(items) + 1) for c in cuts]})
+    partials = []
+    for a, b in zip(bounds, bounds[1:]):
+        p = MGSummary(k)
+        p.update(items[a:b])
+        partials.append(Sketch.deserialize(p.serialize()) if via_bytes else p)
+    acc = MGSummary(k)
+    for i in np.random.default_rng(perm_seed).permutation(len(partials)):
+        acc.merge(Sketch.deserialize(partials[i].serialize()) if via_bytes else partials[i])
+    true = collections.Counter(items)
+    n = len(items)
+    assert acc.n == n and len(acc.counts) <= k
+    slack = min(n // (k + 1), acc.subtracted)
+    for item, c in true.items():
+        assert acc.estimate(item) <= c <= acc.estimate(item) + slack
+        if c > n // (k + 1):
+            assert item in acc.counts
+    if len(true) <= k:
+        assert acc.counts == dict(true)
 
 
 @settings(max_examples=60, deadline=None)

@@ -1,13 +1,15 @@
 """Misra-Gries mergeable top-k: compress law, distributed guarantees
-under arbitrary partitionings, bounded shuffle size."""
+under arbitrary partitionings, at most k counters per shipped blob."""
 
 import collections
+import json
 import random
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
-from btl_bloomfilter_spark.operators.topk import MGSummary, mg_compress, mg_partials, mg_topk
+from btl_bloomfilter_spark.operators.topk import MGSummary, mg_compress, mg_topk
 
 
 def _zipf_stream(rng: random.Random, n: int, vocab: int) -> list[str]:
@@ -70,26 +72,44 @@ def test_mg_guarantees_random_partitionings(spark, parts, k):
     _check_guarantees(summ, stream)
 
 
+def test_mg_update_compresses_above_cap():
+    """``update`` keeps every counter up to the cap max(8k, 1024) and
+    compresses to k in-stream once a batch pushes it past the cap."""
+    k = 10
+    sk = MGSummary(k)
+    sk.update_arrow(pa.array([f"u{i}" for i in range(1024)]))
+    assert len(sk._counts) == 1024 and sk.subtracted == 0
+    sk.update(["u0", "u0", "extra"])
+    assert len(sk._counts) <= k and sk.subtracted == 1
+    assert sk.n == 1027
+
+
 @pytest.mark.spark
-def test_mg_small_compress_cap(spark):
-    # compress_at == k exercises the in-stream compress path heavily
+def test_mg_compress_above_cap(spark):
+    # > cap distinct items per partition force the in-stream compress
     rng = random.Random(11)
-    stream = _zipf_stream(rng, 3000, 400)
-    df = spark.createDataFrame([(s,) for s in stream], "item string").repartition(5)
-    summ = mg_topk(df, "item", k=10, compress_at=10)
+    stream = _zipf_stream(rng, 3000, 40) + [f"u{i}" for i in range(6000)]
+    rng.shuffle(stream)
+    df = spark.createDataFrame([(s,) for s in stream], "item string").repartition(3)
+    summ = mg_topk(df, "item", k=10)
+    assert summ.subtracted > 0
     _check_guarantees(summ, stream)
 
 
 @pytest.mark.spark
-def test_mg_partials_bounded_shuffle(spark):
+def test_mg_kernel_blobs_hold_k_counters(spark):
+    from btl_bloomfilter_spark.operators.base import Sketch
+    from btl_bloomfilter_spark.plans.agg import _partials
+
     parts, k = 6, 7
     stream = _zipf_stream(random.Random(3), 5000, 300)
     df = spark.createDataFrame([(s,) for s in stream], "item string").repartition(parts)
-    p = mg_partials(df, "item", k).toPandas()
-    # at most k data rows + 1 meta row per partition crosses the shuffle
-    assert len(p) <= parts * (k + 1)
-    meta = p[p["item"].isna()]
-    assert int(meta["n_rows"].sum()) == 5000
+    make = lambda: MGSummary(k)
+    blobs = [bytes(r["blob"]) for r in _partials(df, "item", make, make(), None).collect()]
+    assert len(blobs) == parts
+    states = [json.loads(Sketch.peek(b)[2]) for b in blobs]
+    assert all(len(st["counts"]) <= k for st in states)
+    assert sum(st["n"] for st in states) == 5000
 
 
 @pytest.mark.spark
@@ -150,13 +170,14 @@ def test_mg_by_key_all_null_group_empty(spark):
 
 
 def test_mg_invalid_args():
-    class _Fake:  # mg_partials validates args before touching df
+    class _Fake:  # mg_topk_by_key validates args before touching df
         pass
 
-    with pytest.raises(ValueError):
-        mg_partials(_Fake(), "c", 0)
-    with pytest.raises(ValueError):
-        mg_partials(_Fake(), "c", 8, compress_at=3)
+    for k in (0, -1):
+        with pytest.raises(ValueError):
+            MGSummary(k)
+    with pytest.raises(ValueError):  # merge needs equal k
+        MGSummary(4).merge(MGSummary(5))
     from btl_bloomfilter_spark.operators.topk import mg_topk_by_key
 
     with pytest.raises(ValueError):
