@@ -8,6 +8,9 @@ Semantics mirror the reference (`BloomFilter.hpp`):
 - merge: bitwise OR — exactly what the reference's concurrent
   ``__sync_or_and_fetch`` inserts compute, hence a P-partition
   distributed build is **bit-identical** to a serial one.
+- a build queues bit positions and ORs them in sorted, so a low-fill
+  partial is cut into slices or serialized from its positions without
+  touching an m-sized array (``_set_bits``).
 - intersect: bitwise AND (standard BF intersection).
 - popcount / FPR math: BloomFilter.hpp:316-367.
 
@@ -28,6 +31,29 @@ from .. import params as P
 from .base import Sketch
 
 _POPCNT_LUT = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(axis=1).astype(np.uint16)
+_BIT_MASKS = np.array([1, 2, 4, 8, 16, 32, 64, 128], dtype=np.uint8)
+
+
+def _or_sorted(dst: np.ndarray, pos: np.ndarray) -> None:
+    """OR bit positions (ascending, repeats allowed) into the packed
+    LSB-first bytes ``dst``: the masks of each run of equal bytes are
+    reduced first, so every touched byte gets exactly one OR."""
+    if pos.size == 0:
+        return
+    byte = np.right_shift(pos, 3)
+    first = np.empty(byte.size, dtype=bool)
+    first[0] = True
+    np.not_equal(byte[1:], byte[:-1], out=first[1:])
+    starts = np.flatnonzero(first)
+    dst[byte[starts]] |= np.bitwise_or.reduceat(_BIT_MASKS[np.bitwise_and(pos, 7)], starts)
+
+
+def _set_positions(packed: np.ndarray) -> np.ndarray:
+    """Ascending set-bit positions of packed LSB-first bytes; cost ∝
+    the nonzero bytes, not the array length."""
+    nzb = np.flatnonzero(packed)
+    rows_, cols_ = np.nonzero(np.unpackbits(packed[nzb][:, None], axis=1, bitorder="little"))
+    return nzb[rows_] * 8 + cols_
 
 
 def _strings_of(values) -> list:
@@ -90,9 +116,12 @@ class BloomFilter(Sketch):
                         raise ValueError(
                             f"canonical spaced-seed mode requires symmetric patterns; {p!r} is not"
                         )
-        self._bits = np.zeros(self.m_bits // 8, dtype=np.uint8)
         self._seeds = H.seed_table(self.seed_salt)
-        self._acc: np.ndarray | None = None  # bool scatter accumulator
+        # pending positions fit in u32 up to m = 2^32; the buffer holds
+        # at most the packed array's own size, m/8 bytes
+        self._pos_dtype = np.dtype(np.uint32 if self.m_bits <= 1 << 32 else np.uint64)
+        self._pend_cap = self.m_bits // 8 // self._pos_dtype.itemsize
+        self._clear()
 
     # -- construction helpers ---------------------------------------
     @classmethod
@@ -150,14 +179,6 @@ class BloomFilter(Sketch):
         # fixed whole-string convention (=1) otherwise
         return self.k if self.k > 0 else 1
 
-    #: bool-accumulator cap: fancy-index scatter into a bool array is
-    #: ~4× faster than np.bitwise_or.at on packed bytes, at the cost of
-    #: m_bits bytes of transient worker memory; above the cap fall back
-    #: to the packed scatter
-    DENSE_ACC_MAX_BITS = 1 << 27
-
-    _BIT_MASKS = np.array([1, 2, 4, 8, 16, 32, 64, 128], dtype=np.uint8)
-
     # -- hash → bit-position mapping ------------------------------------
     # The ONLY layout-dependent step: BloomFilter scatters each hash
     # uniformly over [0, m); BlockedBloomFilter (below) derives a block
@@ -185,24 +206,59 @@ class BloomFilter(Sketch):
         return hi % np.uint64(self.m_bits)
 
     # -- updates -------------------------------------------------------
+    # Inserts do not write the packed array bit by bit: they queue bit
+    # positions in a buffer of at most ``_pend_cap`` entries (m/8
+    # bytes, the packed array's own size) and fold them in with one
+    # sorted OR.  A low-fill partial (0.5% at m = 2^26 per benchmark
+    # partition) never touches an m-sized array: ``state_slices`` and
+    # ``state_bytes`` cut and write its sorted positions directly.
+    def _clear(self) -> None:
+        """Empty state: zero packed bits, no pending positions."""
+        self._bits = np.zeros(self.m_bits // 8, dtype=np.uint8)
+        self._dense = False  # _bits may hold set bits
+        self._drop_pending()
+
+    def _drop_pending(self) -> None:
+        self._pend: list[np.ndarray] = []
+        self._pend_n = 0
+        self._uniq = False  # _pend is one ascending duplicate-free array
+
     def _set_bits(self, idx: np.ndarray) -> None:
-        """idx: uint64 bit positions; may be mutated (callers pass scratch)."""
-        if self.m_bits <= self.DENSE_ACC_MAX_BITS:
-            if self._acc is None:
-                self._acc = np.zeros(self.m_bits, dtype=bool)
-            self._acc[idx] = True
+        """Queue bit positions (< m, any unsigned dtype; copied, so
+        callers may reuse ``idx``).  When the buffer passes its cap it
+        is deduplicated; if more than half the cap is still used after
+        that, it is folded into the packed array."""
+        if idx.size == 0:
             return
-        bit_in = H._scratch("bf_bit", idx.size)
-        np.bitwise_and(idx, np.uint64(7), out=bit_in)
-        mask = self._BIT_MASKS[bit_in]  # uint8 gather, no astype pass
-        np.right_shift(idx, np.uint64(3), out=idx)
-        np.bitwise_or.at(self._bits, idx, mask)
+        self._pend.append(idx.astype(self._pos_dtype))
+        self._pend_n += idx.size
+        self._uniq = False
+        if self._pend_n > self._pend_cap:
+            pos = self._pending_unique()
+            if pos.size > self._pend_cap // 2:
+                self._fold(pos)
+
+    def _pending_unique(self) -> np.ndarray:
+        """The pending positions, ascending and deduplicated (kept as
+        the buffer, so a second call is free)."""
+        if not self._uniq:
+            pos = np.unique(np.concatenate(self._pend)) if self._pend else np.zeros(0, self._pos_dtype)
+            self._pend, self._pend_n, self._uniq = [pos], pos.size, True
+        return self._pend[0]
+
+    def _fold(self, pos: np.ndarray) -> None:
+        """OR ascending positions into the packed array; empties the buffer."""
+        _or_sorted(self._bits, pos)
+        self._dense = True
+        self._drop_pending()
 
     def _consolidate(self) -> None:
-        """Fold the bool accumulator into the packed bit array."""
-        if self._acc is not None:
-            np.bitwise_or(self._bits, np.packbits(self._acc, bitorder="little"), out=self._bits)
-            self._acc = None
+        """Fold every pending position into the packed array.  Every
+        dense reader (probes, ``bits``, ``merge``, ``intersect``,
+        ``update_and_check``; ``pop`` once a bit is dense) calls this
+        first."""
+        if self._pend_n:
+            self._fold(self._pend[0] if self._uniq else np.sort(np.concatenate(self._pend)))
 
     @property
     def bits(self) -> np.ndarray:
@@ -212,8 +268,9 @@ class BloomFilter(Sketch):
 
     @bits.setter
     def bits(self, value: np.ndarray) -> None:
-        self._acc = None
+        self._drop_pending()
         self._bits = value
+        self._dense = True
 
     def update(self, values) -> None:
         if self.spaced_seeds:
@@ -503,6 +560,7 @@ class BloomFilter(Sketch):
         self._consolidate()
         other._consolidate()
         np.bitwise_or(self._bits, other._bits, out=self._bits)
+        self._dense |= other._dense
         self.n_entry += other.n_entry
         self.t_entry += other.t_entry
         return self
@@ -512,43 +570,19 @@ class BloomFilter(Sketch):
     @classmethod
     def bulk_merge(cls, payloads_params: list[tuple[dict, bytes]]) -> "BloomFilter":
         """Batched OR of many serialized partials: dense payloads OR
-        directly; ALL sparse payloads concatenate into one scatter —
-        ~10× cheaper than per-blob reconstruction when merging many
-        low-fill partition sketches."""
+        directly; sparse payloads only join the pending buffer, so
+        merging many low-fill partition sketches costs one sort."""
         out = cls(**payloads_params[0][0])
-        sparse_idx: list[np.ndarray] = []
         for params, payload in payloads_params:
             if params != payloads_params[0][0]:
                 raise ValueError("incompatible bloom params in bulk merge")
-            hdr = np.frombuffer(payload[:16], dtype=np.uint64)
-            out.n_entry += int(hdr[0])
-            out.t_entry += int(hdr[1])
-            fmt = payload[16]
-            body = payload[17:]
-            if fmt == 0:
-                dense = np.frombuffer(body, dtype=np.uint8)
-                if dense.shape[0] != out.m_bits // 8:
-                    raise ValueError("payload size mismatch")
-                np.bitwise_or(out._bits, dense, out=out._bits)
-            else:
-                sparse_idx.append(np.frombuffer(body, dtype=np.uint32 if fmt == 1 else np.uint64))
-        if sparse_idx:
-            all_idx = np.concatenate(sparse_idx)
-            # bool-scatter only below the same cap as everywhere else —
-            # a 2^32-bit filter would otherwise allocate a 4 GiB bool
-            # temporary PER CONCURRENT MERGE TASK
-            if out.m_bits <= cls.DENSE_ACC_MAX_BITS:  # one bool scatter, then fold
-                acc = np.zeros(out.m_bits, dtype=bool)
-                acc[all_idx] = True
-                np.bitwise_or(out._bits, np.packbits(acc, bitorder="little"), out=out._bits)
-            else:
-                bit_in = (all_idx & 7).astype(np.uint8)
-                np.bitwise_or.at(out._bits, all_idx >> 3, cls._BIT_MASKS[bit_in])
+            out._absorb(payload)
         return out
 
     # -- slice-parallel merge (reduce-scatter) -------------------------
     # slice payload layout: [fmt u8][body]; fmt 0 = dense bytes of the
-    # slice range, fmt 1 = uint32 bit-indices RELATIVE to slice start.
+    # slice range, fmt 1 = ascending uint32 bit-indices RELATIVE to the
+    # slice start, chosen whenever it is smaller than the dense bytes.
 
     def _slice_bounds(self, n_slices: int) -> np.ndarray:
         per = ((self.m_bits // 8) + n_slices - 1) // n_slices
@@ -556,32 +590,40 @@ class BloomFilter(Sketch):
         return b
 
     def state_slices(self, n_slices: int) -> list[bytes]:
-        self._consolidate()
-        bounds = self._slice_bounds(n_slices)
+        bounds = [int(b) for b in self._slice_bounds(n_slices)]
         out = []
+        if not self._dense:
+            # every bit still pending: cut the ascending positions at
+            # the slice bounds; no m-sized array is touched
+            pos = self._pending_unique()
+            starts = (np.array(bounds[:-1], dtype=np.int64) * 8).astype(pos.dtype)
+            cuts = np.append(np.searchsorted(pos, starts), pos.size)
+            for s in range(n_slices):
+                lo, hi = bounds[s], bounds[s + 1]
+                rel = pos[cuts[s] : cuts[s + 1]] - pos.dtype.type(lo * 8)
+                if rel.size * 4 < hi - lo:
+                    out.append(b"\x01" + rel.astype(np.uint32, copy=False).tobytes())
+                else:
+                    dense = np.zeros(hi - lo, dtype=np.uint8)
+                    _or_sorted(dense, rel)
+                    out.append(b"\x00" + dense.tobytes())
+            return out
+        self._consolidate()
         for s in range(n_slices):
-            lo, hi = int(bounds[s]), int(bounds[s + 1])
-            chunk = self._bits[lo:hi]
-            nzb = np.nonzero(chunk)[0]
-            if nzb.size == 0:
-                # untouched slice: 1-byte sparse blob, not dense zeros
-                out.append(b"\x01")
-                continue
-            # sparse if clearly smaller (u32 relative indices)
-            if nzb.size * 8 * 4 < chunk.size * 5:  # rough pop bound: ≤8 bits/byte
-                sub = np.unpackbits(chunk[nzb][:, None], axis=1, bitorder="little")
-                rows_, cols_ = np.nonzero(sub)
-                idx = (nzb[rows_] * 8 + cols_).astype(np.uint32)
-                if idx.size * 4 < chunk.size:
-                    out.append(b"\x01" + idx.tobytes())
+            chunk = self._bits[bounds[s] : bounds[s + 1]]
+            # popcount ≥ nonzero bytes: only a slice with few of them
+            # can have a smaller sparse body
+            if np.count_nonzero(chunk) * 4 < chunk.size:
+                rel = _set_positions(chunk)
+                if rel.size * 4 < chunk.size:
+                    out.append(b"\x01" + rel.astype(np.uint32).tobytes())
                     continue
             out.append(b"\x00" + chunk.tobytes())
         return out
 
     @classmethod
     def merge_slice_blobs(cls, params: dict, slice_idx: int, n_slices: int, blobs: list[bytes]) -> bytes:
-        tmp = cls(**params)
-        bounds = tmp._slice_bounds(n_slices)
+        bounds = cls(**params)._slice_bounds(n_slices)
         lo, hi = int(bounds[slice_idx]), int(bounds[slice_idx + 1])
         acc = np.zeros(hi - lo, dtype=np.uint8)
         sparse: list[np.ndarray] = []
@@ -591,19 +633,21 @@ class BloomFilter(Sketch):
                 if dense.shape[0] != hi - lo:
                     raise ValueError("slice size mismatch")
                 np.bitwise_or(acc, dense, out=acc)
-            else:
+            elif b[0] == 1:
                 sparse.append(np.frombuffer(b, dtype=np.uint32, offset=1))
+            else:
+                raise ValueError(f"unknown Bloom slice format byte {b[0]}")
         if sparse:
-            idx = np.concatenate(sparse)
-            boolacc = np.zeros((hi - lo) * 8, dtype=bool)
-            boolacc[idx] = True
-            np.bitwise_or(acc, np.packbits(boolacc, bitorder="little"), out=acc)
+            idx = np.sort(np.concatenate(sparse))
+            if idx.size and int(idx[-1]) >= (hi - lo) * 8:
+                raise ValueError(f"Bloom slice bit position {int(idx[-1])} outside the slice")
+            _or_sorted(acc, idx)
         return acc.tobytes()
 
     @classmethod
     def assemble_slices(cls, params: dict, slices: list[bytes], n_entry: int, t_entry: int) -> "BloomFilter":
         out = cls(**params)
-        out._bits = np.frombuffer(b"".join(slices), dtype=np.uint8).copy()
+        out.bits = np.frombuffer(b"".join(slices), dtype=np.uint8).copy()
         if out._bits.shape[0] != out.m_bits // 8:
             raise ValueError("assembled slice sizes inconsistent")
         out.n_entry = int(n_entry)
@@ -612,17 +656,18 @@ class BloomFilter(Sketch):
 
     def intersect(self, other: "BloomFilter") -> "BloomFilter":
         self._require_compatible(other)
-        self._consolidate()
-        other._consolidate()
         out = type(self)(**self.params())
-        np.bitwise_and(self._bits, other._bits, out=out._bits)
+        out.bits = np.bitwise_and(self.bits, other.bits)
         return out
 
     # -- stats ---------------------------------------------------------
     def pop(self) -> int:
-        """Set-bit count (getPop, BloomFilter.hpp:316-323).  Chunked
-        LUT gather: a whole-array gather materializes a 2×-sized uint16
-        temp and runs ~6× slower at GB scale."""
+        """Set-bit count (getPop, BloomFilter.hpp:316-323): the pending
+        count while no bit is dense, else a chunked LUT gather (a
+        whole-array gather materializes a 2×-sized uint16 temp and
+        runs ~6× slower at GB scale)."""
+        if not self._dense:
+            return int(self._pending_unique().size)
         self._consolidate()
         total = 0
         step = 1 << 24
@@ -658,68 +703,70 @@ class BloomFilter(Sketch):
 
     # -- state ---------------------------------------------------------
     # Partial-sketch transport format: a sparsely-filled partition
-    # serializes sorted set-bit indices (uint32/uint64) instead of the
-    # dense array — at 100TB scale this cuts the blob shuffle volume by
-    # the fill factor.  Dense reconstruction on load keeps the merge
-    # algebra unchanged.  fmt: 0=dense, 1=sparse u32, 2=sparse u64.
+    # serializes ascending set-bit indices (uint32/uint64) instead of
+    # the dense array — this cuts the blob shuffle volume by the fill
+    # factor.  fmt: 0=dense, 1=sparse u32, 2=sparse u64.
     def state_bytes(self) -> bytes:
-        self._consolidate()
         hdr = np.array([self.n_entry, self.t_entry], dtype=np.uint64).tobytes()
         idx_bytes = 4 if self.m_bits < (1 << 32) else 8
+        sparse_fmt, idx_dtype = (b"\x01", np.uint32) if idx_bytes == 4 else (b"\x02", np.uint64)
         # measured locally: blob transport (Arrow/persist) costs more
-        # than sparse reconstruction's scatter, so prefer sparse
-        # whenever it shrinks the blob meaningfully.  n_entry*h bounds
-        # popcount from above — a proxy that avoids a popcount pass on
-        # every partial serialization.
-        pop_bound = min(self.n_entry * self.hash_num, self.m_bits)
-        if pop_bound * idx_bytes < (self.m_bits // 8) * 0.6:
-            # extract set-bit positions touching only nonzero bytes:
-            # cost ∝ popcount, not m
-            nzb = np.nonzero(self._bits)[0]
-            sub = np.unpackbits(self._bits[nzb][:, None], axis=1, bitorder="little")
-            rows_, cols_ = np.nonzero(sub)
-            set_idx = nzb[rows_] * 8 + cols_
-            if idx_bytes == 4:
-                return hdr + b"\x01" + set_idx.astype(np.uint32).tobytes()
-            return hdr + b"\x02" + set_idx.astype(np.uint64).tobytes()
+        # than sparse reconstruction, so prefer sparse whenever it
+        # shrinks the blob meaningfully
+        if not self._dense:
+            # every bit still pending: the exact set-bit count decides
+            # and the body is the sorted positions themselves
+            pos = self._pending_unique()
+            if pos.size * idx_bytes < (self.m_bits // 8) * 0.6:
+                return hdr + sparse_fmt + pos.astype(idx_dtype, copy=False).tobytes()
+        else:
+            # n_entry*h bounds popcount from above — a proxy that avoids
+            # a popcount pass over the dense array
+            pop_bound = min(self.n_entry * self.hash_num, self.m_bits)
+            if pop_bound * idx_bytes < (self.m_bits // 8) * 0.6:
+                self._consolidate()
+                return hdr + sparse_fmt + _set_positions(self._bits).astype(idx_dtype).tobytes()
+        self._consolidate()
         return hdr + b"\x00" + self._bits.tobytes()
 
     def load_state(self, payload: bytes) -> None:
+        self._clear()
+        self.n_entry = self.t_entry = 0
+        self._absorb(payload)
+
+    def _absorb(self, payload: bytes) -> None:
+        """OR one ``state_bytes`` payload into this filter: a dense body
+        into the packed array, a sparse one into the pending buffer."""
         hdr = np.frombuffer(payload[:16], dtype=np.uint64)
-        self.n_entry, self.t_entry = int(hdr[0]), int(hdr[1])
+        self.n_entry += int(hdr[0])
+        self.t_entry += int(hdr[1])
         fmt = payload[16]
         body = payload[17:]
         if fmt == 0:
-            bits = np.frombuffer(body, dtype=np.uint8)
-            if bits.shape[0] != self.m_bits // 8:
+            dense = np.frombuffer(body, dtype=np.uint8)
+            if dense.shape[0] != self.m_bits // 8:
                 raise ValueError("payload size mismatch")
-            self._bits = bits.copy()
+            np.bitwise_or(self._bits, dense, out=self._bits)
+            self._dense = True
+        elif fmt in (1, 2):
+            idx = np.frombuffer(body, dtype=np.uint32 if fmt == 1 else np.uint64)
+            if idx.size and int(idx.max()) >= self.m_bits:
+                raise ValueError(f"Bloom payload bit position {int(idx.max())} >= m_bits {self.m_bits}")
+            self._set_bits(idx)
         else:
-            idx = np.frombuffer(body, dtype=np.uint32 if fmt == 1 else np.uint64).astype(np.int64)
-            self._bits = np.zeros(self.m_bits // 8, dtype=np.uint8)
-            if self.m_bits <= self.DENSE_ACC_MAX_BITS:
-                acc = np.zeros(self.m_bits, dtype=bool)
-                acc[idx] = True
-                self._bits = np.packbits(acc, bitorder="little")
-            else:
-                np.bitwise_or.at(
-                    self._bits, idx >> 3, (np.uint8(1) << (idx & 7).astype(np.uint8)).astype(np.uint8)
-                )
-        self._acc = None
+            raise ValueError(f"unknown Bloom payload format byte {fmt}")
 
 
 class BlockedBloomFilter(BloomFilter):
     """Register-blocked Bloom filter (Putze, Sanders & Singler, JEA
     2009): the seed-0 hash picks ONE ``block_bits``-bit block (default
     512 = one 64-byte cache line) and all ``hash_num`` bits land
-    inside it, so a build touches one cache line per key instead of
-    ``hash_num`` random lines — measured 7× faster build scatter at
-    m = 2^30 in this engine's numpy kernel (8M keys into one array,
-    far beyond LLC).  End-to-end caveat, measured honestly: at low
-    fill the per-partial slice scan and the rolling-hash kernel
-    dominate and the layouts tie; the scatter advantage governs when
-    keys-per-executor is large relative to m — the actual 10^12-key
-    regime (NOTES_r5 carries both measurements).
+    inside it, so an insert or probe touches one cache line per key
+    instead of ``hash_num`` random lines.  The build no longer gains
+    from it here: inserts queue positions and fold them in one sorted
+    pass, which is layout-blind (4M keys into m = 2^28 on a 4-core
+    x86 host: 0.76 s flat, 0.83 s blocked).  The 7× scatter gain in
+    NOTES_r5 was measured against the earlier random scatter kernel.
 
     The price is a known FPR penalty (block loads are Poisson, heavy
     blocks false-positive more): ``params.blocked_fpr`` is the

@@ -1,18 +1,21 @@
 """Property-based tests (hypothesis) for the core laws:
 rolling-hash == from-scratch fold on arbitrary unicode, Bloom merge
-associativity/commutativity on arbitrary partitionings, sizing-formula
+associativity/commutativity on arbitrary partitionings, Bloom state
+under any interleaving of inserts, merges, round-trips and slicing,
+sizing-formula
 invariants over the (n, fpr) grid (SURVEY §5 item 7), Misra-Gries
 merge laws on arbitrary stream cuts and merge orders."""
 
 import collections
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from btl_bloomfilter_spark import params as P
 from btl_bloomfilter_spark.functions import hashing as H
 from btl_bloomfilter_spark.operators.base import Sketch
-from btl_bloomfilter_spark.operators.bloom import BloomFilter
+from btl_bloomfilter_spark.operators.bloom import BlockedBloomFilter, BloomFilter
 from btl_bloomfilter_spark.operators.topk import MGSummary
 
 
@@ -67,6 +70,63 @@ def test_bloom_merge_partition_invariance(items, cuts, perm_seed):
         acc.merge(partials[i])
     np.testing.assert_array_equal(acc.bits, serial.bits)
     assert acc.n_entry == serial.n_entry
+
+
+_BLOOM_BATCH = st.lists(st.text(alphabet="abcdefgh", max_size=24), max_size=30)
+_BLOOM_OP = st.one_of(
+    st.tuples(st.sampled_from(["update", "update_arrow", "merge", "bulk_merge"]), _BLOOM_BATCH),
+    st.tuples(st.sampled_from(["roundtrip", "dense_read"]), st.none()),
+    st.tuples(st.just("slices"), st.integers(min_value=1, max_value=9)),
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    m_log=st.integers(min_value=8, max_value=14),
+    k=st.sampled_from([0, 4]),
+    blocked=st.booleans(),
+    ops=st.lists(_BLOOM_OP, max_size=12),
+)
+def test_bloom_state_any_interleaving_equals_dense_reference(m_log, k, blocked, ops):
+    """Pending positions, folds and both blob formats are invisible:
+    any interleaving of update/update_arrow, merge, bulk merge,
+    serialize round-trips, dense reads and state_slices →
+    merge_slice_blobs → assemble_slices equals a bool-scatter
+    reference bit for bit and in n_entry/t_entry, and the pending
+    buffer never holds more than its cap after an update."""
+    mk = (lambda: BlockedBloomFilter(1 << m_log, 3, k, block_bits=256)) if blocked else (
+        lambda: BloomFilter(1 << m_log, 3, k)
+    )
+    bf, ref = mk(), np.zeros(1 << m_log, dtype=bool)
+    n_entry = t_entry = 0
+    for op, arg in ops:
+        if op in ("update", "update_arrow", "merge", "bulk_merge"):
+            hashes, _ = bf._hash_batch(arg)
+            ref[bf._positions_matrix(hashes).ravel()] = True
+            n_entry, t_entry = n_entry + hashes.shape[0], t_entry + len(arg)
+        if op == "update":
+            bf.update(arg)
+        elif op == "update_arrow":
+            bf.update_arrow(pa.array(arg, pa.string()))
+        elif op in ("merge", "bulk_merge"):
+            other = mk()
+            other.update(arg)
+            if op == "merge":
+                bf.merge(other)
+            else:
+                bf = Sketch.merge_blobs([bf.serialize(), other.serialize()])
+        elif op == "roundtrip":
+            bf = Sketch.deserialize(bf.serialize())
+        elif op == "dense_read":
+            bf.bits
+        else:
+            slices = bf.state_slices(arg)
+            merged = [bf.merge_slice_blobs(bf.params(), s, arg, [b]) for s, b in enumerate(slices)]
+            bf = type(bf).assemble_slices(bf.params(), merged, bf.n_entry, bf.t_entry)
+        assert bf._pend_n <= bf._pend_cap
+    assert bf.pop() == int(ref.sum())
+    np.testing.assert_array_equal(bf.bits, np.packbits(ref, bitorder="little"))
+    assert (bf.n_entry, bf.t_entry) == (n_entry, t_entry)
 
 
 @settings(max_examples=100, deadline=None)
