@@ -41,6 +41,8 @@ __all__ = [
     "hash_ngrams",
     "hash_strings",
     "hash_tokens",
+    "utf8_buffers",
+    "window_hashes",
     "tokenize_buffers",
     "hash_spans_from_buffers",
     "hash_token_ngrams_from_hashes",
@@ -411,6 +413,66 @@ def arrow_utf8_buffers(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
     if arr.null_count:
         null_mask = ~np.asarray(arr.is_valid())
     return data, offsets, null_mask
+
+
+def _strings_of(values) -> list:
+    """The library-wide string encoding of a batch: ``None`` → ``""``,
+    non-strings → ``str(v)``."""
+    out = []
+    for v in (values.tolist() if hasattr(values, "tolist") else values):
+        out.append(v if isinstance(v, str) else ("" if v is None else str(v)))
+    return out
+
+
+def utf8_buffers(values) -> tuple[np.ndarray, np.ndarray]:
+    """(buf, offsets) of a string batch, nulls as ``""`` — the one input
+    of every hashing sketch's string methods.
+
+    Arrow ``string``/``large_string`` arrays (chunked or not) are read
+    zero-copy; only a batch that holds nulls is copied once by
+    ``fill_null``, so a null slot's bytes never reach a hash.  Any
+    other sequence goes through :func:`_strings_of`."""
+    import pyarrow as pa
+
+    if isinstance(values, (pa.Array, pa.ChunkedArray)) and (
+        pa.types.is_string(values.type) or pa.types.is_large_string(values.type)
+    ):
+        if values.null_count:
+            import pyarrow.compute as pc
+
+            values = pc.fill_null(values, "")
+        buf, offsets, _ = arrow_utf8_buffers(values)
+        return buf, offsets
+    return _flatten_utf8(_strings_of(values))
+
+
+def window_hashes(
+    buf: np.ndarray,
+    offsets: np.ndarray,
+    *,
+    k: int,
+    num_hashes: int,
+    spaced_seeds: list[str] | None = None,
+    canonical: bool = False,
+    seeds: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(hashes, row ids) of every element of a (buf, offsets) batch under
+    one hashing mode — spaced seeds (one column per pattern,
+    ``num_hashes`` ignored), canonical k-gram, k-gram (``k > 0``) or
+    whole string (``k == 0``, one element per row)."""
+    if spaced_seeds:
+        if canonical:
+            hashes, rows, _ = hash_ngrams_multi_seed_canonical_from_buffers(
+                buf, offsets, spaced_seeds, seeds=seeds
+            )
+            return hashes, rows
+        return hash_ngrams_multi_seed_from_buffers(buf, offsets, spaced_seeds, 1, seeds=seeds)
+    if canonical:
+        return hash_ngrams_canonical_from_buffers(buf, offsets, k, num_hashes, seeds=seeds)
+    if k > 0:
+        return hash_ngrams_from_buffers(buf, offsets, k, num_hashes, seeds=seeds)
+    hashes = hash_strings_from_buffers(buf, offsets, num_hashes, seeds=seeds)
+    return hashes, np.arange(offsets.size - 1, dtype=np.int64)
 
 
 def hash_strings(strings, num_hashes: int = 1, *, seeds: np.ndarray | None = None) -> np.ndarray:

@@ -4,11 +4,13 @@ The reference's query path (`testBloom_rolling.cpp:19-33`) streams a
 corpus against a loaded filter.  Spark-native equivalent: broadcast
 the serialized sketch once, then probe with one Arrow UDF — a pure map
 (no shuffle) that Catalyst plans as `Project(ArrowEvalPython)` over a
-pruned scan.  String batches go to the sketch's zero-copy ``*_arrow``
-method where it has one; every other batch goes to its pandas method
-through PySpark's own Arrow→pandas conversion (the column rule of
-``plans.agg``).  Using `df.filter(bloom_contains(...))` is a broadcast
-semi-join against the Bloom filter, the classic BF use.
+pruned scan.  A string batch reaches the sketch as the Arrow array
+itself when the sketch has a ``*_arrow`` name for the method (an alias:
+the method reads Arrow string buffers zero-copy); every other batch
+goes to its pandas method through PySpark's own Arrow→pandas
+conversion (the column rule of ``plans.agg``).  Using
+`df.filter(bloom_contains(...))` is a broadcast semi-join against the
+Bloom filter, the classic BF use.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ from ..plans.agg import _pandas_conversion
 _WORKER_CACHE: dict[str, Sketch] = {}
 _WORKER_CACHE_MAX = 8
 
-#: pandas probe method → its zero-copy twin over Arrow string arrays
+#: probe method → its name on sketches that take Arrow string arrays
 _ARROW_METHODS = {"seen_fraction": "seen_fraction_arrow", "contains_batch": "contains_arrow"}
 
 

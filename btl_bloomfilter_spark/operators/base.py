@@ -37,7 +37,8 @@ class Sketch(ABC):
     # -- accumulation ------------------------------------------------
     @abstractmethod
     def update(self, values) -> None:
-        """Absorb a batch of values (pd.Series / np.ndarray / list)."""
+        """Absorb a batch of values (pd.Series / np.ndarray / list; the
+        hashing sketches also take Arrow string arrays, read zero-copy)."""
 
     @abstractmethod
     def merge(self, other: "Sketch") -> "Sketch":

@@ -56,13 +56,6 @@ def _set_positions(packed: np.ndarray) -> np.ndarray:
     return nzb[rows_] * 8 + cols_
 
 
-def _strings_of(values) -> list:
-    out = []
-    for v in (values.tolist() if hasattr(values, "tolist") else values):
-        out.append(v if isinstance(v, str) else ("" if v is None else str(v)))
-    return out
-
-
 class BloomFilter(Sketch):
     def __init__(
         self,
@@ -143,35 +136,22 @@ class BloomFilter(Sketch):
     CHUNK = 1 << 19
 
     # -- hashing ------------------------------------------------------
-    def _hash_batch(self, values) -> tuple[np.ndarray, np.ndarray]:
-        """(hashes (W,h) uint64, row_ids (W,)) for a batch of strings."""
-        strings = _strings_of(values)
-        if self.spaced_seeds:
-            if self.canonical:
-                h, rows, _ = H.hash_ngrams_multi_seed_canonical(strings, self.spaced_seeds, seeds=self._seeds)
-                return h, rows
-            return H.hash_ngrams_multi_seed(strings, self.spaced_seeds, 1, seeds=self._seeds)
-        if self.canonical:
-            return H.hash_ngrams_canonical(strings, self.k, self.hash_num, seeds=self._seeds)
-        if self.k > 0:
-            return H.hash_ngrams(strings, self.k, self.hash_num, seeds=self._seeds)
-        hashes = H.hash_strings(strings, self.hash_num, seeds=self._seeds)
-        return hashes, np.arange(len(strings), dtype=np.int64)
-
-    def _base_hashes(self, values) -> tuple[np.ndarray, np.ndarray]:
-        """Base (un-fanned) hashes: ((W,) uint64, row_ids).  The h-way
-        NTE64 fan-out happens chunk-wise in the consumer so a text
-        batch that explodes into millions of windows never
-        materializes a (W, h) matrix at once."""
-        strings = _strings_of(values)
-        if self.canonical:
-            hb, rows = H.hash_ngrams_canonical(strings, self.k, 1, seeds=self._seeds)
-            return hb[:, 0], rows
-        if self.k > 0:
-            hb, rows = H.hash_ngrams(strings, self.k, 1, seeds=self._seeds)
-            return hb[:, 0], rows
-        hb = H.hash_strings(strings, 1, seeds=self._seeds)
-        return hb[:, 0], np.arange(len(strings), dtype=np.int64)
+    def _windows(self, values) -> tuple[np.ndarray, np.ndarray]:
+        """(hashes, row_ids) of a string batch (any sequence or Arrow
+        string array): the (W, h) matrix in spaced-seed mode, else (W, 1)
+        base hashes.  The h-way NTE64 fan-out of base hashes happens
+        chunk-wise in the consumer, so a text batch that explodes into
+        millions of windows never materializes a (W, h) matrix at once."""
+        buf, offsets = H.utf8_buffers(values)
+        return H.window_hashes(
+            buf,
+            offsets,
+            k=self.k,
+            num_hashes=1,
+            spaced_seeds=self.spaced_seeds,
+            canonical=self.canonical,
+            seeds=self._seeds,
+        )
 
     @property
     def _fanout_k(self) -> int:
@@ -272,16 +252,9 @@ class BloomFilter(Sketch):
         self._bits = value
         self._dense = True
 
-    def update(self, values) -> None:
-        if self.spaced_seeds:
-            hashes, _ = self._hash_batch(values)
-            for s in range(0, hashes.shape[0], self.CHUNK):
-                idx = self._positions_matrix(hashes[s : s + self.CHUNK].copy())
-                self._set_bits(idx.ravel())
-            self.n_entry += int(hashes.shape[0])
-            self.t_entry += int(len(values))
-            return
-        base, rows = self._base_hashes(values)
+    def _insert_base(self, base: np.ndarray) -> None:
+        """Fan base hashes out to h bit positions chunk by chunk and
+        queue them."""
         buf = None
         for s in range(0, base.shape[0], self.CHUNK):
             chunk = base[s : s + self.CHUNK]
@@ -289,56 +262,22 @@ class BloomFilter(Sketch):
                 buf = np.empty((chunk.shape[0], self.hash_num), dtype=np.uint64)
             hashes = self._positions_matrix(H.nte64(chunk, self.hash_num, self._fanout_k, out=buf))
             self._set_bits(hashes.ravel())
-        self.n_entry += int(base.shape[0])
-        self.t_entry += int(len(values))
 
-    def update_arrow(self, arr) -> None:
-        """Zero-copy update from an Arrow string array: the Arrow UTF-8
-        buffer/offset layout feeds the rolling-hash kernel directly —
-        no pandas objects, no per-row re-encode (the hot path for
-        mapInArrow builds)."""
-        buf, offsets, null_mask = H.arrow_utf8_buffers(arr)
+    def update(self, values) -> None:
+        """Insert every element of a string batch: a list, a pandas
+        Series or an Arrow string array (read zero-copy, the mapInArrow
+        build path); nulls are ``""``."""
+        hashes, _ = self._windows(values)
         if self.spaced_seeds:
-            if self.canonical:
-                hashes, rows, _ = H.hash_ngrams_multi_seed_canonical_from_buffers(
-                    buf, offsets, self.spaced_seeds, seeds=self._seeds
-                )
-            else:
-                hashes, rows = H.hash_ngrams_multi_seed_from_buffers(
-                    buf, offsets, self.spaced_seeds, 1, seeds=self._seeds
-                )
-            if null_mask is not None and hashes.shape[0]:
-                hashes = hashes[~null_mask[rows]]
             for s in range(0, hashes.shape[0], self.CHUNK):
                 idx = self._positions_matrix(hashes[s : s + self.CHUNK].copy())
                 self._set_bits(idx.ravel())
-            self.n_entry += int(hashes.shape[0])
-            self.t_entry += int(len(arr))
-            return
-        if self.k > 0:
-            if self.canonical:
-                hb, rows = H.hash_ngrams_canonical_from_buffers(buf, offsets, self.k, 1, seeds=self._seeds)
-            else:
-                hb, rows = H.hash_ngrams_from_buffers(buf, offsets, self.k, 1, seeds=self._seeds)
-            base = hb[:, 0]
-            if null_mask is not None and base.size:
-                keep = ~null_mask[rows]
-                base = base[keep]
         else:
-            base = H.hash_strings_from_buffers(buf, offsets, 1, seeds=self._seeds)[:, 0]
-            if null_mask is not None and base.size:
-                # match the pandas path exactly: null hashes as ""
-                base = base.copy()
-                base[null_mask] = H.hash_strings([""], 1, seeds=self._seeds)[0, 0]
-        bb = None
-        for s in range(0, base.shape[0], self.CHUNK):
-            chunk = base[s : s + self.CHUNK]
-            if bb is None or bb.shape[0] != chunk.shape[0]:
-                bb = np.empty((chunk.shape[0], self.hash_num), dtype=np.uint64)
-            hashes = self._positions_matrix(H.nte64(chunk, self.hash_num, self._fanout_k, out=bb))
-            self._set_bits(hashes.ravel())
-        self.n_entry += int(base.shape[0])
-        self.t_entry += int(len(arr))
+            self._insert_base(hashes[:, 0])
+        self.n_entry += int(hashes.shape[0])
+        self.t_entry += int(len(values))
+
+    update_arrow = update
 
     def update_and_check(self, values) -> np.ndarray:
         """insertAndCheck (BloomFilter.hpp:200-232): insert every
@@ -355,7 +294,8 @@ class BloomFilter(Sketch):
                 "ntHash, BloomFilter.hpp:200-232)"
             )
         self._consolidate()
-        base, rows = self._base_hashes(values)
+        hashes, rows = self._windows(values)
+        base = hashes[:, 0]
         n = len(values)
         if base.size == 0:
             return np.zeros(n, dtype=bool)
@@ -364,14 +304,7 @@ class BloomFilter(Sketch):
         for s in range(0, uniq.shape[0], self.CHUNK):
             hh = H.nte64(uniq[s : s + self.CHUNK], self.hash_num, self._fanout_k)
             pre[s : s + self.CHUNK] = self._probe_bits(hh)
-        # insert everything
-        buf = None
-        for s in range(0, uniq.shape[0], self.CHUNK):
-            chunk = uniq[s : s + self.CHUNK]
-            if buf is None or buf.shape[0] != chunk.shape[0]:
-                buf = np.empty((chunk.shape[0], self.hash_num), dtype=np.uint64)
-            hh = self._positions_matrix(H.nte64(chunk, self.hash_num, self._fanout_k, out=buf))
-            self._set_bits(hh.ravel())
+        self._insert_base(uniq)  # insert everything
         self.n_entry += int(base.shape[0])
         self.t_entry += n
         is_first = np.zeros(base.shape[0], dtype=bool)
@@ -454,16 +387,13 @@ class BloomFilter(Sketch):
     def _probe_all(self, values) -> tuple[np.ndarray, np.ndarray]:
         """Chunked probe: (hit (W,) bool, row_ids)."""
         self._consolidate()
-        if self.spaced_seeds:
-            hashes, rows = self._hash_batch(values)
-            hit = np.empty(hashes.shape[0], dtype=bool)
-            for s in range(0, hashes.shape[0], self.CHUNK):
+        hashes, rows = self._windows(values)
+        hit = np.empty(hashes.shape[0], dtype=bool)
+        for s in range(0, hashes.shape[0], self.CHUNK):
+            if self.spaced_seeds:
                 hit[s : s + self.CHUNK] = self._probe_bits(hashes[s : s + self.CHUNK])
-            return hit, rows
-        base, rows = self._base_hashes(values)
-        hit = np.empty(base.shape[0], dtype=bool)
-        for s in range(0, base.shape[0], self.CHUNK):
-            hit[s : s + self.CHUNK] = self._probe_bits_base(base[s : s + self.CHUNK])
+            else:
+                hit[s : s + self.CHUNK] = self._probe_bits_base(hashes[s : s + self.CHUNK, 0])
         return hit, rows
 
     def contains_batch(self, values) -> np.ndarray:
@@ -488,71 +418,12 @@ class BloomFilter(Sketch):
             frac = np.where(total > 0, hits / total, 0.0)
         return frac
 
+    contains_arrow = contains_batch
+    seen_fraction_arrow = seen_fraction
+
     def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
         self._consolidate()
         return self._probe_bits(hashes)
-
-    # -- zero-copy Arrow probes ----------------------------------------
-    def _probe_all_arrow(self, arr) -> tuple[np.ndarray, np.ndarray, int, np.ndarray | None]:
-        self._consolidate()
-        buf, offsets, null_mask = H.arrow_utf8_buffers(arr)
-        if self.spaced_seeds:
-            if self.canonical:
-                hashes, rows, _ = H.hash_ngrams_multi_seed_canonical_from_buffers(
-                    buf, offsets, self.spaced_seeds, seeds=self._seeds
-                )
-            else:
-                hashes, rows = H.hash_ngrams_multi_seed_from_buffers(
-                    buf, offsets, self.spaced_seeds, 1, seeds=self._seeds
-                )
-            hit = np.empty(hashes.shape[0], dtype=bool)
-            for s in range(0, hashes.shape[0], self.CHUNK):
-                hit[s : s + self.CHUNK] = self._probe_bits(hashes[s : s + self.CHUNK])
-            return hit, rows, len(arr), null_mask
-        if self.k > 0:
-            if self.canonical:
-                hb, rows = H.hash_ngrams_canonical_from_buffers(buf, offsets, self.k, 1, seeds=self._seeds)
-            else:
-                hb, rows = H.hash_ngrams_from_buffers(buf, offsets, self.k, 1, seeds=self._seeds)
-            base = hb[:, 0]
-        else:
-            base = H.hash_strings_from_buffers(buf, offsets, 1, seeds=self._seeds)[:, 0]
-            if null_mask is not None and base.size:
-                base = base.copy()
-                base[null_mask] = H.hash_strings([""], 1, seeds=self._seeds)[0, 0]
-            rows = np.arange(len(arr), dtype=np.int64)
-        hit = np.empty(base.shape[0], dtype=bool)
-        for s in range(0, base.shape[0], self.CHUNK):
-            hit[s : s + self.CHUNK] = self._probe_bits_base(base[s : s + self.CHUNK])
-        return hit, rows, len(arr), null_mask
-
-    def seen_fraction_arrow(self, arr) -> np.ndarray:
-        """seen_fraction over an Arrow string array (no pandas strings)."""
-        hit, rows, n, null_mask = self._probe_all_arrow(arr)
-        if self.k == 0:
-            out = np.zeros(n, dtype=np.float64)
-            out[rows] = hit.astype(np.float64)
-            return out
-        if null_mask is not None and hit.size:
-            keep = ~null_mask[rows]
-            hit, rows = hit[keep], rows[keep]
-        total = np.bincount(rows, minlength=n).astype(np.float64)
-        hits = np.bincount(rows, weights=hit.astype(np.float64), minlength=n)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            return np.where(total > 0, hits / total, 0.0)
-
-    def contains_arrow(self, arr) -> np.ndarray:
-        hit, rows, n, null_mask = self._probe_all_arrow(arr)
-        if self.k == 0:
-            out = np.zeros(n, dtype=bool)
-            out[rows] = hit
-            return out
-        if null_mask is not None and hit.size:
-            keep = ~null_mask[rows]
-            hit, rows = hit[keep], rows[keep]
-        total = np.bincount(rows, minlength=n)
-        hits = np.bincount(rows, weights=hit.astype(np.float64), minlength=n)
-        return (total > 0) & (hits == total)
 
     # -- merge algebra -------------------------------------------------
     def merge(self, other: "BloomFilter") -> "BloomFilter":

@@ -31,7 +31,6 @@ import numpy as np
 from ..functions import hashing as H
 from .. import params as P
 from .base import Sketch
-from .bloom import _strings_of
 
 
 class CountingBloomFilter(Sketch):
@@ -112,18 +111,19 @@ class CountingBloomFilter(Sketch):
         return out
 
     # -- hashing -----------------------------------------------------
-    def _hash_batch(self, values):
-        strings = _strings_of(values)
-        if self.spaced_seeds:
-            if self.canonical:
-                h, rows, _ = H.hash_ngrams_multi_seed_canonical(strings, self.spaced_seeds, seeds=self._seeds)
-                return h, rows
-            return H.hash_ngrams_multi_seed(strings, self.spaced_seeds, 1, seeds=self._seeds)
-        if self.canonical:
-            return H.hash_ngrams_canonical(strings, self.k, self.hash_num, seeds=self._seeds)
-        if self.k > 0:
-            return H.hash_ngrams(strings, self.k, self.hash_num, seeds=self._seeds)
-        return H.hash_strings(strings, self.hash_num, seeds=self._seeds), np.arange(len(strings), dtype=np.int64)
+    def _windows(self, values) -> tuple[np.ndarray, np.ndarray]:
+        """((W, h) hashes, row_ids) of a string batch (any sequence or
+        Arrow string array; nulls are ``""``)."""
+        buf, offsets = H.utf8_buffers(values)
+        return H.window_hashes(
+            buf,
+            offsets,
+            k=self.k,
+            num_hashes=self.hash_num,
+            spaced_seeds=self.spaced_seeds,
+            canonical=self.canonical,
+            seeds=self._seeds,
+        )
 
     def _slots(self, hashes: np.ndarray) -> np.ndarray:
         return (hashes % np.uint64(self.m_counters)).astype(np.int64)
@@ -131,51 +131,18 @@ class CountingBloomFilter(Sketch):
     # -- updates -----------------------------------------------------
     def update(self, values) -> None:
         """incrementAll over every element of the batch (saturating)."""
-        hashes, _ = self._hash_batch(values)
+        hashes, _ = self._windows(values)
         if hashes.size:
             np.add.at(self.counters, self._slots(hashes).ravel(), np.uint64(1))
         self.n_entry += int(hashes.shape[0])
         self.t_entry += int(len(values))
 
-    def update_arrow(self, arr) -> None:
-        """Zero-copy update from an Arrow string array (see
-        BloomFilter.update_arrow); nulls hash as '' to match the
-        pandas path exactly."""
-        buf, offsets, null_mask = H.arrow_utf8_buffers(arr)
-        if self.k > 0:
-            if self.spaced_seeds and self.canonical:
-                hashes, rows, _ = H.hash_ngrams_multi_seed_canonical_from_buffers(
-                    buf, offsets, self.spaced_seeds, seeds=self._seeds
-                )
-            elif self.spaced_seeds:
-                hashes, rows = H.hash_ngrams_multi_seed_from_buffers(
-                    buf, offsets, self.spaced_seeds, 1, seeds=self._seeds
-                )
-            elif self.canonical:
-                hashes, rows = H.hash_ngrams_canonical_from_buffers(
-                    buf, offsets, self.k, self.hash_num, seeds=self._seeds
-                )
-            else:
-                hashes, rows = H.hash_ngrams_from_buffers(
-                    buf, offsets, self.k, self.hash_num, seeds=self._seeds
-                )
-            if null_mask is not None and hashes.size:
-                keep = ~null_mask[rows]
-                hashes = hashes[keep]
-        else:
-            hashes = H.hash_strings_from_buffers(buf, offsets, self.hash_num, seeds=self._seeds)
-            if null_mask is not None and hashes.size:
-                hashes = hashes.copy()
-                hashes[null_mask] = H.hash_strings([""], self.hash_num, seeds=self._seeds)[0]
-        if hashes.size:
-            np.add.at(self.counters, self._slots(hashes).ravel(), np.uint64(1))
-        self.n_entry += int(hashes.shape[0])
-        self.t_entry += int(len(arr))
+    update_arrow = update
 
     def update_conservative(self, values) -> None:
         """incrementMin (conservative update) — partition-local only;
         sequential per element like the reference's CAS loop."""
-        hashes, _ = self._hash_batch(values)
+        hashes, _ = self._windows(values)
         slots = self._slots(hashes)
         for row in slots:
             cur = self.counters[row]
@@ -193,7 +160,7 @@ class CountingBloomFilter(Sketch):
         including collisions between different values, not just
         identical-value occurrences (an element's own h reads all
         precede its own increments, as in the reference)."""
-        hashes, rows = self._hash_batch(values)
+        hashes, rows = self._windows(values)
         n = len(values)
         if hashes.shape[0] == 0:
             self.t_entry += n
@@ -234,7 +201,7 @@ class CountingBloomFilter(Sketch):
     def estimate_batch(self, values) -> np.ndarray:
         """Per whole-element min-count (k==0) or per-string min over
         all windows' min-counts (k>0: rarest window count)."""
-        hashes, rows = self._hash_batch(values)
+        hashes, rows = self._windows(values)
         n = len(values)
         sat = np.minimum(self.counters, np.uint64(self.counter_max))
         if hashes.shape[0] == 0:
@@ -373,21 +340,14 @@ class CountMinSketch(Sketch):
         return {"width": self.width, "depth": self.depth, "seed_salt": self.seed_salt, "conservative": self.conservative}
 
     def _cols(self, values) -> np.ndarray:
-        hashes = H.hash_strings(_strings_of(values), self.depth, seeds=self._seeds)
+        hashes = H.hash_strings_from_buffers(*H.utf8_buffers(values), self.depth, seeds=self._seeds)
         return (hashes % np.uint64(self.width)).astype(np.int64)  # (n, d)
-
-    def update_arrow(self, arr) -> None:
-        buf, offsets, null_mask = H.arrow_utf8_buffers(arr)
-        hashes = H.hash_strings_from_buffers(buf, offsets, self.depth, seeds=self._seeds)
-        if null_mask is not None and hashes.size:
-            hashes = hashes.copy()
-            hashes[null_mask] = H.hash_strings([""], self.depth, seeds=self._seeds)[0]
-        cols = (hashes % np.uint64(self.width)).astype(np.int64)
-        self._apply_cols(cols)
 
     def update(self, values) -> None:
         cols = self._cols(values)
         self._apply_cols(cols)
+
+    update_arrow = update
 
     def _apply_cols(self, cols: np.ndarray) -> None:
         n = cols.shape[0]

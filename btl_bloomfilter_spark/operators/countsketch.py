@@ -50,7 +50,6 @@ import numpy as np
 
 from ..functions import hashing as H
 from .base import Sketch
-from .bloom import _strings_of  # library-wide null/str encoding — one source of truth
 
 __all__ = ["CountSketch"]
 
@@ -89,21 +88,14 @@ class CountSketch(Sketch):
         return cols, signs
 
     def _hash(self, values) -> np.ndarray:
-        return H.hash_strings(_strings_of(values), 2 * self.depth, seeds=self._seeds)
+        return H.hash_strings_from_buffers(*H.utf8_buffers(values), 2 * self.depth, seeds=self._seeds)
 
     # -- accumulation ----------------------------------------------------
     def update(self, values) -> None:
         cols, signs = self._cols_signs(self._hash(values))
         self._apply(cols, signs)
 
-    def update_arrow(self, arr) -> None:
-        buf, offsets, null_mask = H.arrow_utf8_buffers(arr)
-        hashes = H.hash_strings_from_buffers(buf, offsets, 2 * self.depth, seeds=self._seeds)
-        if null_mask is not None and hashes.size:
-            hashes = hashes.copy()
-            hashes[null_mask] = H.hash_strings([""], 2 * self.depth, seeds=self._seeds)[0]
-        cols, signs = self._cols_signs(hashes)
-        self._apply(cols, signs)
+    update_arrow = update
 
     def update_weighted(self, values, weights) -> None:
         cols, signs = self._cols_signs(self._hash(values))

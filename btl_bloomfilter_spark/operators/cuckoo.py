@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import hashing as H
 from ..functions.hashing import _splitmix64
 from .base import Sketch
-from .bloom import _strings_of
+from ..functions.hashing import _strings_of
 from .xorfilter import _usalt, hashed_blocked_keys
 
 __all__ = ["CuckooFilter", "build_cuckoo_filter", "cuckoo_contains"]

@@ -31,7 +31,6 @@ import numpy as np
 
 from ..functions import hashing as H
 from .base import Sketch
-from .bloom import _strings_of
 
 
 def _alpha(m: int) -> float:
@@ -119,23 +118,13 @@ class HyperLogLog(Sketch):
             self._densify()
 
     def update(self, values) -> None:
-        strings = _strings_of(values)
-        if not strings:
-            return
-        h = H.hash_strings(strings, 1, seeds=self._seeds)[:, 0]
-        self.update_hashes(h)
-        self.t_entry += len(strings)
+        """Absorb a string batch (any sequence or Arrow string array;
+        nulls are ``""``)."""
+        buf, offsets = H.utf8_buffers(values)
+        self.update_hashes(H.hash_strings_from_buffers(buf, offsets, 1, seeds=self._seeds)[:, 0])
+        self.t_entry += offsets.size - 1
 
-    def update_arrow(self, arr) -> None:
-        """Zero-copy update from an Arrow string array; nulls hash as
-        '' to match the pandas path."""
-        buf, offsets, null_mask = H.arrow_utf8_buffers(arr)
-        h = H.hash_strings_from_buffers(buf, offsets, 1, seeds=self._seeds)[:, 0]
-        if null_mask is not None and h.size:
-            h = h.copy()
-            h[null_mask] = H.hash_strings([""], 1, seeds=self._seeds)[0, 0]
-        self.update_hashes(h)
-        self.t_entry += len(arr)
+    update_arrow = update
 
     def update_hashes(self, h: np.ndarray) -> None:
         if self._regs is None:

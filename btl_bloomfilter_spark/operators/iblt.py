@@ -44,7 +44,7 @@ import numpy as np
 from ..functions import hashing as H
 from ..functions.hashing import _splitmix64
 from .base import Sketch
-from .bloom import _strings_of
+from ..functions.hashing import _strings_of
 
 __all__ = ["IBLT", "iblt_diff"]
 

@@ -55,8 +55,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import hashing as H
+from ..functions.hashing import _strings_of
 from .base import Sketch
-from .bloom import BloomFilter, _strings_of
+from .bloom import BloomFilter
 
 # stolen top bits of the stored ID word (MIBloomFilter.hpp:36-42):
 # MSB = saturation (s_mask), MSB-1 = strand (s_strand); query tallies
@@ -262,16 +263,18 @@ class MIBloomFilter(Sketch):
         return misses <= allowed_misses, idx, got
 
     # -- hashing -----------------------------------------------------
-    def _hash_batch(self, values):
-        strings = _strings_of(values)
-        if self.spaced_seeds:
-            if self.canonical:
-                h, rows, _ = H.hash_ngrams_multi_seed_canonical(strings, self.spaced_seeds, seeds=self._seeds)
-                return h, rows
-            return H.hash_ngrams_multi_seed(strings, self.spaced_seeds, 1, seeds=self._seeds)
-        if self.canonical:
-            return H.hash_ngrams_canonical(strings, self.k, self.hash_num, seeds=self._seeds)
-        return H.hash_ngrams(strings, self.k, self.hash_num, seeds=self._seeds)
+    def _windows(self, values) -> tuple[np.ndarray, np.ndarray]:
+        """((W, h) frame hashes, row_ids) of a string batch."""
+        buf, offsets = H.utf8_buffers(values)
+        return H.window_hashes(
+            buf,
+            offsets,
+            k=self.k,
+            num_hashes=self.hash_num,
+            spaced_seeds=self.spaced_seeds,
+            canonical=self.canonical,
+            seeds=self._seeds,
+        )
 
     # -- query (vectorized MIBFQuerySupport.query) --------------------
     def classify_batch(self, values, *, allowed_misses: int = 0) -> pd.DataFrame:
@@ -281,7 +284,7 @@ class MIBloomFilter(Sketch):
         first sort key ≈ count).  ``allowed_misses`` tolerates frames
         with up to that many unset slots (spaced-seed query mode,
         MIBloomFilter.hpp:478-498); missed slots contribute no IDs."""
-        hashes, rows = self._hash_batch(values)
+        hashes, rows = self._windows(values)
         n = len(values)
         out = {
             "best_id": np.full(n, -1, dtype=np.int64),
@@ -361,7 +364,7 @@ class MIBloomFilter(Sketch):
         by the surrounding chunk, so the batch exit may fire on rows
         the reference would keep scanning.  Counts always reflect
         exactly the scanned prefix, like the reference."""
-        hashes, rows = self._hash_batch(values)
+        hashes, rows = self._windows(values)
         return self._classify_frames(
             hashes,
             rows,
@@ -398,8 +401,8 @@ class MIBloomFilter(Sketch):
         seqs1 = [a for a, _ in pairs]
         seqs2 = [b for _, b in pairs]
         n = len(pairs)
-        h1, r1 = self._hash_batch(seqs1)
-        h2, r2 = self._hash_batch(seqs2)
+        h1, r1 = self._windows(seqs1)
+        h2, r2 = self._windows(seqs2)
         n1 = np.bincount(r1, minlength=n) if r1.size else np.zeros(n, dtype=np.int64)
         n2 = np.bincount(r2, minlength=n) if r2.size else np.zeros(n, dtype=np.int64)
         # interleaved frame position: alternation while both iterators
@@ -578,7 +581,7 @@ class MIBloomFilter(Sketch):
         evaluated) — match_pos is the window start offset (the
         reference's itr.pos()), ids/saturated the processedResults
         (id, sat-bit) pairs per slot, evaluated the window count."""
-        hashes, _ = self._hash_batch([seq])
+        hashes, _ = self._windows([seq])
         evaluated = int(hashes.shape[0])
         h = self.hash_num
         if evaluated == 0:
@@ -668,7 +671,7 @@ class MIBloomFilter(Sketch):
         """Online-insert every k-gram frame of ``text`` (the per-read
         loop downstream tools drive insert() with).  Returns True iff
         every frame placed/found its ID."""
-        hashes, _ = self._hash_batch([text])
+        hashes, _ = self._windows([text])
         ok = True
         for w in range(hashes.shape[0]):
             ok &= self.insert_online(hashes[w], value, max_count)
@@ -1137,7 +1140,7 @@ def _frames_fn(
         probe = Sketch.deserialize(blob.value)
         for pdf in batches:
             if strand_dir is None:
-                hashes, rows = probe._hash_batch(pdf[text_col])
+                hashes, rows = probe._windows(pdf[text_col])
                 strands = None
             elif probe.spaced_seeds:
                 strings = _strings_of(pdf[text_col])

@@ -45,7 +45,6 @@ import numpy as np
 
 from ..functions import hashing as H
 from .base import Sketch
-from .bloom import _strings_of
 
 _FULL_RANGE = 1 << 64
 
@@ -90,22 +89,13 @@ class ThetaSketch(Sketch):
         self._absorb(np.union1d(self._vals, h))
 
     def update(self, values) -> None:
-        strings = _strings_of(values)
-        if not strings:
-            return
-        self.update_hashes(H.hash_strings(strings, 1, seeds=self._seeds)[:, 0])
-        self.t_entry += len(strings)
+        """Absorb a string batch (any sequence or Arrow string array;
+        nulls are ``""``)."""
+        buf, offsets = H.utf8_buffers(values)
+        self.update_hashes(H.hash_strings_from_buffers(buf, offsets, 1, seeds=self._seeds)[:, 0])
+        self.t_entry += offsets.size - 1
 
-    def update_arrow(self, arr) -> None:
-        """Zero-copy update from an Arrow string array; nulls hash as
-        '' to match the pandas path."""
-        buf, offsets, null_mask = H.arrow_utf8_buffers(arr)
-        h = H.hash_strings_from_buffers(buf, offsets, 1, seeds=self._seeds)[:, 0]
-        if null_mask is not None and h.size:
-            h = h.copy()
-            h[null_mask] = H.hash_strings([""], 1, seeds=self._seeds)[0, 0]
-        self.update_hashes(h)
-        self.t_entry += len(arr)
+    update_arrow = update
 
     def merge(self, other: "ThetaSketch") -> "ThetaSketch":
         self._require_compatible(other)

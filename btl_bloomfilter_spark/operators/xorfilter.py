@@ -62,7 +62,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import hashing as H
 from ..functions.hashing import _splitmix64
 from .base import Sketch
-from .bloom import _strings_of
+from ..functions.hashing import _strings_of
 
 __all__ = ["XorFilter", "build_xor_filter", "xor_contains"]
 

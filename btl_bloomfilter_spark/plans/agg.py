@@ -12,7 +12,8 @@ commutative merge combines them, so partition order never matters
 R = max(16, min(256, 2·defaultParallelism)).  The coalesce is narrow:
 it does nothing for inputs of ≤ R partitions and otherwise caps the
 kernel at R tasks without a shuffle.  The kernel feeds a string column
-to ``update_arrow`` (zero-copy UTF-8 buffers) and every other column to
+to a sketch with ``update_arrow`` as the Arrow array (the hashing
+sketches read its UTF-8 buffers zero-copy) and every other column to
 ``update()`` through PySpark's own Arrow→pandas conversion, then emits
 ``state_slices(R)`` rows; a sketch with no byte-range layout emits one
 whole-blob row.  Sliced sketches merge by a groupBy(slice)
@@ -54,6 +55,13 @@ def _n_slices(spark: SparkSession) -> int:
 
 def _uses_arrow(proto: Sketch, sdf: DataFrame, col: str) -> bool:
     return hasattr(proto, "update_arrow") and dict(sdf.dtypes)[col] == "string"
+
+
+def _key_schema(df: DataFrame, keys: Sequence[str]) -> str:
+    """DDL of the key columns with their types in ``df`` (defaulting
+    every key to string silently corrupts numeric keys)."""
+    type_of = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    return ", ".join(f"{k} {type_of[k]}" for k in keys)
 
 
 def _pandas_conversion(timezone: str):
@@ -298,8 +306,8 @@ def _grouped_kernel(
 ):
     """mapInArrow body: one partial sketch per (partition, key).  Only
     the (short) key columns are materialized to python; the value
-    column follows the build kernel's rule — zero-copy ``update_arrow``
-    slices for strings, PySpark's pandas conversion otherwise."""
+    column follows the build kernel's rule — Arrow string slices to a
+    sketch with ``update_arrow``, PySpark's pandas conversion otherwise."""
 
     def fn(batches):
         import numpy as np
@@ -378,11 +386,7 @@ def sketch_by_key(
     the final merge (north_rule skew mitigation).
     """
     keys = list(keys)
-    if key_schema is None:
-        # infer DDL types from the input schema (defaulting every key
-        # to string silently corrupts numeric keys)
-        type_of = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        key_schema = ", ".join(f"{k} {type_of[k]}" for k in keys)
+    key_schema = key_schema or _key_schema(df, keys)
     partial_schema = f"{key_schema}, blob binary"
     out_schema = f"{key_schema}, {out_col} {out_type}"
 

@@ -33,7 +33,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from ..operators.base import Sketch
-from ..plans.agg import merged_partials
+from ..plans.agg import _key_schema, merged_partials
 
 _STATE_MAGIC_V1 = b"BFSTRM01"  # magic + int64 last batch_id + blob
 _STATE_MAGIC = b"BFSTRM02"  # magic + int64 batch_id + u32 len + lineage + blob
@@ -53,6 +53,38 @@ def _read_state(path: Path) -> tuple[int, str, Sketch | None]:
         (last_id,) = struct.unpack("<q", raw[8:16])
         return last_id, "", Sketch.deserialize(raw[16:])
     return -1, "", Sketch.deserialize(raw)
+
+
+def _read_state_for(path: Path, lineage: str) -> tuple[int, Sketch | None]:
+    """(last_merged_batch_id, sketch) of a state file this query may
+    use.  Batch ids are only meaningful WITHIN one checkpoint lineage
+    (a fresh checkpoint restarts them at 0 and regroups source files),
+    so a sketch stored under any other lineage — the empty one of a
+    legacy layout or of ``merge_batch_into(lineage="")`` included —
+    raises instead of silently dropping or double-counting batches."""
+    last_id, stored, sketch = _read_state(path)
+    if sketch is not None and stored != lineage:
+        raise ValueError(
+            f"state file {path} was built under checkpoint lineage "
+            f"{stored!r} but this query runs under {lineage!r}; micro-batch "
+            "ids are not comparable across checkpoint lineages — use a fresh "
+            "state file per checkpoint (or the same checkpoint dir to resume)"
+        )
+    return last_id, sketch
+
+
+def _start_foreach_batch(stream_df: DataFrame, checkpoint_dir, on_batch, trigger_available_now: bool):
+    """Start ``on_batch`` as the query's foreachBatch sink under
+    ``checkpoint_dir``; with ``trigger_available_now`` the query drains
+    what is available and stops."""
+    writer = (
+        stream_df.writeStream.outputMode("append")
+        .option("checkpointLocation", str(checkpoint_dir))
+        .foreachBatch(on_batch)
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def _write_state(path: Path, batch_id: int, lineage: str, sketch: Sketch) -> None:
@@ -81,20 +113,11 @@ def merge_batch_into(
     With ``batch_id`` (foreachBatch's micro-batch id) the merge is an
     idempotent replay guard: a batch whose id is <= the persisted
     last-merged id is skipped, so at-least-once redelivery never
-    double-counts.  Batch ids are only meaningful WITHIN one
-    checkpoint lineage (a fresh checkpoint restarts them at 0 and
-    regroups source files), so ``lineage`` — the checkpoint identity —
-    is persisted with the state and a mismatch raises instead of
-    silently dropping or double-counting batches."""
+    double-counts.  ``lineage`` — the checkpoint identity — is persisted
+    with the state; a state file of another lineage raises
+    (:func:`_read_state_for`)."""
     running_path = Path(running_path)
-    last_id, last_lineage, running = _read_state(running_path)
-    if running is not None and lineage != last_lineage:
-        raise ValueError(
-            f"state file {running_path} was built under checkpoint lineage "
-            f"{last_lineage!r} but this query runs under {lineage!r}; micro-batch "
-            "ids are not comparable across checkpoint lineages — use a fresh "
-            "state file per checkpoint (or the same checkpoint dir to resume)"
-        )
+    last_id, running = _read_state_for(running_path, lineage)
     if batch_id is not None and batch_id <= last_id:
         return running if running is not None else make_sketch()
     batch_sketch = merged_partials(batch_df, col, make_sketch)
@@ -128,14 +151,7 @@ def stream_build_sketch(
             state_path, batch_df, col, make_sketch, batch_id=batch_id, lineage=str(checkpoint_dir)
         )
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", str(checkpoint_dir))
-        .foreachBatch(on_batch)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, checkpoint_dir, on_batch, trigger_available_now)
 
 
 def load_running(state_path: str | Path) -> Sketch:
@@ -168,11 +184,7 @@ def stream_sketch_by_key(
     """
     import pandas as pd
 
-    if key_schema is None:
-        # infer DDL types from the stream schema (same fix as
-        # plans.agg.sketch_by_key: a string default corrupts numeric keys)
-        type_of = {f.name: f.dataType.simpleString() for f in stream_df.schema.fields}
-        key_schema = ", ".join(f"{k} {type_of[k]}" for k in keys)
+    key_schema = key_schema or _key_schema(stream_df, keys)
     out_schema = f"{key_schema}, {out_col} double"
     state_schema = "blob binary"
 
@@ -234,16 +246,11 @@ def stream_insert_online_mibf(
         _write_state(state_path, -1, lineage, initial)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last_id, last_lineage, mibf = _read_state(state_path)
+        last_id, mibf = _read_state_for(state_path, lineage)
         if mibf is None:
             raise FileNotFoundError(
                 f"{state_path}: seed the online-insert state with initial= "
                 f"(a miBF whose bit vector covers the stream's elements)"
-            )
-        if last_lineage != lineage:
-            raise ValueError(
-                f"state file {state_path} was built under checkpoint lineage "
-                f"{last_lineage!r} but this query runs under {lineage!r}"
             )
         if batch_id <= last_id:
             return
@@ -255,14 +262,7 @@ def stream_insert_online_mibf(
                 mibf.insert_seq_online(str(r[1]), int(r[0]), max_count)
         _write_state(state_path, batch_id, lineage, mibf)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", str(checkpoint_dir))
-        .foreachBatch(on_batch)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, checkpoint_dir, on_batch, trigger_available_now)
 
 
 def stream_keyed_online_mibf(
@@ -315,9 +315,7 @@ def stream_keyed_online_mibf(
     import numpy as np
     import pandas as pd
 
-    if key_schema is None:
-        type_of = {f.name: f.dataType.simpleString() for f in stream_df.schema.fields}
-        key_schema = ", ".join(f"{k} {type_of[k]}" for k in keys)
+    key_schema = key_schema or _key_schema(stream_df, keys)
     out_schema = f"{key_schema}, n_inserted long, occupied_frac double, saturated_frac double"
     if emit_blob:
         out_schema += ", blob binary"
@@ -398,9 +396,7 @@ def stream_windowed_sketch_by_key(
 
     from pyspark.sql import functions as F
 
-    type_of = {f.name: f.dataType.simpleString() for f in stream_df.schema.fields}
-    if key_schema is None:
-        key_schema = ", ".join(f"{k} {type_of[k]}" for k in keys)
+    key_schema = key_schema or _key_schema(stream_df, keys)
     out_schema = (
         f"win_start timestamp, win_end timestamp, {key_schema}, "
         f"{out_col} double, n_rows long, is_final boolean"
@@ -523,12 +519,7 @@ def stream_dedup(
     state_path = Path(state_path)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last_id, lineage, bloom = _read_state(state_path)
-        if lineage and lineage != str(checkpoint_dir):
-            raise ValueError(
-                f"state {state_path} belongs to checkpoint {lineage!r}, "
-                f"not {str(checkpoint_dir)!r}"
-            )
+        last_id, bloom = _read_state_for(state_path, str(checkpoint_dir))
         if batch_id <= last_id:
             return  # replay: output dir + filter state already committed
         spark = batch_df.sparkSession
@@ -562,11 +553,4 @@ def stream_dedup(
         finally:
             kept.unpersist()
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", str(checkpoint_dir))
-        .foreachBatch(on_batch)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, checkpoint_dir, on_batch, trigger_available_now)

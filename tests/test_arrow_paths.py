@@ -1,15 +1,20 @@
-"""update_arrow (zero-copy Arrow buffers) must equal update (pandas
-strings) exactly for every sketch that implements it — including
-nulls, empties, multibyte UTF-8, and sliced/offset arrays."""
+"""Every hashing sketch reads Arrow string arrays zero-copy and any
+other sequence through ``_strings_of``; both must give the same state
+and the same query results exactly — including nulls (also null slots
+whose offsets span bytes), empties, multibyte UTF-8, and sliced/offset
+arrays."""
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
 from btl_bloomfilter_spark.functions import hashing as H
-from btl_bloomfilter_spark.operators.bloom import BloomFilter
+from btl_bloomfilter_spark.operators.base import Sketch
+from btl_bloomfilter_spark.operators.bloom import BlockedBloomFilter, BloomFilter
 from btl_bloomfilter_spark.operators.counting import CountingBloomFilter, CountMinSketch
+from btl_bloomfilter_spark.operators.countsketch import CountSketch
 from btl_bloomfilter_spark.operators.hll import HyperLogLog
+from btl_bloomfilter_spark.operators.theta import ThetaSketch
 
 CORPUS = [
     "hello world",
@@ -29,6 +34,16 @@ def _pairs():
         (lambda: CountingBloomFilter(9999, 4, 0), "counters"),
         (lambda: CountMinSketch(512, 4), "table"),
         (lambda: HyperLogLog(p=10), "registers"),
+        pytest.param(lambda: CountSketch(256, 5), "table", id="countsketch-table"),
+        pytest.param(lambda: ThetaSketch(64), "_vals", id="theta-vals"),
+        pytest.param(lambda: BlockedBloomFilter(1 << 16, 3, 6), "bits", id="blocked-bits"),
+        pytest.param(lambda: BloomFilter(1 << 16, 3, 6, canonical=True), "bits", id="canonical-bits"),
+        pytest.param(
+            lambda: BloomFilter(1 << 16, 2, spaced_seeds=["1101011", "1011101"]), "bits", id="spaced-bits"
+        ),
+        pytest.param(
+            lambda: CountingBloomFilter(9999, 3, 6, canonical=True), "counters", id="canonical-counters"
+        ),
     ]
 
 
@@ -80,3 +95,68 @@ def test_buffers_view_matches_flatten():
     np.testing.assert_array_equal(buf, fbuf)
     np.testing.assert_array_equal(offsets, foffsets)
     assert mask.tolist() == [False, True, False, False]
+
+
+def _null_slots_with_bytes(values) -> pa.Array:
+    """An Arrow string array whose null slots span non-empty bytes (legal
+    Arrow: a null's offsets need not be equal)."""
+    enc = [("NULL BYTES" if v is None else v).encode() for v in values]
+    offsets = np.zeros(len(enc) + 1, np.int32)
+    np.cumsum([len(e) for e in enc], out=offsets[1:])
+    valid = np.array([v is not None for v in values])
+    arr = pa.Array.from_buffers(
+        pa.string(),
+        len(values),
+        [
+            pa.py_buffer(np.packbits(valid, bitorder="little").tobytes()),
+            pa.py_buffer(offsets.tobytes()),
+            pa.py_buffer(b"".join(enc)),
+        ],
+        null_count=int((~valid).sum()),
+    )
+    assert arr.to_pylist() == list(values)
+    return arr
+
+
+_QUERY_METHODS = ("seen_fraction", "contains_batch", "estimate_batch", "update_and_check")
+
+
+@pytest.mark.parametrize(
+    "mk",
+    [
+        lambda: BloomFilter(1 << 16, 3, 0),
+        lambda: BloomFilter(1 << 16, 4, 8),
+        lambda: CountingBloomFilter(9999, 3, 0),
+        lambda: CountingBloomFilter(9999, 4, 6),
+        lambda: CountMinSketch(512, 4),
+        lambda: CountSketch(256, 5),
+    ],
+    ids=["bloom-k0", "bloom-k8", "counting-k0", "counting-k6", "cms", "countsketch"],
+)
+def test_queries_arrow_equal_list(mk):
+    """update and every query method give the list result (nulls as
+    None) for a plain Arrow array, a chunked one (whose nulls once
+    reached the query methods as the string "None") and one whose null
+    slots span bytes: those bytes never reach a hash."""
+    prebuilt = mk()
+    prebuilt.update(CORPUS[::3])
+    inputs = [
+        pa.array(CORPUS, pa.string()),
+        pa.chunked_array([CORPUS[:100], CORPUS[100:]], pa.string()),
+        _null_slots_with_bytes(CORPUS),
+    ]
+    for arr in inputs:
+        a, b = mk(), mk()
+        a.update(CORPUS)
+        b.update(arr)
+        assert a.serialize() == b.serialize()
+    blob = prebuilt.serialize()
+    for name in _QUERY_METHODS:
+        if not hasattr(prebuilt, name):
+            continue
+        ref_sk = Sketch.deserialize(blob)
+        ref = getattr(ref_sk, name)(CORPUS)
+        for arr in inputs:
+            sk = Sketch.deserialize(blob)
+            np.testing.assert_array_equal(getattr(sk, name)(arr), ref, err_msg=name)
+            assert sk.serialize() == ref_sk.serialize(), name

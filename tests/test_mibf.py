@@ -117,7 +117,7 @@ def test_repair_reduces_saturation_and_keeps_invariant(spark, mibf_setup):
     assert mibf_rep.pop_saturated() <= mibf_plain.pop_saturated()
 
     for mibf in (mibf_rep, mibf_plain):
-        hashes, rws = mibf._hash_batch([t for t, _ in rows])
+        hashes, rws = mibf._windows([t for t, _ in rows])
         _, idx = mibf._probe(hashes)
         rpos = mibf.rank_pos(idx)
         words = mibf.data[rpos]
@@ -208,7 +208,7 @@ def test_online_insert_semantics():
     claim-if-empty in hash-seeded order, found-in-place short-circuit,
     saturation fallback returning False."""
     mibf = _online_mibf()
-    frame = mibf._hash_batch(["abcdefgh"])[0][0]  # first window's h hashes
+    frame = mibf._windows(["abcdefgh"])[0][0]  # first window's h hashes
     assert mibf.insert_online(frame, 7, 1) is True
     snap = mibf.data.copy()
     # idempotent: the value is found, nothing is rewritten

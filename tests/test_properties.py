@@ -101,7 +101,7 @@ def test_bloom_state_any_interleaving_equals_dense_reference(m_log, k, blocked, 
     n_entry = t_entry = 0
     for op, arg in ops:
         if op in ("update", "update_arrow", "merge", "bulk_merge"):
-            hashes, _ = bf._hash_batch(arg)
+            hashes, _ = H.window_hashes(*H.utf8_buffers(arg), k=bf.k, num_hashes=bf.hash_num, seeds=bf._seeds)
             ref[bf._positions_matrix(hashes).ravel()] = True
             n_entry, t_entry = n_entry + hashes.shape[0], t_entry + len(arg)
         if op == "update":

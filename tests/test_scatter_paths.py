@@ -6,6 +6,7 @@ semantic.  Corrupt payloads raise instead of loading silently."""
 import numpy as np
 import pytest
 
+from btl_bloomfilter_spark.functions import hashing as H
 from btl_bloomfilter_spark.operators.base import Sketch
 from btl_bloomfilter_spark.operators.bloom import BloomFilter, BlockedBloomFilter
 
@@ -23,7 +24,7 @@ def _dense_reference(mk, batches) -> np.ndarray:
     bf = mk()
     acc = np.zeros(bf.m_bits, dtype=bool)
     for b in batches:
-        hashes, _ = bf._hash_batch(b)
+        hashes, _ = H.window_hashes(*H.utf8_buffers(b), k=bf.k, num_hashes=bf.hash_num, seeds=bf._seeds)
         acc[bf._positions_matrix(hashes).ravel()] = True
     return np.packbits(acc, bitorder="little")
 

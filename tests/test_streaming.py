@@ -510,6 +510,26 @@ def test_stream_dedup_cross_batch_and_restart(spark, tmp_path):
 
 
 @pytest.mark.spark
+def test_stream_dedup_rejects_empty_lineage_state(spark, tmp_path):
+    """A state file seeded by ``merge_batch_into(..., lineage="")``
+    belongs to another lineage: its batch ids must not drive this
+    query's replay guard, so the first micro-batch raises and no
+    ``batch_id=`` directory is written."""
+    from btl_bloomfilter_spark.streaming.accumulate import merge_batch_into, stream_dedup
+
+    mk = lambda: BloomFilter.for_capacity(1000, 1e-6, k=0)
+    src, out, state = tmp_path / "src", tmp_path / "out", tmp_path / "state.bloom"
+    spark.createDataFrame([("seed",)], "text string").coalesce(1).write.parquet(str(src / "seed"))
+    merge_batch_into(state, spark.read.parquet(str(src / "seed")), "text", mk, batch_id=5, lineage="")
+    spark.createDataFrame([("A",), ("B",)], "text string").coalesce(1).write.parquet(str(src / "in"))
+    stream = spark.readStream.schema("text string").parquet(str(src / "in"))
+    q = stream_dedup(stream, "text", mk, out_dir=out, state_path=state, checkpoint_dir=tmp_path / "ck")
+    with pytest.raises(Exception, match="lineage"):
+        q.awaitTermination(120)
+    assert not list(out.glob("batch_id=*"))
+
+
+@pytest.mark.spark
 def test_stream_session_stats_matches_batch(spark, tmp_path):
     """Native session_window streaming sessionization: finalized
     sessions equal the batch sessionizer's rows exactly (start = first
