@@ -19,9 +19,17 @@ byte buffer) and P[p] = prefix-XOR of u, every window hash is
     base(t) = rol(P[t+k-1] ^ P[t-1], (t + k - 1) mod 64)
 
 because rotation distributes over XOR.  Per-string start offsets cancel
-(proof in `_roll_hash` docstring), so a whole Arrow batch of strings is
+(proof in `_fold` docstring), so a whole Arrow batch of strings is
 hashed with ~6 numpy passes over one flat byte buffer — the vectorized
 equivalent of the reference's O(1) slide.
+
+One fold, `_fold`, serves every k-gram mode.  Its two inputs, a care
+set (spaced seeds; None = all k positions) and a direction (forward or
+reverse complement), cover NTF64, NTR64 and NTS64, and their min is
+the canonical NTC64/NTMS64 base.  `window_hashes` is the one mode
+dispatch (whole string, k-gram, canonical, spaced, optionally with the
+hStn strand flag) and `check_hash_mode` the one parameter check of
+every hashing sketch's constructor.
 
 The NTE64 fan-out law is kept EXACTLY (same constants,
 `nthash.hpp:183-186,537-542`):
@@ -38,11 +46,11 @@ __all__ = [
     "MULTI_SHIFT",
     "seed_table",
     "nte64",
-    "hash_ngrams",
     "hash_strings",
     "hash_tokens",
     "utf8_buffers",
     "window_hashes",
+    "check_hash_mode",
     "tokenize_buffers",
     "hash_spans_from_buffers",
     "hash_token_ngrams_from_hashes",
@@ -180,10 +188,22 @@ def _flatten_utf8(strings) -> tuple[np.ndarray, np.ndarray]:
     return buf, offsets
 
 
-def _roll_hash(buf: np.ndarray, k: int, seeds: np.ndarray) -> np.ndarray:
-    """All window base-hashes of a flat byte buffer, vectorized.
+# DNA complement (A<->T, C<->G, both cases); all other bytes map to
+# themselves, so the canonical mode degrades gracefully on non-ACGT
+# text (N handling mirrors the reference's convertTab fallthrough)
+DNA_COMPLEMENT = np.arange(256, dtype=np.uint8)
+for _a, _b in ((65, 84), (67, 71), (97, 116), (99, 103)):  # A/T C/G a/t c/g
+    DNA_COMPLEMENT[_a], DNA_COMPLEMENT[_b] = np.uint8(_b), np.uint8(_a)
 
-    Window starting at absolute position p hashes bytes [p, p+k-1]:
+
+def _fold(
+    buf: np.ndarray, k: int, seeds: np.ndarray, care: np.ndarray | None = None, rc: bool = False
+) -> np.ndarray:
+    """All n-k+1 window base-hashes of a flat byte buffer (n >= k), the
+    one rolling fold behind every k-gram mode, vectorized.
+
+    Forward (NTF64, nthash.hpp:394-416), window starting at absolute
+    position p over bytes [p, p+k-1]:
 
         base(p) = rol(P[p+k-1] ^ P[p-1], (p + k - 1) mod 64)
 
@@ -194,146 +214,175 @@ def _roll_hash(buf: np.ndarray, k: int, seeds: np.ndarray) -> np.ndarray:
     u_local[q] = ror(seed, q-o) = rol(u_abs[q], o); the o-rotation
     distributes over the XOR and combines with t+k-1 into the absolute
     amount p+k-1.  Hence one global pass serves every string in the
-    batch; callers mask windows that span string boundaries.
+    batch; callers mask windows that span string boundaries
+    (:func:`_window_rows`).
+
+    ``rc=True`` folds the reverse complement of each window (NTR64,
+    nthash.hpp:419-439):
+
+        r(t) = XOR_{i=0..k-1} rol(seed[comp(b[t+i])], i)
+             = ror( P[t+k-1] ^ P[t-1], t mod 64 )
+
+    with P the prefix-XOR of v[p] = rol(seed[comp(b[p])], p) — the
+    mirror of the forward closed form (rol in the elementwise pass,
+    rotation by the window START), and equally position-independent.
+
+    ``care`` (spaced seeds, NTS64/NTMS64, nthash.hpp:750-878) keeps only
+    the pattern's '1' offsets, so sequences differing at masked
+    positions collide on purpose (skip-gram matching):
+
+        base(t) = rol( XOR_{j in care} u[t+j], (t+k-1) mod 64 )
+
+    — the same closed form restricted to care offsets: |care| vectorized
+    XOR passes instead of one prefix-XOR.  The reverse-complement fold
+    over window t is
+
+        rc(t) = XOR_{i in care} rol(cseed[b[t+k-1-i]], k-1-i)
+              = ror( XOR_{j in rev(care)} v[t+j], t mod 64 )
+
+    with rev(care) = {k-1-c}: the dense rc form restricted to the
+    REVERSED care set.  Strand neutrality (a sequence and its reverse
+    complement hashing identically) holds only for SYMMETRIC patterns
+    (care == rev(care)), which :func:`check_hash_mode` enforces.
     """
     n = buf.shape[0]
-    if n < k:
-        return np.empty(0, dtype=np.uint64)
+    nw = n - k + 1
     pos = _positions(n)
     s = _scratch("rh_s", n)
-    np.take(seeds, buf, out=s)
+    np.take(seeds[DNA_COMPLEMENT] if rc else seeds, buf, out=s)
     u = _scratch("rh_u", n)
     tmp = _scratch("rh_tmp", n)
-    _ror_into(s, pos, u, tmp)
-    pre = _scratch("rh_pre", n + 1)
-    pre[0] = 0
-    np.bitwise_xor.accumulate(u, out=pre[1:])
-    nw = n - k + 1
-    # w = pre[k:] ^ pre[:-k] ; rotation amount = (start + k - 1) mod 64
+    if rc:  # v = rol(s, pos) = ror(s, (64 - pos) & 63)
+        rr = _scratch("rh_rr", n)
+        np.subtract(_U64(64), pos, out=rr)
+        np.bitwise_and(rr, _MASK6, out=rr)
+        _ror_into(s, rr, u, tmp)
+    else:
+        _ror_into(s, pos, u, tmp)
     w = _scratch("rh_w", nw)
-    np.bitwise_xor(pre[k : n + 1], pre[0:nw], out=w)
+    if care is None:
+        pre = _scratch("rh_pre", n + 1)
+        pre[0] = 0
+        np.bitwise_xor.accumulate(u, out=pre[1:])
+        # w = pre[k:] ^ pre[:-k]
+        np.bitwise_xor(pre[k : n + 1], pre[0:nw], out=w)
+    else:
+        w.fill(0)
+        for j in (k - 1 - care) if rc else care:
+            np.bitwise_xor(w, u[j : j + nw], out=w)
+    out = np.empty(nw, dtype=np.uint64)
+    t2 = _scratch("rh_t2", nw)
+    if rc:
+        _ror_into(w, _positions(nw), out, t2)  # ror by window start mod 64
+        return out
+    # rotation amount = (start + k - 1) mod 64; out = rol(w, r) = ror(w, (64 - r) & 63)
     r = _scratch("rh_r", nw)
     np.add(_positions(nw), _U64((k - 1) % 64), out=r)
     np.bitwise_and(r, _MASK6, out=r)
-    t2 = _scratch("rh_t2", nw)
-    out = np.empty(nw, dtype=np.uint64)
-    # out = rol(w, r) = ror(w, (64 - r) & 63)
     np.subtract(_U64(64), r, out=r)
     np.bitwise_and(r, _MASK6, out=r)
     _ror_into(w, r, out, t2)
     return out
 
 
-# DNA complement (A<->T, C<->G, both cases); all other bytes map to
-# themselves, so the canonical mode degrades gracefully on non-ACGT
-# text (N handling mirrors the reference's convertTab fallthrough)
-DNA_COMPLEMENT = np.arange(256, dtype=np.uint8)
-for _a, _b in ((65, 84), (67, 71), (97, 116), (99, 103)):  # A/T C/G a/t c/g
-    DNA_COMPLEMENT[_a], DNA_COMPLEMENT[_b] = np.uint8(_b), np.uint8(_a)
+def _window_rows(offsets: np.ndarray, nw: int, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(valid, rows): the mask of the nw windows of length k that lie
+    inside one row of ``offsets``, and the row of each valid window."""
+    starts = np.arange(nw, dtype=np.int64)
+    row_of_pos = np.searchsorted(offsets, starts, side="right") - 1
+    valid = starts + k <= offsets[row_of_pos + 1]
+    return valid, row_of_pos[valid]
 
 
-def _roll_hash_rc(buf: np.ndarray, k: int, seeds: np.ndarray, comp: np.ndarray) -> np.ndarray:
-    """Reverse-complement window hashes: the forward fold applied to
-    the reverse complement of each window (NTR64 analog,
-    vendor/nthash.hpp:419-439), in one vectorized pass.
-
-    r(t) = XOR_{i=0..k-1} rol(seed[comp(b[t+i])], i)
-         = ror( P[t+k-1] ^ P[t-1], t mod 64 )
-    with P the prefix-XOR of v[p] = rol(seed[comp(b[p])], p) — the
-    mirror of _roll_hash's closed form (rol in the elementwise pass,
-    rotation by the window START), and equally position-independent.
-    """
-    n = buf.shape[0]
-    if n < k:
-        return np.empty(0, dtype=np.uint64)
-    pos = _positions(n)
-    cseeds = seeds[comp]
-    s = _scratch("rc_s", n)
-    np.take(cseeds, buf, out=s)
-    v = _scratch("rc_v", n)
-    tmp = _scratch("rc_tmp", n)
-    rr = _scratch("rc_rr", n)
-    np.subtract(_U64(64), pos, out=rr)
-    np.bitwise_and(rr, _MASK6, out=rr)
-    _ror_into(s, rr, v, tmp)  # v = rol(s, pos)
-    pre = _scratch("rc_pre", n + 1)
-    pre[0] = 0
-    np.bitwise_xor.accumulate(v, out=pre[1:])
-    nw = n - k + 1
-    w = _scratch("rc_w", nw)
-    np.bitwise_xor(pre[k : n + 1], pre[0:nw], out=w)
-    out = np.empty(nw, dtype=np.uint64)
-    t2 = _scratch("rc_t2", nw)
-    _ror_into(w, _positions(nw), out, t2)  # ror by window start mod 64
-    return out
+def check_hash_mode(
+    k: int, spaced_seeds: list[str] | None, canonical: bool, hash_num: int | None = None
+) -> int:
+    """Refuse an inconsistent hashing mode with ``ValueError``; returns
+    the window length (the pattern length in spaced mode, else ``k``).
+    ``hash_num`` (a sketch's hash count) must equal the number of
+    spaced seeds when given."""
+    if not spaced_seeds:
+        if canonical and k <= 0:
+            raise ValueError("canonical hashing requires k-gram mode (k > 0)")
+        return k
+    if len({len(p) for p in spaced_seeds}) != 1:
+        raise ValueError("all spaced seeds must share one length")
+    if k and k != len(spaced_seeds[0]):
+        raise ValueError("k must equal the spaced-seed pattern length")
+    if hash_num is not None and hash_num != len(spaced_seeds):
+        raise ValueError("hash_num must equal the number of spaced seeds")
+    if canonical:
+        # canonical spaced mode (NTMS64 canonical): strand neutrality
+        # needs symmetric care sets — the analog of the reference's
+        # symmetric-seed assertion (MIBloomFilter.hpp:437)
+        for p in spaced_seeds:
+            care = parse_seed(p)
+            if not (care == (len(p) - 1 - care)[::-1]).all():
+                raise ValueError(f"canonical spaced-seed mode requires symmetric patterns; {p!r} is not")
+    return len(spaced_seeds[0])
 
 
-def hash_ngrams_canonical_from_buffers(
+def window_hashes(
     buf: np.ndarray,
     offsets: np.ndarray,
-    k: int,
-    num_hashes: int = 1,
     *,
+    k: int,
+    num_hashes: int,
+    spaced_seeds: list[str] | None = None,
+    canonical: bool = False,
+    strand: bool = False,
     seeds: np.ndarray | None = None,
-    comp: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Canonical (strand-neutral) window hashing — NTC64 analog
-    (vendor/nthash.hpp:460-479): per window the base hash is
-    min(forward, reverse-complement) and the NTE64 fan-out runs on the
-    canonical base (NTMC64's structure), so a sequence and its reverse
-    complement produce identical hash sets."""
+):
+    """(hashes, row ids) of every element of a (buf, offsets) batch under
+    one hashing mode — the one mode dispatch of the library.
+
+    ``offsets`` (int64, len n_rows+1, offsets[0] == 0) delimits rows in
+    ``buf`` — exactly the Arrow UTF-8 layout, so Arrow batches hash
+    zero-copy.  Modes:
+
+    * whole string (``k == 0``, no spaced seeds): one element per row;
+    * k-gram (``k > 0``): every k-byte window inside a row, the
+      ntHashIterator walk (vendor/ntHashIterator.hpp:59-86) batched;
+      rows shorter than k yield no windows;
+    * ``canonical``: per window min(forward, reverse-complement) base
+      (NTC64, nthash.hpp:460-479), so a sequence and its reverse
+      complement hash identically;
+    * ``spaced_seeds``: one base per '1'/'0' pattern (window length =
+      pattern length), each fanned out to ``num_hashes`` columns — the
+      stHashIterator layout [seed1·h1..hm, seed2·h1..hm, ...]
+      (vendor/stHashIterator.hpp:157-160); combines with ``canonical``.
+
+    Every base fans out by NTE64 (:func:`nte64`): (W, num_hashes)
+    hashes, (W, n_seeds·num_hashes) in spaced mode.  ``strand=True``
+    (canonical only) also returns hStn, True where the
+    reverse-complement fold won the min (nthash.hpp:695-713,775-820):
+    (W, 1) for canonical k-gram, (W, n_seeds) for canonical spaced.
+    """
     seeds = _SEEDS if seeds is None else seeds
-    comp = DNA_COMPLEMENT if comp is None else comp
-    n = buf.shape[0]
-    if n < k:
-        return np.empty((0, num_hashes), dtype=np.uint64), np.empty(0, dtype=np.int64)
-    fwd = _roll_hash(buf, k, seeds)
-    rev = _roll_hash_rc(buf, k, seeds, comp)
-    base = np.minimum(fwd, rev)
-    starts = np.arange(n - k + 1, dtype=np.int64)
-    row_of_pos = np.searchsorted(offsets, starts, side="right") - 1
-    valid = starts + k <= offsets[row_of_pos + 1]
-    return nte64(base[valid], num_hashes, k), row_of_pos[valid]
-
-
-def hash_ngrams_canonical(
-    strings, k: int, num_hashes: int = 1, *, seeds: np.ndarray | None = None, comp: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Canonical window hashing over a batch of strings (NTC64)."""
-    buf, offsets = _flatten_utf8(strings)
-    return hash_ngrams_canonical_from_buffers(buf, offsets, k, num_hashes, seeds=seeds, comp=comp)
-
-
-def hash_ngrams_canonical_strand(
-    strings, k: int, num_hashes: int = 1, *, seeds: np.ndarray | None = None, comp: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Canonical window hashing WITH the per-window strand flag — the
-    NTMC64 variant that also reports hStn (vendor/nthash.hpp:695-713:
-    ``hStn = rhVal < fhVal``, true when the reverse-complement
-    direction won the canonical min).  All ``num_hashes`` hashes of a
-    window share one strand flag, exactly like the reference's
-    single-seed canonical iterator.
-
-    Returns (hashes (W, num_hashes) uint64, rows (W,) int64,
-    strand (W,) bool)."""
-    seeds = _SEEDS if seeds is None else seeds
-    comp = DNA_COMPLEMENT if comp is None else comp
-    buf, offsets = _flatten_utf8(strings)
-    n = buf.shape[0]
-    if n < k:
-        return (
-            np.empty((0, num_hashes), dtype=np.uint64),
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=bool),
-        )
-    fwd = _roll_hash(buf, k, seeds)
-    rev = _roll_hash_rc(buf, k, seeds, comp)
-    strand = rev < fwd  # hStn (nthash.hpp:712)
-    base = np.where(strand, rev, fwd)
-    starts = np.arange(n - k + 1, dtype=np.int64)
-    row_of_pos = np.searchsorted(offsets, starts, side="right") - 1
-    valid = starts + k <= offsets[row_of_pos + 1]
-    return nte64(base[valid], num_hashes, k), row_of_pos[valid], strand[valid]
+    k = check_hash_mode(k, spaced_seeds, canonical)
+    if strand and not canonical:
+        raise ValueError("strand=True requires canonical hashing")
+    if k <= 0:
+        hashes = hash_strings_from_buffers(buf, offsets, num_hashes, seeds=seeds)
+        return hashes, np.arange(offsets.size - 1, dtype=np.int64)
+    cares = [parse_seed(p) for p in spaced_seeds] if spaced_seeds else [None]
+    nw = buf.shape[0] - k + 1
+    if nw <= 0:
+        hashes = np.empty((0, len(cares) * num_hashes), dtype=np.uint64)
+        rows = np.empty(0, dtype=np.int64)
+        return (hashes, rows, np.empty((0, len(cares)), dtype=bool)) if strand else (hashes, rows)
+    valid, rows = _window_rows(offsets, nw, k)
+    blocks, strands = [], []
+    for care in cares:
+        base = _fold(buf, k, seeds, care)
+        if canonical:
+            rev = _fold(buf, k, seeds, care, rc=True)
+            if strand:
+                strands.append((rev < base)[valid])  # hStn (nthash.hpp:712)
+            base = np.minimum(base, rev)
+        blocks.append(nte64(base[valid], num_hashes, k))
+    hashes = blocks[0] if len(blocks) == 1 else np.concatenate(blocks, axis=1)
+    return (hashes, rows, np.stack(strands, axis=1)) if strand else (hashes, rows)
 
 
 def hash_ngrams_from_buffers(
@@ -344,45 +393,9 @@ def hash_ngrams_from_buffers(
     *,
     seeds: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Core windowed hasher over a flat byte buffer + row offsets.
-
-    ``offsets`` (int64, len n_rows+1, offsets[0] == 0) delimits rows in
-    ``buf`` — exactly the Arrow UTF-8 layout, so Arrow batches hash
-    zero-copy.  Returns ((W, num_hashes) hashes, (W,) row ids).
-    """
-    seeds = _SEEDS if seeds is None else seeds
-    n = buf.shape[0]
-    if n < k:
-        return np.empty((0, num_hashes), dtype=np.uint64), np.empty(0, dtype=np.int64)
-    base = _roll_hash(buf, k, seeds)  # (n-k+1,)
-    # valid windows: fully inside one string
-    starts = np.arange(n - k + 1, dtype=np.int64)
-    row_of_pos = np.searchsorted(offsets, starts, side="right") - 1
-    valid = starts + k <= offsets[row_of_pos + 1]
-    base = base[valid]
-    row_ids = row_of_pos[valid]
-    return nte64(base, num_hashes, k), row_ids
-
-
-def hash_ngrams(
-    strings,
-    k: int,
-    num_hashes: int = 1,
-    *,
-    seeds: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Hash every k-byte window of every string in a batch.
-
-    Equivalent of iterating ntHashIterator over each sequence
-    (vendor/ntHashIterator.hpp:59-86) but batched: one flat numpy pass.
-
-    Returns ``(hashes, row_ids)`` where ``hashes`` is (W, num_hashes)
-    uint64 over all valid windows of all strings and ``row_ids`` maps
-    each window to its source string index.  Strings shorter than k
-    yield no windows (reference behavior: iterator ends immediately).
-    """
-    buf, offsets = _flatten_utf8(strings)
-    return hash_ngrams_from_buffers(buf, offsets, k, num_hashes, seeds=seeds)
+    """k-gram mode of :func:`window_hashes` (``k >= 1``): ((W,
+    num_hashes) hashes, (W,) row ids)."""
+    return window_hashes(buf, offsets, k=k, num_hashes=num_hashes, seeds=seeds)
 
 
 def arrow_utf8_buffers(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
@@ -417,9 +430,12 @@ def arrow_utf8_buffers(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
 
 def _strings_of(values) -> list:
     """The library-wide string encoding of a batch: ``None`` → ``""``,
-    non-strings → ``str(v)``."""
+    non-strings → ``str(v)``.  Arrow arrays, chunked ones too, are read
+    by ``to_pylist`` (a ChunkedArray has no ``tolist``, and iterating it
+    yields Arrow scalars, whose null would read ``"None"``)."""
+    to_list = getattr(values, "to_pylist", None) or getattr(values, "tolist", None)
     out = []
-    for v in (values.tolist() if hasattr(values, "tolist") else values):
+    for v in (to_list() if to_list else values):
         out.append(v if isinstance(v, str) else ("" if v is None else str(v)))
     return out
 
@@ -444,35 +460,6 @@ def utf8_buffers(values) -> tuple[np.ndarray, np.ndarray]:
         buf, offsets, _ = arrow_utf8_buffers(values)
         return buf, offsets
     return _flatten_utf8(_strings_of(values))
-
-
-def window_hashes(
-    buf: np.ndarray,
-    offsets: np.ndarray,
-    *,
-    k: int,
-    num_hashes: int,
-    spaced_seeds: list[str] | None = None,
-    canonical: bool = False,
-    seeds: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """(hashes, row ids) of every element of a (buf, offsets) batch under
-    one hashing mode — spaced seeds (one column per pattern,
-    ``num_hashes`` ignored), canonical k-gram, k-gram (``k > 0``) or
-    whole string (``k == 0``, one element per row)."""
-    if spaced_seeds:
-        if canonical:
-            hashes, rows, _ = hash_ngrams_multi_seed_canonical_from_buffers(
-                buf, offsets, spaced_seeds, seeds=seeds
-            )
-            return hashes, rows
-        return hash_ngrams_multi_seed_from_buffers(buf, offsets, spaced_seeds, 1, seeds=seeds)
-    if canonical:
-        return hash_ngrams_canonical_from_buffers(buf, offsets, k, num_hashes, seeds=seeds)
-    if k > 0:
-        return hash_ngrams_from_buffers(buf, offsets, k, num_hashes, seeds=seeds)
-    hashes = hash_strings_from_buffers(buf, offsets, num_hashes, seeds=seeds)
-    return hashes, np.arange(offsets.size - 1, dtype=np.int64)
 
 
 def hash_strings(strings, num_hashes: int = 1, *, seeds: np.ndarray | None = None) -> np.ndarray:
@@ -504,7 +491,7 @@ def hash_spans_from_buffers(
     """
     seeds = _SEEDS if seeds is None else seeds
     n = buf.shape[0]
-    # pooled scratch (same rationale as _roll_hash): this is the
+    # pooled scratch (same rationale as _fold): this is the
     # whole-string hot path, one call per Arrow batch in long-lived
     # workers — fresh multi-MB temporaries per call churn mmap pages
     pre = _scratch("hs_pre", n + 1)
@@ -603,17 +590,15 @@ def hash_token_ngrams_from_hashes(
     for j in range(n):
         np.bitwise_xor(w, _rol(tok_hash[j : j + nw], np.uint64((n - 1 - j) % 64)), out=w)
     base = _splitmix64(w ^ _U64(n))
-    starts = np.arange(nw, dtype=np.int64)
-    row_of = np.searchsorted(row_offsets, starts, side="right") - 1
-    valid = starts + n <= row_offsets[row_of + 1]
-    return base[valid], row_of[valid]
+    valid, rows = _window_rows(row_offsets, nw, n)
+    return base[valid], rows
 
 
 def hash_tokens(token_lists, n: int, num_hashes: int = 1) -> tuple[np.ndarray, np.ndarray]:
     """Hash word n-grams: each n-gram is the '\\x1f'-joined token window.
 
     token_lists: sequence of lists of tokens. Returns (hashes, row_ids)
-    like :func:`hash_ngrams`.
+    like :func:`window_hashes`.
     """
     grams: list[str] = []
     rows: list[int] = []
@@ -634,222 +619,6 @@ def parse_seed(pattern: str) -> np.ndarray:
     if not pattern or set(pattern) - {"0", "1"}:
         raise ValueError(f"seed pattern must be nonempty 0/1 string: {pattern!r}")
     return np.flatnonzero(np.frombuffer(pattern.encode(), dtype=np.uint8) == ord("1")).astype(np.int64)
-
-
-def hash_ngrams_spaced(
-    strings,
-    pattern: str,
-    num_hashes: int = 1,
-    *,
-    seeds: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Spaced-seed window hashing over a batch of strings (see
-    :func:`hash_ngrams_spaced_from_buffers`)."""
-    buf, offsets = _flatten_utf8(strings)
-    return hash_ngrams_spaced_from_buffers(buf, offsets, pattern, num_hashes, seeds=seeds)
-
-
-def hash_ngrams_spaced_from_buffers(
-    buf: np.ndarray,
-    offsets: np.ndarray,
-    pattern: str,
-    num_hashes: int = 1,
-    *,
-    seeds: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Spaced-seed window hashing (NTS64/NTMS64 analog,
-    vendor/nthash.hpp:750-878): only the '1' positions of the pattern
-    contribute to the hash, so sequences differing at masked positions
-    collide on purpose (skip-gram matching).
-
-    base(t) = rol( XOR_{j in care} u[t+j], (t+k-1) mod 64 )  with
-    u[p] = ror(seed[b[p]], p) — the same closed form as the dense
-    rolling hash restricted to care offsets: |care| vectorized XOR
-    passes instead of one prefix-XOR.  Consumes the Arrow UTF-8
-    buffer/offset layout zero-copy.
-    """
-    seeds = _SEEDS if seeds is None else seeds
-    k = len(pattern)
-    care = parse_seed(pattern)
-    n = buf.shape[0]
-    if n < k:
-        return np.empty((0, num_hashes), dtype=np.uint64), np.empty(0, dtype=np.int64)
-    pos = _positions(n)
-    s = _scratch("sp_s", n)
-    np.take(seeds, buf, out=s)
-    u = _scratch("sp_u", n)
-    tmp = _scratch("sp_tmp", n)
-    _ror_into(s, pos, u, tmp)
-    nw = n - k + 1
-    w = np.zeros(nw, dtype=np.uint64)
-    for j in care:
-        np.bitwise_xor(w, u[j : j + nw], out=w)
-    r = _scratch("sp_r", nw)
-    np.add(_positions(nw), _U64((k - 1) % 64), out=r)
-    np.bitwise_and(r, _MASK6, out=r)
-    np.subtract(_U64(64), r, out=r)
-    np.bitwise_and(r, _MASK6, out=r)
-    out = np.empty(nw, dtype=np.uint64)
-    t2 = _scratch("sp_t2", nw)
-    _ror_into(w, r, out, t2)
-    starts = np.arange(nw, dtype=np.int64)
-    row_of_pos = np.searchsorted(offsets, starts, side="right") - 1
-    valid = starts + k <= offsets[row_of_pos + 1]
-    return nte64(out[valid], num_hashes, k), row_of_pos[valid]
-
-
-def hash_ngrams_spaced_canonical_from_buffers(
-    buf: np.ndarray,
-    offsets: np.ndarray,
-    pattern: str,
-    num_hashes: int = 1,
-    *,
-    seeds: np.ndarray | None = None,
-    comp: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Canonical spaced-seed window hashing with the strand flag — the
-    NTMS64 canonical variant (vendor/nthash.hpp:775-820: per-seed
-    fsVal/rsVal, hStn[j] = rsVal < fsVal, hash = min).
-
-    The reverse-complement spaced fold over window t is
-
-        rc(t) = XOR_{i in care} rol(cseed[b[t+k-1-i]], k-1-i)
-              = ror( XOR_{j in rev(care)} v[t+j], t mod 64 )
-
-    with v[p] = rol(seed[comp(b[p])], p) and rev(care) = {k-1-c} — the
-    same closed form as the dense rc hash restricted to the REVERSED
-    care set.  Strand neutrality (seq and its reverse complement
-    hashing identically) holds only for SYMMETRIC patterns
-    (care == rev(care)); asymmetric patterns are refused, mirroring
-    the reference's symmetric-seed assertion (MIBloomFilter.hpp:437).
-
-    Returns ((W, num_hashes) uint64, (W,) rows, (W,) strand bool).
-    """
-    seeds = _SEEDS if seeds is None else seeds
-    comp = DNA_COMPLEMENT if comp is None else comp
-    k = len(pattern)
-    care = parse_seed(pattern)
-    rev_care = np.sort(k - 1 - care)
-    if not np.array_equal(care, rev_care):
-        raise ValueError(
-            f"canonical spaced-seed hashing requires a symmetric pattern "
-            f"(care == reversed care); got {pattern!r}"
-        )
-    n = buf.shape[0]
-    if n < k:
-        return (
-            np.empty((0, num_hashes), dtype=np.uint64),
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=bool),
-        )
-    pos = _positions(n)
-    nw = n - k + 1
-    # forward spaced fold (same passes as hash_ngrams_spaced_from_buffers)
-    s = _scratch("spc_s", n)
-    np.take(seeds, buf, out=s)
-    u = _scratch("spc_u", n)
-    tmp = _scratch("spc_tmp", n)
-    _ror_into(s, pos, u, tmp)
-    wf = np.zeros(nw, dtype=np.uint64)
-    for j in care:
-        np.bitwise_xor(wf, u[j : j + nw], out=wf)
-    r = _scratch("spc_r", nw)
-    np.add(_positions(nw), _U64((k - 1) % 64), out=r)
-    np.bitwise_and(r, _MASK6, out=r)
-    np.subtract(_U64(64), r, out=r)
-    np.bitwise_and(r, _MASK6, out=r)
-    fwd = np.empty(nw, dtype=np.uint64)
-    t2 = _scratch("spc_t2", nw)
-    _ror_into(wf, r, fwd, t2)
-    # reverse-complement spaced fold
-    cs = _scratch("spc_cs", n)
-    np.take(seeds[comp], buf, out=cs)
-    v = _scratch("spc_v", n)
-    rr = _scratch("spc_rr", n)
-    np.subtract(_U64(64), pos, out=rr)
-    np.bitwise_and(rr, _MASK6, out=rr)
-    _ror_into(cs, rr, v, tmp)  # v = rol(cseed, pos)
-    wr = np.zeros(nw, dtype=np.uint64)
-    for j in rev_care:
-        np.bitwise_xor(wr, v[j : j + nw], out=wr)
-    rev = np.empty(nw, dtype=np.uint64)
-    _ror_into(wr, _positions(nw), rev, t2)  # ror by window start
-    strand = rev < fwd
-    base = np.where(strand, rev, fwd)
-    starts = np.arange(nw, dtype=np.int64)
-    row_of_pos = np.searchsorted(offsets, starts, side="right") - 1
-    valid = starts + k <= offsets[row_of_pos + 1]
-    return nte64(base[valid], num_hashes, k), row_of_pos[valid], strand[valid]
-
-
-def hash_ngrams_multi_seed_canonical_from_buffers(
-    buf: np.ndarray,
-    offsets: np.ndarray,
-    patterns: list[str],
-    *,
-    seeds: np.ndarray | None = None,
-    comp: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Canonical multi-spaced-seed hashing over the Arrow UTF-8 layout
-    (stHashIterator canonical layout): per window, one canonical hash
-    AND one strand flag per seed pattern — (W, n_seeds) hashes, (W,)
-    rows, (W, n_seeds) strand.  All patterns must be symmetric (see
-    the single-seed kernel)."""
-    if len({len(p) for p in patterns}) != 1:
-        raise ValueError("all seed patterns must share one length")
-    blocks, strands = [], []
-    rows = None
-    for p in patterns:
-        h, r, st = hash_ngrams_spaced_canonical_from_buffers(buf, offsets, p, 1, seeds=seeds, comp=comp)
-        blocks.append(h)
-        strands.append(st)
-        rows = r
-    return (
-        np.concatenate(blocks, axis=1),
-        rows if rows is not None else np.empty(0, dtype=np.int64),
-        np.stack(strands, axis=1)
-        if strands and strands[0].size
-        else np.empty((0, len(patterns)), dtype=bool),
-    )
-
-
-def hash_ngrams_multi_seed_canonical(
-    strings, patterns: list[str], *, seeds: np.ndarray | None = None, comp: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Canonical multi-spaced-seed hashing over a batch of strings."""
-    buf, offsets = _flatten_utf8(strings)
-    return hash_ngrams_multi_seed_canonical_from_buffers(buf, offsets, patterns, seeds=seeds, comp=comp)
-
-
-def hash_ngrams_multi_seed(
-    strings, patterns: list[str], num_hashes: int = 1, *, seeds: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Multi-spaced-seed hashing (stHashIterator layout,
-    vendor/stHashIterator.hpp:157-160): per window emits
-    [seed1·h1..hm, seed2·h1..hm, ...] — (W, len(patterns)*num_hashes)."""
-    buf, offsets = _flatten_utf8(strings)
-    return hash_ngrams_multi_seed_from_buffers(buf, offsets, patterns, num_hashes, seeds=seeds)
-
-
-def hash_ngrams_multi_seed_from_buffers(
-    buf: np.ndarray,
-    offsets: np.ndarray,
-    patterns: list[str],
-    num_hashes: int = 1,
-    *,
-    seeds: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Multi-spaced-seed hashing over a flat UTF-8 buffer (Arrow
-    layout, zero-copy)."""
-    if len({len(p) for p in patterns}) != 1:
-        raise ValueError("all seed patterns must share one length")
-    blocks = []
-    rows = None
-    for p in patterns:
-        h, r = hash_ngrams_spaced_from_buffers(buf, offsets, p, num_hashes, seeds=seeds)
-        blocks.append(h)
-        rows = r
-    return np.concatenate(blocks, axis=1), rows
 
 
 def clz64(v: np.ndarray) -> np.ndarray:

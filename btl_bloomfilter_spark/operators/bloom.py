@@ -88,27 +88,8 @@ class BloomFilter(Sketch):
         # base hash is min(forward, reverse-complement), so a sequence
         # and its reverse complement populate/probe identical bits
         self.canonical = bool(canonical)
-        if self.canonical and k <= 0 and not spaced_seeds:
-            raise ValueError("canonical hashing requires k-gram mode (k > 0)")
         self.spaced_seeds = list(spaced_seeds) if spaced_seeds else None
-        if self.spaced_seeds:
-            if len({len(p) for p in self.spaced_seeds}) != 1:
-                raise ValueError("all spaced seeds must share one length")
-            if self.k and self.k != len(self.spaced_seeds[0]):
-                raise ValueError("k must equal the spaced-seed pattern length")
-            self.k = len(self.spaced_seeds[0])
-            if self.hash_num != len(self.spaced_seeds):
-                raise ValueError("hash_num must equal the number of spaced seeds")
-            if self.canonical:
-                # canonical spaced mode (NTMS64 canonical): strand
-                # neutrality needs symmetric care sets — the analog of
-                # the reference's symmetric-seed assertion
-                for p in self.spaced_seeds:
-                    care = H.parse_seed(p)
-                    if not (care == (len(p) - 1 - care)[::-1]).all():
-                        raise ValueError(
-                            f"canonical spaced-seed mode requires symmetric patterns; {p!r} is not"
-                        )
+        self.k = H.check_hash_mode(self.k, self.spaced_seeds, self.canonical, self.hash_num)
         self._seeds = H.seed_table(self.seed_salt)
         # pending positions fit in u32 up to m = 2^32; the buffer holds
         # at most the packed array's own size, m/8 bytes

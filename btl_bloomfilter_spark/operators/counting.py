@@ -55,24 +55,8 @@ class CountingBloomFilter(Sketch):
         # canonical NTC64 mode) — the reference counting filter is
         # hash-agnostic, so all tokenizer modes apply uniformly
         self.canonical = bool(canonical)
-        if self.canonical and k <= 0 and not spaced_seeds:
-            raise ValueError("canonical hashing requires k-gram mode (k > 0)")
         self.spaced_seeds = list(spaced_seeds) if spaced_seeds else None
-        if self.spaced_seeds:
-            if len({len(p) for p in self.spaced_seeds}) != 1:
-                raise ValueError("all spaced seeds must share one length")
-            if k and k != len(self.spaced_seeds[0]):
-                raise ValueError("k must equal the spaced-seed pattern length")
-            k = len(self.spaced_seeds[0])
-            if hash_num != len(self.spaced_seeds):
-                raise ValueError("hash_num must equal the number of spaced seeds")
-            if self.canonical:
-                for p in self.spaced_seeds:
-                    care = H.parse_seed(p)
-                    if not (care == (len(p) - 1 - care)[::-1]).all():
-                        raise ValueError(
-                            f"canonical spaced-seed mode requires symmetric patterns; {p!r} is not"
-                        )
+        k = H.check_hash_mode(k, self.spaced_seeds, self.canonical, hash_num)
         self.m_counters = int(m_counters)
         self.hash_num = int(hash_num)
         self.k = int(k)
@@ -119,7 +103,7 @@ class CountingBloomFilter(Sketch):
             buf,
             offsets,
             k=self.k,
-            num_hashes=self.hash_num,
+            num_hashes=1 if self.spaced_seeds else self.hash_num,
             spaced_seeds=self.spaced_seeds,
             canonical=self.canonical,
             seeds=self._seeds,

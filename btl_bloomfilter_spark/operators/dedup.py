@@ -694,13 +694,9 @@ def _winnow_from_buffers(
     n = buf.shape[0]
     if n < k:
         return empty
-    base = H._roll_hash(buf, k, seeds)  # (n-k+1,)
-    starts = np.arange(n - k + 1, dtype=np.int64)
-    row_of = np.searchsorted(offsets, starts, side="right") - 1
-    valid = starts + k <= offsets[row_of + 1]
-    h = base[valid]
-    rows = row_of[valid]
-    pos = starts[valid] - offsets[rows]
+    valid, rows = H._window_rows(offsets, n - k + 1, k)
+    h = H._fold(buf, k, seeds)[valid]
+    pos = np.flatnonzero(valid) - offsets[rows]
     W = h.size
     if W == 0:
         return empty

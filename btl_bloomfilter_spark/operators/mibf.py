@@ -47,7 +47,7 @@ candidate with counts + saturation stats.
 
 from __future__ import annotations
 
-from typing import Any, Callable
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -55,7 +55,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import hashing as H
-from ..functions.hashing import _strings_of
 from .base import Sketch
 from .bloom import BloomFilter
 
@@ -185,20 +184,9 @@ class MIBloomFilter(Sketch):
         # is the NTMS64 canonical mode (per-seed min(fwd, rc) + per-seed
         # strand, nthash.hpp:775-820) — symmetric patterns required
         self.spaced_seeds = list(spaced_seeds) if spaced_seeds else None
-        if self.spaced_seeds:
-            if len({len(p) for p in self.spaced_seeds}) != 1:
-                raise ValueError("all spaced seeds must share one length")
-            if self.k != len(self.spaced_seeds[0]):
-                raise ValueError("k must equal the spaced-seed pattern length")
-            if self.hash_num != len(self.spaced_seeds):
-                raise ValueError("hash_num must equal the number of spaced seeds")
-            if self.canonical:
-                for p in self.spaced_seeds:
-                    care = H.parse_seed(p)
-                    if not (care == (len(p) - 1 - care)[::-1]).all():
-                        raise ValueError(
-                            f"canonical spaced-seed mode requires symmetric patterns; {p!r} is not"
-                        )
+        if H.check_hash_mode(self.k, self.spaced_seeds, self.canonical, self.hash_num) != self.k:
+            # stricter than BloomFilter: k = 0 does not stand for the pattern length
+            raise ValueError("k must equal the spaced-seed pattern length")
         self.bits = np.zeros(self.m_bits // 8, dtype=np.uint8)
         self.block_rank = np.zeros(1, dtype=np.int64)  # cum popcount per 64B block
         self.data = np.zeros(0, dtype=np.uint32)
@@ -263,16 +251,20 @@ class MIBloomFilter(Sketch):
         return misses <= allowed_misses, idx, got
 
     # -- hashing -----------------------------------------------------
-    def _windows(self, values) -> tuple[np.ndarray, np.ndarray]:
-        """((W, h) frame hashes, row_ids) of a string batch."""
+    def _windows(self, values, strand: bool = False):
+        """((W, h) frame hashes, row_ids) of a string batch; with
+        ``strand=True`` (canonical filters) also each frame's hStn —
+        (W, 1) for canonical k-gram, (W, h) per seed for canonical
+        spaced (stHashIterator's bool* layout)."""
         buf, offsets = H.utf8_buffers(values)
         return H.window_hashes(
             buf,
             offsets,
             k=self.k,
-            num_hashes=self.hash_num,
+            num_hashes=1 if self.spaced_seeds else self.hash_num,
             spaced_seeds=self.spaced_seeds,
             canonical=self.canonical,
+            strand=strand,
             seeds=self._seeds,
         )
 
@@ -628,6 +620,11 @@ class MIBloomFilter(Sketch):
         use build_mibf's reservoir passes for bulk/distributed builds.
         """
         hashes = np.asarray(hashes, dtype=np.uint64).ravel()
+        return self._claim(hashes, [int(value)] * hashes.size, value, max_count)
+
+    def _claim(self, hashes: np.ndarray, words: list[int], value: int, max_count: int) -> bool:
+        """The slot-claim loop of both online inserts (steps 1-4 of
+        :meth:`insert_online`), storing ``words[i]`` in slot i."""
         idx = hashes % np.uint64(self.m_bits)
         rpos = self.rank_pos(idx[None, :])[0]
         count = 0
@@ -640,7 +637,7 @@ class MIBloomFilter(Sketch):
                 old &= int(ID_MASK)
             else:
                 saturated = False
-            if old == value:
+            if old == words[i]:
                 count += 1
             else:
                 order.append(i)
@@ -651,11 +648,9 @@ class MIBloomFilter(Sketch):
         for i in order:
             p = rpos[i]
             old = int(self.data[p])
-            if old == 0:  # setDataIfEmpty (MIBloomFilter.hpp:644)
-                self.data[p] = np.uint32(value)
-            if old & int(SAT_BIT):
-                pass
-            else:
+            if old == 0:  # setDataIfEmpty / setVal CAS (MIBloomFilter.hpp:644)
+                self.data[p] = words[i]
+            if not (old & int(SAT_BIT)):
                 saturated = False
             if old == 0:
                 count += 1
@@ -697,46 +692,8 @@ class MIBloomFilter(Sketch):
         strand = np.broadcast_to(np.asarray(strand, dtype=bool).ravel(), (hashes.size,))
         if value & ~int(ID_MASK_STRAND):
             raise ValueError(f"strand-mode IDs must be < 2^30 (got {value})")
-        strand_dir = bool(max_count % 2)
-        idx = hashes % np.uint64(self.m_bits)
-        rpos = self.rank_pos(idx[None, :])[0]
-        vals = np.where(
-            strand ^ strand_dir, np.uint32(value) | STRAND_BIT, np.uint32(value)
-        ).astype(np.uint32)
-        count = 0
-        saturated = True
-        rand = int(value)
-        order: list[int] = []
-        for i in range(hashes.size):
-            old = int(self.data[rpos[i]])
-            if old & int(SAT_BIT):
-                old &= int(ID_MASK)
-            else:
-                saturated = False
-            if old == int(vals[i]):
-                count += 1
-            else:
-                order.append(i)
-            if count >= max_count:
-                return True
-            rand = (rand ^ int(hashes[i])) & ((1 << 64) - 1)
-        _minstd_shuffle(order, rand)
-        for i in order:
-            p = rpos[i]
-            old = int(self.data[p])
-            if old == 0:  # setDataIfEmpty / setVal CAS
-                self.data[p] = vals[i]
-            if not (old & int(SAT_BIT)):
-                saturated = False
-            if old == 0:
-                count += 1
-            if count >= max_count:
-                return True
-        if count == 0:
-            if not saturated:
-                self.data[rpos] |= SAT_BIT  # saturate(hashes)
-            return False
-        return True
+        words = np.where(strand ^ bool(max_count % 2), value | int(STRAND_BIT), value)
+        return self._claim(hashes, words.tolist(), value, max_count)
 
     def insert_seq_online_strand(self, text: str, value: int, max_count: int = 1) -> bool:
         """Online strand insert of every frame of ``text`` — each
@@ -749,20 +706,10 @@ class MIBloomFilter(Sketch):
         reference's strand insert consumes."""
         if not self.canonical:
             raise ValueError("strand insert requires canonical=True hashing")
-        if self.spaced_seeds:
-            hashes, _, strand = H.hash_ngrams_multi_seed_canonical(
-                [text], self.spaced_seeds, seeds=self._seeds
-            )
-            ok = True
-            for w in range(hashes.shape[0]):
-                ok &= self.insert_online_strand(hashes[w], strand[w], value, max_count)
-            return ok
-        hashes, _, strand = H.hash_ngrams_canonical_strand(
-            [text], self.k, self.hash_num, seeds=self._seeds
-        )
+        hashes, _, strand = self._windows([text], strand=True)
         ok = True
         for w in range(hashes.shape[0]):
-            ok &= self.insert_online_strand(hashes[w], bool(strand[w]), value, max_count)
+            ok &= self.insert_online_strand(hashes[w], strand[w], value, max_count)
         return ok
 
     def get_id_counts_strand(self) -> tuple[dict[int, int], int]:
@@ -1140,18 +1087,9 @@ def _frames_fn(
         probe = Sketch.deserialize(blob.value)
         for pdf in batches:
             if strand_dir is None:
-                hashes, rows = probe._windows(pdf[text_col])
-                strands = None
-            elif probe.spaced_seeds:
-                strings = _strings_of(pdf[text_col])
-                hashes, rows, strands = H.hash_ngrams_multi_seed_canonical(
-                    strings, probe.spaced_seeds, seeds=probe._seeds
-                )
+                (hashes, rows), strands = probe._windows(pdf[text_col]), None
             else:
-                strings = _strings_of(pdf[text_col])
-                hashes, rows, strands = H.hash_ngrams_canonical_strand(
-                    strings, probe.k, probe.hash_num, seeds=probe._seeds
-                )
+                hashes, rows, strands = probe._windows(pdf[text_col], strand=True)
             if hashes.shape[0] == 0:
                 continue
             _, idx = probe._probe(hashes)  # all set by construction
@@ -1161,8 +1099,7 @@ def _frames_fn(
             if strands is not None:
                 if (ids >> 30).any():
                     raise ValueError("strand-mode IDs must be < 2^30 (two stolen top bits)")
-                st = strands if strands.ndim == 2 else strands[:, None]
-                vals = np.where(st ^ strand_dir, ids[:, None] | np.int64(STRAND_BIT), ids[:, None])
+                vals = np.where(strands ^ strand_dir, ids[:, None] | np.int64(STRAND_BIT), ids[:, None])
                 vals = np.broadcast_to(vals, rpos.shape)
             else:
                 vals = np.broadcast_to(ids[:, None], rpos.shape)

@@ -312,7 +312,6 @@ def stream_keyed_online_mibf(
     emitted metrics, extracting blobs only at end-of-stream).
     Start with ``.writeStream.outputMode("update")``.
     """
-    import numpy as np
     import pandas as pd
 
     key_schema = key_schema or _key_schema(stream_df, keys)

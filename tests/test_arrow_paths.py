@@ -160,3 +160,39 @@ def test_queries_arrow_equal_list(mk):
             sk = Sketch.deserialize(blob)
             np.testing.assert_array_equal(getattr(sk, name)(arr), ref, err_msg=name)
             assert sk.serialize() == ref_sk.serialize(), name
+
+
+def test_sequence_sketches_chunked_nulls_equal_list():
+    """The sketches that read strings through ``_strings_of`` see a null
+    of a chunked Arrow array as ``None`` → ``""``, exactly like the list
+    (iterating a ChunkedArray yields Arrow scalars, whose null once read
+    as the string "None").  XorFilter and CuckooFilter are static, so
+    they are checked through ``contains_batch`` of a filter holding
+    ``""``; IBLT through ``update``."""
+    from btl_bloomfilter_spark.operators import cuckoo, xorfilter
+    from btl_bloomfilter_spark.operators.iblt import IBLT
+
+    values = ["a", None, "b", None, "c"]
+    chunked = pa.chunked_array([values[:2], values[2:]], pa.string())
+    keys = ["", "a", "b"] + [f"key {i}" for i in range(200)]
+    # one-block filters of ``keys``, solved locally by the block solvers
+    # of the distributed builds
+    u = H.hash_strings(keys, 1)[:, 0]
+    xf = xorfilter.XorFilter(fp_bits=16, n_keys=len(keys))
+    seed, seglen, fps = xorfilter._build_block(u, 0, 0, 16)
+    xf.seeds, xf.seglens = np.array([seed]), np.array([seglen])
+    xf.fps = np.frombuffer(fps, dtype=np.uint16).copy()
+    xf.offsets = np.array([0, 3 * seglen])
+    cf = cuckoo.CuckooFilter(fp_bits=16, n_keys=len(keys))
+    seed, nbuckets, table = cuckoo._build_block(u, 0, 0, 16)
+    cf.seeds, cf.nbuckets = np.array([seed]), np.array([nbuckets])
+    cf.table = np.frombuffer(table, dtype=np.uint16).copy()
+    cf._reoffset()
+    for sk in (xf, cf):
+        expect = sk.contains_batch(values)
+        assert expect[:4].all()
+        np.testing.assert_array_equal(sk.contains_batch(chunked), expect)
+    a, b = IBLT(), IBLT()
+    a.update(values)
+    b.update(chunked)
+    assert a.serialize() == b.serialize()

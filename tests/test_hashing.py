@@ -48,7 +48,7 @@ def test_rolling_matches_naive(k):
         bytes(rng.integers(0, 256, size=n, dtype=np.uint8)).decode("latin-1")
         for n in [0, 1, k - 1 if k > 1 else 3, k, k + 1, 3 * k + 5, 200]
     ]
-    hashes, rows = H.hash_ngrams(strings, k, num_hashes=1)
+    hashes, rows = H.window_hashes(*H.utf8_buffers(strings), k=k, num_hashes=1)
     seeds = H.seed_table()
     expect = []
     expect_rows = []
@@ -66,16 +66,16 @@ def test_rolling_matches_naive(k):
 def test_batching_independence():
     strings = ["hello world", "", "abcabcabc", "x"]
     k = 3
-    all_h, all_r = H.hash_ngrams(strings, k, num_hashes=3)
+    all_h, all_r = H.window_hashes(*H.utf8_buffers(strings), k=k, num_hashes=3)
     for i, s in enumerate(strings):
-        one_h, one_r = H.hash_ngrams([s], k, num_hashes=3)
+        one_h, one_r = H.window_hashes(*H.utf8_buffers([s]), k=k, num_hashes=3)
         np.testing.assert_array_equal(all_h[all_r == i], one_h)
 
 
 def test_windows_never_span_strings():
     # "ab"+"cd" must not produce the window "bc"
-    h2, _ = H.hash_ngrams(["ab", "cd"], 2)
-    h1, _ = H.hash_ngrams(["abcd"], 2)
+    h2, _ = H.window_hashes(*H.utf8_buffers(["ab", "cd"]), k=2, num_hashes=1)
+    h1, _ = H.window_hashes(*H.utf8_buffers(["abcd"]), k=2, num_hashes=1)
     assert len(h2) == 2
     assert len(h1) == 3
     joint = set(int(x) for x in h1[:, 0])
@@ -175,15 +175,15 @@ def test_canonical_hash_strand_symmetry():
     and the canonical base differs from forward-only somewhere."""
     seq = "ACGTTGCAATCGGCTAGCTTACGT"
     k = 9
-    h1, _ = H.hash_ngrams_canonical([seq], k, num_hashes=3)
-    h2, _ = H.hash_ngrams_canonical([_revcomp(seq)], k, num_hashes=3)
+    h1, _ = H.window_hashes(*H.utf8_buffers([seq]), k=k, num_hashes=3, canonical=True)
+    h2, _ = H.window_hashes(*H.utf8_buffers([_revcomp(seq)]), k=k, num_hashes=3, canonical=True)
     n = len(seq) - k + 1
     for i in range(n):
         np.testing.assert_array_equal(h1[i], h2[n - 1 - i])
-    hf, _ = H.hash_ngrams([seq], k, num_hashes=3)
+    hf, _ = H.window_hashes(*H.utf8_buffers([seq]), k=k, num_hashes=3)
     assert not np.array_equal(h1, hf)
     # position independence across a batch
-    hb, rb = H.hash_ngrams_canonical(["XX" + seq, seq], k)
+    hb, rb = H.window_hashes(*H.utf8_buffers(["XX" + seq, seq]), k=k, num_hashes=1, canonical=True)
     np.testing.assert_array_equal(hb[rb == 0][2:], hb[rb == 1])
 
 
@@ -230,3 +230,44 @@ def test_seed_table_deterministic():
     np.testing.assert_array_equal(H.seed_table(), H.seed_table())
     assert not np.array_equal(H.seed_table(0), H.seed_table(1))
     assert len(set(H.seed_table().tolist())) == 256
+
+
+# One SHA-1 per window_hashes mode over a fixed batch (ACGT, ASCII,
+# multibyte UTF-8 and empty rows; salted seed table), pinned from the
+# separate per-mode kernels that the single fold replaced, so any moved
+# byte of hashes, row ids or strand flags fails.
+_PIN_BATCH = [
+    "ACGTACGTTGCAATCGGCTAGCTTACGTNNacgt",
+    "",
+    "hello world, spaced seeds",
+    "héllo ✓ naïve — ünïcödé 日本語テキスト",
+    "",
+    "GATTACA",
+    "ab",
+    "TTTTGGGGCCCCAAAAACGTACGTAGCTAGCTAGGATCCA",
+]
+_PIN_MODES = {
+    "whole": (dict(k=0, num_hashes=3), "d6506bb0b6b104a832f7b9edcc26d645c5251495"),
+    "kgram": (dict(k=5, num_hashes=3), "c8aba629ff91fdbc8c91bb80c2f7840357bf4e50"),
+    "canonical": (dict(k=7, num_hashes=2, canonical=True), "4f3fbe8ba3a1536293c5eaaa09b9e4a3ed43e56b"),
+    "canonical_strand": (
+        dict(k=7, num_hashes=2, canonical=True, strand=True),
+        "03c6d29106dab0a3581532ecf183eeb940b225c1",
+    ),
+    "spaced_1": (dict(k=4, num_hashes=1, spaced_seeds=["1101", "1011"]), "10854b5b519a48c312b1dd6bc3515fc004723742"),
+    "spaced_2": (dict(k=4, num_hashes=2, spaced_seeds=["1101", "1011"]), "d1f7ae68504e4429646a67c5fed275be7c09dafe"),
+    "canonical_spaced_strand": (
+        dict(k=9, num_hashes=1, spaced_seeds=["110101011", "111000111"], canonical=True, strand=True),
+        "bdc1c36904a1b93c07f66375b3d077557015b314",
+    ),
+}
+
+
+@pytest.mark.parametrize("mode", sorted(_PIN_MODES))
+def test_window_hashes_pinned_digest(mode):
+    import hashlib
+
+    kw, digest = _PIN_MODES[mode]
+    out = H.window_hashes(*H.utf8_buffers(_PIN_BATCH), seeds=H.seed_table(7), **kw)
+    assert all(a.shape[0] > 0 for a in out)
+    assert hashlib.sha1(b"".join(np.ascontiguousarray(a).tobytes() for a in out)).hexdigest() == digest

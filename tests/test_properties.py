@@ -34,7 +34,7 @@ def _naive_window_hash(data: bytes, start: int, k: int, seeds) -> int:
     k=st.integers(min_value=1, max_value=12),
 )
 def test_rolling_hash_matches_naive_any_unicode(strings, k):
-    hashes, rows = H.hash_ngrams(strings, k, 1)
+    hashes, rows = H.window_hashes(*H.utf8_buffers(strings), k=k, num_hashes=1)
     seeds = H.seed_table()
     expect, erow = [], []
     for si, s in enumerate(strings):
@@ -278,15 +278,16 @@ def test_canonical_strand_flag_property(seed, k):
     s = "".join(rng.choice(list("ACGT"), size=int(rng.integers(k, 50))))
     comp = {"A": "T", "T": "A", "C": "G", "G": "C"}
     rc = "".join(comp[c] for c in reversed(s))
-    h1, r1, st1 = H.hash_ngrams_canonical_strand([s], k, 3)
-    h2, r2, st2 = H.hash_ngrams_canonical_strand([rc], k, 3)
+    h1, r1, st1 = H.window_hashes(*H.utf8_buffers([s]), k=k, num_hashes=3, canonical=True, strand=True)
+    h2, r2, st2 = H.window_hashes(*H.utf8_buffers([rc]), k=k, num_hashes=3, canonical=True, strand=True)
     # canonical invariance: same window hashes, reversed order
     np.testing.assert_array_equal(h1, h2[::-1])
     # strand law: st True ⇔ rc fold won STRICTLY (rev < fwd), so the
     # canonical base differs from the forward fold exactly when st set
     can1 = h1[:, 0]
-    fwd = H.hash_ngrams([s], k, 1)[0][:, 0]
-    np.testing.assert_array_equal(st1, can1 != fwd)
+    fwd = H.window_hashes(*H.utf8_buffers([s]), k=k, num_hashes=1)[0][:, 0]
+    assert st1.shape == (h1.shape[0], 1)  # one hStn per frame
+    np.testing.assert_array_equal(st1[:, 0], can1 != fwd)
 
 
 @settings(max_examples=15, deadline=None)
@@ -336,7 +337,7 @@ def test_winnow_selection_laws_property(texts, k, w):
     seeds = H.seed_table(0)
     buf, offs = H._flatten_utf8(texts)
     rows, pos, fp = _winnow_from_buffers(buf, offs, k, w, seeds)
-    all_h, all_rows = H.hash_ngrams(texts, k, 1)
+    all_h, all_rows = H.window_hashes(*H.utf8_buffers(texts), k=k, num_hashes=1)
     for si, s in enumerate(texts):
         data = s.encode("utf-8", "surrogatepass")
         nh = max(len(data) - k + 1, 0)

@@ -29,7 +29,7 @@ def test_spaced_matches_naive():
     rng = np.random.default_rng(42)
     strings = ["".join(chr(c) for c in rng.integers(97, 123, n)) for n in (0, 5, 6, 7, 30)]
     pattern = "110101"
-    hashes, rows = H.hash_ngrams_spaced(strings, pattern, 2)
+    hashes, rows = H.window_hashes(*H.utf8_buffers(strings), k=len(pattern), num_hashes=2, spaced_seeds=[pattern])
     seeds = H.seed_table()
     expect, erows = [], []
     for si, s in enumerate(strings):
@@ -43,35 +43,44 @@ def test_spaced_matches_naive():
 
 def test_masked_positions_ignored():
     pattern = "101"
-    a, _ = H.hash_ngrams_spaced(["axc"], pattern)
-    b, _ = H.hash_ngrams_spaced(["ayc"], pattern)  # differs only at masked pos
-    c, _ = H.hash_ngrams_spaced(["azcq"], pattern)
+    a, _ = H.window_hashes(*H.utf8_buffers(["axc"]), k=3, num_hashes=1, spaced_seeds=[pattern])
+    b, _ = H.window_hashes(*H.utf8_buffers(["ayc"]), k=3, num_hashes=1, spaced_seeds=[pattern])  # differs only at masked pos
+    c, _ = H.window_hashes(*H.utf8_buffers(["azcq"]), k=3, num_hashes=1, spaced_seeds=[pattern])
     np.testing.assert_array_equal(a, b)
     assert int(a[0, 0]) == int(c[0, 0])
     # care-position change → different hash
-    d, _ = H.hash_ngrams_spaced(["bxc"], pattern)
+    d, _ = H.window_hashes(*H.utf8_buffers(["bxc"]), k=3, num_hashes=1, spaced_seeds=[pattern])
     assert int(a[0, 0]) != int(d[0, 0])
 
 
 def test_all_ones_equals_dense():
     strings = ["hello world", "spacedseed"]
-    a, ra = H.hash_ngrams_spaced(strings, "11111", 3)
-    b, rb = H.hash_ngrams(strings, 5, 3)
+    a, ra = H.window_hashes(*H.utf8_buffers(strings), k=5, num_hashes=3, spaced_seeds=["11111"])
+    b, rb = H.window_hashes(*H.utf8_buffers(strings), k=5, num_hashes=3)
     np.testing.assert_array_equal(a, b)
     np.testing.assert_array_equal(ra, rb)
+    # the canonical spaced fold is the canonical k-gram fold too:
+    # hashes, rows and hStn alike
+    dna = ["ACGTTGCAATCGGCTAGCTT", "", "GATTACAGATTACA", "héllo ACGT"]
+    for k in (1, 5, 12):
+        kw = dict(k=k, num_hashes=2, canonical=True, strand=True)
+        spaced = H.window_hashes(*H.utf8_buffers(dna), spaced_seeds=["1" * k], **kw)
+        dense = H.window_hashes(*H.utf8_buffers(dna), **kw)
+        for x, y in zip(spaced, dense):
+            np.testing.assert_array_equal(x, y)
 
 
 def test_multi_seed_layout():
     strings = ["abcdefgh"]
     pats = ["1101", "1011"]
-    h, rows = H.hash_ngrams_multi_seed(strings, pats, 2)
+    h, rows = H.window_hashes(*H.utf8_buffers(strings), k=4, num_hashes=2, spaced_seeds=pats)
     assert h.shape == (5, 4)  # 5 windows, 2 seeds × 2 hashes
-    h1, _ = H.hash_ngrams_spaced(strings, pats[0], 2)
-    h2, _ = H.hash_ngrams_spaced(strings, pats[1], 2)
+    h1, _ = H.window_hashes(*H.utf8_buffers(strings), k=4, num_hashes=2, spaced_seeds=pats[:1])
+    h2, _ = H.window_hashes(*H.utf8_buffers(strings), k=4, num_hashes=2, spaced_seeds=pats[1:])
     np.testing.assert_array_equal(h[:, :2], h1)
     np.testing.assert_array_equal(h[:, 2:], h2)
     with pytest.raises(ValueError):
-        H.hash_ngrams_multi_seed(strings, ["11", "111"])
+        H.window_hashes(*H.utf8_buffers(strings), k=0, num_hashes=1, spaced_seeds=["11", "111"])
 
 
 # ---------------------------------------------------------------------------
@@ -103,8 +112,9 @@ def test_canonical_spaced_kernel_matches_naive_and_rc_invariant():
         care = [i for i, c in enumerate(pattern) if c == "1"]
         s = "".join(rng.choice(list("ACGT"), size=50))
         b = s.encode()
-        h, rows, st = H.hash_ngrams_spaced_canonical_from_buffers(
-            np.frombuffer(b, dtype=np.uint8), np.array([0, len(b)], dtype=np.int64), pattern, 1
+        h, rows, st = H.window_hashes(
+            np.frombuffer(b, dtype=np.uint8), np.array([0, len(b)], dtype=np.int64),
+            k=k, num_hashes=1, spaced_seeds=[pattern], canonical=True, strand=True,
         )
         for t in range(len(b) - k + 1):
             f = 0
@@ -114,11 +124,12 @@ def test_canonical_spaced_kernel_matches_naive_and_rc_invariant():
             for i in care:
                 r ^= rol(int(seeds[comp[b[t + k - 1 - i]]]), k - 1 - i)
             assert int(h[t, 0]) == min(f, r)
-            assert bool(st[t]) == (r < f)
+            assert bool(st[t, 0]) == (r < f)
         # strand neutrality: rc(s) yields the same hashes, reversed
         rcb = _rc(s).encode()
-        h2, _, _ = H.hash_ngrams_spaced_canonical_from_buffers(
-            np.frombuffer(rcb, dtype=np.uint8), np.array([0, len(rcb)], dtype=np.int64), pattern, 1
+        h2, _, _ = H.window_hashes(
+            np.frombuffer(rcb, dtype=np.uint8), np.array([0, len(rcb)], dtype=np.int64),
+            k=k, num_hashes=1, spaced_seeds=[pattern], canonical=True, strand=True,
         )
         np.testing.assert_array_equal(h[:, 0], h2[::-1, 0])
 
@@ -129,6 +140,43 @@ def test_canonical_spaced_requires_symmetric_pattern():
 
     with pytest.raises(ValueError, match="symmetric"):
         BloomFilter(1 << 12, 1, spaced_seeds=["110"], canonical=True)
+
+
+_REFUSED = [
+    (dict(hash_num=1, k=0, canonical=True), "requires k-gram"),
+    (dict(hash_num=2, k=3, spaced_seeds=["101", "1101"]), "share one length"),
+    (dict(hash_num=1, k=4, spaced_seeds=["101"]), "k must equal"),
+    (dict(hash_num=3, k=3, spaced_seeds=["101", "111"]), "hash_num must equal"),
+    (dict(hash_num=1, k=3, spaced_seeds=["110"], canonical=True), "symmetric"),
+]
+
+
+@pytest.mark.parametrize("kw,match", _REFUSED, ids=[m for _, m in _REFUSED])
+def test_hash_mode_refused_by_every_sketch(kw, match):
+    """One parameter check (hashing.check_hash_mode) serves BloomFilter,
+    CountingBloomFilter, MIBloomFilter and window_hashes."""
+    from btl_bloomfilter_spark.operators.bloom import BloomFilter
+    from btl_bloomfilter_spark.operators.counting import CountingBloomFilter
+    from btl_bloomfilter_spark.operators.mibf import MIBloomFilter
+
+    for cls in (BloomFilter, CountingBloomFilter, MIBloomFilter):
+        with pytest.raises(ValueError, match=match):
+            cls(1 << 12, **kw)
+    wkw = {k: v for k, v in kw.items() if k != "hash_num"}
+    if match != "hash_num must equal":
+        with pytest.raises(ValueError, match=match):
+            H.window_hashes(*H.utf8_buffers(["ACGTACGT"]), num_hashes=1, **wkw)
+
+
+def test_hash_mode_k_zero_and_strand():
+    from btl_bloomfilter_spark.operators.bloom import BloomFilter
+    from btl_bloomfilter_spark.operators.mibf import MIBloomFilter
+
+    assert BloomFilter(1 << 12, 1, 0, spaced_seeds=["101"]).k == 3
+    with pytest.raises(ValueError, match="k must equal"):
+        MIBloomFilter(1 << 12, 1, 0, spaced_seeds=["101"])
+    with pytest.raises(ValueError, match="requires canonical"):
+        H.window_hashes(*H.utf8_buffers(["ACGTACGT"]), k=3, num_hashes=1, strand=True)
 
 
 def test_canonical_spaced_bloom_rc_membership():
