@@ -430,13 +430,15 @@ def arrow_utf8_buffers(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
 
 def _strings_of(values) -> list:
     """The library-wide string encoding of a batch: ``None`` → ``""``,
-    non-strings → ``str(v)``.  Arrow arrays, chunked ones too, are read
-    by ``to_pylist`` (a ChunkedArray has no ``tolist``, and iterating it
-    yields Arrow scalars, whose null would read ``"None"``)."""
+    ``bytes``/``bytearray`` kept as raw bytes (hashed like the string
+    they decode to, never as their repr), other non-strings → ``str(v)``.
+    Arrow arrays, chunked ones too, are read by ``to_pylist`` (a
+    ChunkedArray has no ``tolist``, and iterating it yields Arrow
+    scalars, whose null would read ``"None"``)."""
     to_list = getattr(values, "to_pylist", None) or getattr(values, "tolist", None)
     out = []
     for v in (to_list() if to_list else values):
-        out.append(v if isinstance(v, str) else ("" if v is None else str(v)))
+        out.append(v if isinstance(v, (str, bytes, bytearray)) else ("" if v is None else str(v)))
     return out
 
 

@@ -23,6 +23,8 @@ import struct
 from abc import ABC, abstractmethod
 from typing import Any
 
+import numpy as np
+
 
 class Sketch(ABC):
     """Driver/executor-side sketch state (numpy-backed)."""
@@ -112,13 +114,14 @@ class Sketch(ABC):
         return sk
 
     # -- slice-parallel (reduce-scatter) merge support ----------------
-    # Array-register sketches (Bloom, counting, HLL) can split their
-    # state into contiguous byte-range slices: the merge of slice s
-    # needs only slice s of every partial, so a single groupBy(slice)
-    # stage merges with parallelism = n_slices instead of one task — on
-    # a cluster the reduce bandwidth then scales with executors
-    # (classic reduce-scatter), and the driver assembles only the
-    # final m/8 bytes.
+    # Array-register sketches (Bloom, counting, CountSketch) can split
+    # their state into contiguous ranges (``slice_bounds``): the merge
+    # of slice s needs only slice s of every partial, so a single
+    # groupBy(slice) stage merges with parallelism = n_slices instead of
+    # one task — on a cluster the reduce bandwidth then scales with
+    # executors (classic reduce-scatter), and the driver assembles only
+    # the final state.  Counter arrays share one codec (below); Bloom
+    # ships set-bit positions, so its sparse slices OR in sorted runs.
 
     def state_slices(self, n_slices: int) -> list[bytes] | None:
         """Split state into n_slices transportable slices, or None if
@@ -157,3 +160,48 @@ class Sketch(ABC):
                 f"incompatible sketches: {type(self).__name__}{self.params()} "
                 f"vs {type(other).__name__}{other.params()}"
             )
+
+
+# -- counter-array slice codec: [fmt u8][body]; fmt 0 = the range's cells,
+# fmt 1 = u32 indices relative to the range start + their nonzero cells
+
+
+def slice_bounds(n_cells: int, n_slices: int) -> np.ndarray:
+    """The n_slices + 1 bounds of equal contiguous ranges over n_cells."""
+    per = (n_cells + n_slices - 1) // n_slices
+    return np.minimum(np.arange(n_slices + 1, dtype=np.int64) * per, n_cells)
+
+
+def cut_cells(cells: np.ndarray, n_slices: int) -> list[bytes]:
+    """Slices of a flat cell array, each in the smaller format."""
+    bounds = slice_bounds(cells.size, n_slices)
+    out = []
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        chunk = cells[lo:hi]
+        nz = np.flatnonzero(chunk)
+        if nz.size * (4 + chunk.itemsize) < chunk.nbytes:
+            out.append(b"\x01" + nz.astype(np.uint32).tobytes() + chunk[nz].tobytes())
+        else:
+            out.append(b"\x00" + chunk.tobytes())
+    return out
+
+
+def sum_cell_slices(n_cells: int, dtype, slice_idx: int, n_slices: int, blobs: list[bytes]) -> np.ndarray:
+    """Cell-wise sum of every partial's range ``slice_idx``."""
+    bounds = slice_bounds(n_cells, n_slices)
+    size = int(bounds[slice_idx + 1] - bounds[slice_idx])
+    acc = np.zeros(size, dtype)
+    for b in blobs:
+        fmt, body = b[:1], len(b) - 1
+        n, rest = divmod(body, 4 + acc.itemsize)
+        if fmt == b"\x00" and body == acc.nbytes:
+            acc += np.frombuffer(b, dtype, offset=1)
+        elif fmt == b"\x01" and not rest:
+            idx = np.frombuffer(b, np.uint32, count=n, offset=1).astype(np.int64)
+            if n and int(idx.max()) >= size:
+                raise ValueError(f"counter slice index {int(idx.max())} outside a range of {size} cells")
+            np.add.at(acc, idx, np.frombuffer(b, dtype, count=n, offset=1 + 4 * n))
+        else:
+            raise ValueError(f"counter slice of format {fmt!r} with {body} body bytes does not fit {size} cells")
+    return acc
+

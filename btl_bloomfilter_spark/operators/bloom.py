@@ -28,7 +28,7 @@ import numpy as np
 
 from ..functions import hashing as H
 from .. import params as P
-from .base import Sketch
+from .base import Sketch, slice_bounds
 
 _POPCNT_LUT = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(axis=1).astype(np.uint16)
 _BIT_MASKS = np.array([1, 2, 4, 8, 16, 32, 64, 128], dtype=np.uint8)
@@ -436,13 +436,8 @@ class BloomFilter(Sketch):
     # slice range, fmt 1 = ascending uint32 bit-indices RELATIVE to the
     # slice start, chosen whenever it is smaller than the dense bytes.
 
-    def _slice_bounds(self, n_slices: int) -> np.ndarray:
-        per = ((self.m_bits // 8) + n_slices - 1) // n_slices
-        b = np.minimum(np.arange(n_slices + 1, dtype=np.int64) * per, self.m_bits // 8)
-        return b
-
     def state_slices(self, n_slices: int) -> list[bytes]:
-        bounds = [int(b) for b in self._slice_bounds(n_slices)]
+        bounds = [int(b) for b in slice_bounds(self.m_bits // 8, n_slices)]
         out = []
         if not self._dense:
             # every bit still pending: cut the ascending positions at
@@ -475,7 +470,7 @@ class BloomFilter(Sketch):
 
     @classmethod
     def merge_slice_blobs(cls, params: dict, slice_idx: int, n_slices: int, blobs: list[bytes]) -> bytes:
-        bounds = cls(**params)._slice_bounds(n_slices)
+        bounds = slice_bounds(params["m_bits"] // 8, n_slices)
         lo, hi = int(bounds[slice_idx]), int(bounds[slice_idx + 1])
         acc = np.zeros(hi - lo, dtype=np.uint8)
         sparse: list[np.ndarray] = []

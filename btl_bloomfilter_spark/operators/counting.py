@@ -30,7 +30,7 @@ import numpy as np
 
 from ..functions import hashing as H
 from .. import params as P
-from .base import Sketch
+from .base import Sketch, cut_cells, sum_cell_slices
 
 
 class CountingBloomFilter(Sketch):
@@ -211,46 +211,14 @@ class CountingBloomFilter(Sketch):
         return self
 
     # -- slice-parallel merge (reduce-scatter; see plans/agg.py) ------
-    # slice payload: [fmt u8][body]; fmt 0 = dense uint64 counters of
-    # the range, fmt 1 = sparse (uint32 rel idx array + uint64 counts)
-
-    def _slice_bounds(self, n_slices: int) -> "np.ndarray":
-        per = (self.m_counters + n_slices - 1) // n_slices
-        return np.minimum(np.arange(n_slices + 1, dtype=np.int64) * per, self.m_counters)
 
     def state_slices(self, n_slices: int) -> list[bytes]:
-        bounds = self._slice_bounds(n_slices)
-        out = []
-        for s in range(n_slices):
-            lo, hi = int(bounds[s]), int(bounds[s + 1])
-            chunk = self.counters[lo:hi]
-            nz = np.nonzero(chunk)[0]
-            if nz.size * 12 < chunk.size * 8:
-                out.append(b"\x01" + nz.astype(np.uint32).tobytes() + chunk[nz].tobytes())
-            else:
-                out.append(b"\x00" + chunk.tobytes())
-        return out
+        return cut_cells(self.counters, n_slices)
 
     @classmethod
     def merge_slice_blobs(cls, params: dict, slice_idx: int, n_slices: int, blobs: list[bytes]) -> bytes:
-        tmp = cls(**params)
-        bounds = tmp._slice_bounds(n_slices)
-        lo, hi = int(bounds[slice_idx]), int(bounds[slice_idx + 1])
-        acc = np.zeros(hi - lo, dtype=np.uint64)
-        for b in blobs:
-            if b[0] == 0:
-                dense = np.frombuffer(b, dtype=np.uint64, offset=1)
-                if dense.shape[0] != hi - lo:
-                    raise ValueError("slice size mismatch")
-                acc += dense
-            else:
-                body = b[1:]
-                n = len(body) // 12
-                idx = np.frombuffer(body, dtype=np.uint32, count=n)
-                cnt = np.frombuffer(body, dtype=np.uint64, count=n, offset=n * 4)
-                np.add.at(acc, idx.astype(np.int64), cnt)
-        np.minimum(acc, np.uint64(2**63), out=acc)  # merge saturation cap
-        return acc.tobytes()
+        acc = sum_cell_slices(params["m_counters"], np.uint64, slice_idx, n_slices, blobs)
+        return np.minimum(acc, np.uint64(2**63), out=acc).tobytes()  # merge saturation cap
 
     @classmethod
     def assemble_slices(cls, params: dict, slices: list[bytes], n_entry: int, t_entry: int) -> "CountingBloomFilter":

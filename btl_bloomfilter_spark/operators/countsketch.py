@@ -49,7 +49,7 @@ from typing import Any
 import numpy as np
 
 from ..functions import hashing as H
-from .base import Sketch
+from .base import Sketch, cut_cells, sum_cell_slices
 
 __all__ = ["CountSketch"]
 
@@ -156,47 +156,13 @@ class CountSketch(Sketch):
         return self
 
     # -- slice-parallel merge (reduce-scatter; see plans/agg.py) ------
-    # slice payload: [fmt u8][body]; fmt 0 = dense int64 cells of the
-    # range, fmt 1 = sparse (uint32 rel idx + int64 cell values)
-
-    def _slice_bounds(self, n_slices: int) -> np.ndarray:
-        m = self.depth * self.width
-        per = (m + n_slices - 1) // n_slices
-        return np.minimum(np.arange(n_slices + 1, dtype=np.int64) * per, m)
 
     def state_slices(self, n_slices: int) -> list[bytes]:
-        flat = self.table.reshape(-1)
-        bounds = self._slice_bounds(n_slices)
-        out = []
-        for s in range(n_slices):
-            lo, hi = int(bounds[s]), int(bounds[s + 1])
-            chunk = flat[lo:hi]
-            nz = np.nonzero(chunk)[0]
-            if nz.size * 12 < chunk.size * 8:
-                out.append(b"\x01" + nz.astype(np.uint32).tobytes() + chunk[nz].tobytes())
-            else:
-                out.append(b"\x00" + chunk.tobytes())
-        return out
+        return cut_cells(self.table.reshape(-1), n_slices)
 
     @classmethod
     def merge_slice_blobs(cls, params: dict, slice_idx: int, n_slices: int, blobs: list[bytes]) -> bytes:
-        tmp = cls(**params)
-        bounds = tmp._slice_bounds(n_slices)
-        lo, hi = int(bounds[slice_idx]), int(bounds[slice_idx + 1])
-        acc = np.zeros(hi - lo, dtype=np.int64)
-        for b in blobs:
-            if b[0] == 0:
-                dense = np.frombuffer(b, dtype=np.int64, offset=1)
-                if dense.shape[0] != hi - lo:
-                    raise ValueError("slice size mismatch")
-                acc += dense
-            else:
-                body = b[1:]
-                n = len(body) // 12
-                idx = np.frombuffer(body, dtype=np.uint32, count=n)
-                val = np.frombuffer(body, dtype=np.int64, count=n, offset=n * 4)
-                np.add.at(acc, idx.astype(np.int64), val)
-        return acc.tobytes()
+        return sum_cell_slices(params["depth"] * params["width"], np.int64, slice_idx, n_slices, blobs).tobytes()
 
     @classmethod
     def assemble_slices(cls, params: dict, slices: list[bytes], n_entry: int, t_entry: int) -> "CountSketch":

@@ -11,16 +11,19 @@ commutative merge combines them, so partition order never matters
 
 R = max(16, min(256, 2·defaultParallelism)).  The coalesce is narrow:
 it does nothing for inputs of ≤ R partitions and otherwise caps the
-kernel at R tasks without a shuffle.  The kernel feeds a string column
-to a sketch with ``update_arrow`` as the Arrow array (the hashing
-sketches read its UTF-8 buffers zero-copy) and every other column to
-``update()`` through PySpark's own Arrow→pandas conversion, then emits
-``state_slices(R)`` rows; a sketch with no byte-range layout emits one
-whole-blob row.  Sliced sketches merge by a groupBy(slice)
-reduce-scatter: each of R reduce tasks merges one byte range of every
-partial and the driver concatenates m/8 bytes.  One-row sketches
-collect ≤ R blobs and merge on the driver.  Either way driver and
-per-reducer memory are bounded by R, not by the input's partitions.
+kernel at R tasks without a shuffle.  One kernel builds every partial,
+one sketch per (partition, key tuple): ``build_sketch`` passes no keys
+(one sketch per partition) and ``sketch_by_key`` its group keys.  It
+feeds a string column to a sketch with ``update_arrow`` as the Arrow
+array (the hashing sketches read its UTF-8 buffers zero-copy) and every
+other column to ``update()`` through PySpark's own Arrow→pandas
+conversion, then emits ``state_slices(R)`` rows; a sketch with no
+byte-range layout, or a keyed one, emits one whole-blob row.  Sliced
+sketches merge by a groupBy(slice) reduce-scatter: each of R reduce
+tasks merges one byte range of every partial and the driver
+concatenates the ranges.  One-row sketches collect ≤ R blobs and merge
+on the driver.  Either way driver and per-reducer memory are bounded by
+R, not by the input's partitions.
 
 Checkpointing (north_rule): with ``checkpoint_dir`` the kernel output
 is persisted to a Parquet state table with partition ids, lineage and
@@ -78,6 +81,7 @@ def _pandas_conversion(timezone: str):
 
 def _kernel(
     make_sketch: Callable[[], Sketch],
+    keys: Sequence[str],
     col: str,
     n_slices: int | None,
     *,
@@ -85,44 +89,73 @@ def _kernel(
     timezone: str,
     with_metrics: bool,
 ):
-    """mapInArrow body: one sketch per partition → ``state_slices(n_slices)``
-    rows, or one whole-blob row when ``n_slices`` is None or the sketch
-    has no byte-range layout.  Partition counters ride on the first row;
-    so do ``pid`` and ``metrics`` when checkpointing (``metrics()`` is
-    not free: a Bloom popcount costs ~40 ms per 8 MiB partial)."""
+    """mapInArrow body: one sketch per (partition, key tuple) — with no
+    keys exactly one per partition, an empty one included.  Each sketch
+    emits its key columns and ``state_slices(n_slices)`` rows, or one
+    whole-blob row when ``n_slices`` is None or the sketch has no
+    byte-range layout.  Its counters ride on its first row; so do
+    ``pid`` and ``metrics`` when checkpointing (``metrics()`` is not
+    free: a Bloom popcount costs ~40 ms per 8 MiB partial)."""
 
     def fn(batches):
+        import numpy as np
         import pyarrow as pa
         from pyspark import TaskContext
 
-        sk = make_sketch()
-        if arrow:
-            update = sk.update_arrow
-        else:
-            to_pandas = _pandas_conversion(timezone)
-            update = lambda arr: sk.update(to_pandas(arr))
-        n_rows = 0
+        to_pandas = None if arrow else _pandas_conversion(timezone)
+        states: dict[tuple, Sketch] = {} if keys else {(): make_sketch()}
+        n_rows: dict[tuple, int] = {}
+        key_types: list = []
         for rb in batches:
-            update(rb.column(rb.schema.get_field_index(col)))
-            n_rows += rb.num_rows
-        blobs = sk.state_slices(n_slices) if n_slices else None
-        if blobs is None:
-            blobs = [sk.serialize()]
-        pad = [0] * (len(blobs) - 1)
-        arrays = [
-            pa.array(range(len(blobs)), pa.int64()),
-            pa.array(blobs, pa.binary()),
-            pa.array([n_rows] + pad, pa.int64()),
-            pa.array([getattr(sk, "n_entry", 0)] + pad, pa.int64()),
-            pa.array([getattr(sk, "t_entry", 0)] + pad, pa.int64()),
-        ]
-        names = list(_SLICED_COLS)
-        if with_metrics:
-            pid = TaskContext.get().partitionId()
-            arrays.append(pa.array([pid] * len(blobs), pa.int64()))
-            arrays.append(pa.array([json.dumps(sk.metrics())] + [None] * len(pad), pa.string()))
-            names += ["pid", "metrics"]
-        yield pa.record_batch(arrays, names=names)
+            vals = rb.column(rb.schema.get_field_index(col))
+            spans = [((), 0, rb.num_rows)]  # (key, start, len)
+            if keys:
+                key_types = [rb.schema.field(k).type for k in keys]
+                # ONE take per batch: gather rows permuted into key order,
+                # then hand each key a zero-copy contiguous slice — with
+                # many keys this beats a per-key take by the number of keys
+                groups = rb.select(list(keys)).to_pandas().groupby(list(keys), dropna=False, sort=False)
+                spans, idx_blocks, pos = [], [], 0
+                for kv, sub in groups:
+                    ix = sub.index.to_numpy()
+                    idx_blocks.append(ix)
+                    spans.append((kv if isinstance(kv, tuple) else (kv,), pos, ix.size))
+                    pos += ix.size
+                if not spans:
+                    continue
+                vals = vals.take(pa.array(np.concatenate(idx_blocks)))
+            if not arrow:
+                vals = to_pandas(vals)
+            for kv, start, ln in spans:
+                sk = states.get(kv)
+                if sk is None:
+                    sk = states[kv] = make_sketch()
+                if arrow:
+                    sk.update_arrow(vals.slice(start, ln))
+                else:
+                    sk.update(vals.iloc[start : start + ln])
+                n_rows[kv] = n_rows.get(kv, 0) + ln
+        names = [*keys, *_SLICED_COLS] + (["pid", "metrics"] if with_metrics else [])
+        for kv, sk in states.items():
+            blobs = sk.state_slices(n_slices) if n_slices else None
+            if blobs is None:
+                blobs = [sk.serialize()]
+            pad = [0] * (len(blobs) - 1)
+            # explicit key types: pa.array([None]) is null-typed and the
+            # JVM cannot read it as the declared key column (null keys
+            # crashed the job; pandas NaN keys normalize back to null)
+            arrays = [pa.array([None if pd.isna(v) else v] * len(blobs), t) for v, t in zip(kv, key_types)]
+            arrays += [
+                pa.array(range(len(blobs)), pa.int64()),
+                pa.array(blobs, pa.binary()),
+                pa.array([n_rows.get(kv, 0)] + pad, pa.int64()),
+                pa.array([getattr(sk, "n_entry", 0)] + pad, pa.int64()),
+                pa.array([getattr(sk, "t_entry", 0)] + pad, pa.int64()),
+            ]
+            if with_metrics:
+                arrays.append(pa.array([TaskContext.get().partitionId()] * len(blobs), pa.int64()))
+                arrays.append(pa.array([json.dumps(sk.metrics())] + [None] * len(pad), pa.string()))
+            yield pa.record_batch(arrays, names=names)
 
     return fn
 
@@ -146,6 +179,7 @@ def _partials(
         sdf = sdf.repartition(repartition)
     kernel = _kernel(
         make_sketch,
+        (),
         col,
         n_slices,
         arrow=_uses_arrow(proto, sdf, col),
@@ -156,18 +190,19 @@ def _partials(
     return sdf.coalesce(_n_slices(spark)).mapInArrow(kernel, schema)
 
 
-def _driver_merge(partials: DataFrame) -> Sketch | None:
+def _driver_merge(partials: DataFrame, proto: Sketch) -> Sketch:
     """Collect the whole-blob rows (≤ R) and merge them on the driver;
-    None when the input had no partitions."""
+    ``proto`` (the empty sketch) when the input had no partitions."""
     blobs = [bytes(r["blob"]) for r in partials.select("blob").collect()]
-    return Sketch.merge_blobs(blobs) if blobs else None
+    return Sketch.merge_blobs(blobs) if blobs else proto
 
 
-def merged_partials(df: DataFrame, col: str, make_sketch: Callable[[], Sketch]) -> Sketch | None:
+def merged_partials(df: DataFrame, col: str, make_sketch: Callable[[], Sketch]) -> Sketch:
     """The build kernel with whole-blob rows, merged on the driver: no
-    shuffle, for small inputs such as streaming micro-batches.  None
-    when the input has no partitions."""
-    return _driver_merge(_partials(df, col, make_sketch, make_sketch(), None))
+    shuffle, for small inputs such as streaming micro-batches.  The
+    empty sketch when the input has no partitions."""
+    proto = make_sketch()
+    return _driver_merge(_partials(df, col, make_sketch, proto, None), proto)
 
 
 def _merge_slices(partials: DataFrame, proto: Sketch, n_slices: int) -> Sketch:
@@ -255,8 +290,7 @@ def build_sketch(
         partials = _partials(df, col, make_sketch, proto, n_slices, repartition=repartition)
     if n_slices is not None:
         return _merge_slices(partials, proto, n_slices)
-    merged = _driver_merge(partials)
-    return proto if merged is None else merged
+    return _driver_merge(partials, proto)
 
 
 def require_local_checkpoint_dir(checkpoint_dir: str) -> None:
@@ -301,65 +335,6 @@ def _checkpoint_record(checkpoint_dir: str, identity: dict) -> dict | None:
 # ---------------------------------------------------------------------------
 
 
-def _grouped_kernel(
-    make_sketch: Callable[[], Sketch], keys: Sequence[str], col: str, *, arrow: bool, timezone: str
-):
-    """mapInArrow body: one partial sketch per (partition, key).  Only
-    the (short) key columns are materialized to python; the value
-    column follows the build kernel's rule — Arrow string slices to a
-    sketch with ``update_arrow``, PySpark's pandas conversion otherwise."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        to_pandas = None if arrow else _pandas_conversion(timezone)
-        states: dict[tuple, Sketch] = {}
-        key_types: list = []
-        for rb in batches:
-            vals = rb.column(rb.schema.get_field_index(col))
-            key_types = [rb.schema.field(k).type for k in keys]
-            key_pdf = rb.select(list(keys)).to_pandas()
-            # ONE take per batch: gather rows permuted into key order,
-            # then hand each key a zero-copy contiguous slice — with
-            # many keys this beats a per-key take by the number of keys
-            groups = key_pdf.groupby(list(keys), dropna=False, sort=False)
-            idx_blocks = []
-            spans: list[tuple] = []  # (key, start, len)
-            pos = 0
-            for kv, sub in groups:
-                if not isinstance(kv, tuple):
-                    kv = (kv,)
-                ix = sub.index.to_numpy()
-                idx_blocks.append(ix)
-                spans.append((kv, pos, ix.size))
-                pos += ix.size
-            if not spans:
-                continue
-            ordered = vals.take(pa.array(np.concatenate(idx_blocks)))
-            if not arrow:
-                ordered = to_pandas(ordered)
-            for kv, start, ln in spans:
-                sk = states.get(kv)
-                if sk is None:
-                    sk = states[kv] = make_sketch()
-                if arrow:
-                    sk.update_arrow(ordered.slice(start, ln))
-                else:
-                    sk.update(ordered.iloc[start : start + ln])
-        for kv, sk in states.items():
-            # explicit key types: pa.array([None]) is null-typed and the
-            # JVM cannot read it as the declared key column (null keys
-            # crashed the job; pandas NaN keys normalize back to null)
-            arrays = [
-                pa.array([None if pd.isna(v) else v], type=t) for v, t in zip(kv, key_types)
-            ]
-            arrays.append(pa.array([sk.serialize()], pa.binary()))
-            yield pa.record_batch(arrays, names=list(keys) + ["blob"])
-
-    return fn
-
-
 def sketch_by_key(
     df: DataFrame,
     keys: Sequence[str],
@@ -387,18 +362,21 @@ def sketch_by_key(
     """
     keys = list(keys)
     key_schema = key_schema or _key_schema(df, keys)
-    partial_schema = f"{key_schema}, blob binary"
-    out_schema = f"{key_schema}, {out_col} {out_type}"
 
-    sdf = df.select(*keys, col)
-    kernel = _grouped_kernel(
+    # the kernel sees the keys as __key<i>: a key may be named like a kernel column
+    tmp = [f"__key{i}" for i in range(len(keys))]
+    sdf = df.select(*[F.col(k).alias(t) for k, t in zip(keys, tmp)], col)
+    kernel = _kernel(
         make_sketch,
-        keys,
+        tmp,
         col,
+        None,
         arrow=_uses_arrow(make_sketch(), sdf, col),
         timezone=df.sparkSession.conf.get("spark.sql.session.timeZone"),
+        with_metrics=False,
     )
-    partials = sdf.mapInArrow(kernel, partial_schema)
+    partials = sdf.mapInArrow(kernel, f"{_key_schema(sdf, tmp)}, {SLICED_SCHEMA}")
+    partials = partials.select(*[F.col(t).alias(k) for t, k in zip(tmp, keys)], "blob")
 
     def _merge_partition_fn(group_cols: list[str], payload_col: str, emit):
         """mapInPandas body: merge blobs per key WITHIN a hash-
@@ -448,5 +426,5 @@ def sketch_by_key(
 
     emit = (lambda sk: float(finalize(sk))) if out_type == "double" else finalize
     return partials.repartition(*[F.col(k) for k in keys]).mapInPandas(
-        _merge_partition_fn(keys, out_col, emit), out_schema
+        _merge_partition_fn(keys, out_col, emit), f"{key_schema}, {out_col} {out_type}"
     )

@@ -35,33 +35,29 @@ from pyspark.sql import DataFrame
 from ..operators.base import Sketch
 from ..plans.agg import _key_schema, merged_partials
 
-_STATE_MAGIC_V1 = b"BFSTRM01"  # magic + int64 last batch_id + blob
 _STATE_MAGIC = b"BFSTRM02"  # magic + int64 batch_id + u32 len + lineage + blob
 
 
 def _read_state(path: Path) -> tuple[int, str, Sketch | None]:
-    """(last_merged_batch_id, lineage, sketch) — accepts the v1 and
-    bare-blob legacy layouts (lineage='' there)."""
+    """(last_merged_batch_id, lineage, sketch); (-1, "", None) when the
+    file is absent."""
     if not path.exists():
         return -1, "", None
     raw = path.read_bytes()
-    if raw[:8] == _STATE_MAGIC:
-        last_id, ln = struct.unpack("<qI", raw[8:20])
-        lineage = raw[20 : 20 + ln].decode()
-        return last_id, lineage, Sketch.deserialize(raw[20 + ln :])
-    if raw[:8] == _STATE_MAGIC_V1:
-        (last_id,) = struct.unpack("<q", raw[8:16])
-        return last_id, "", Sketch.deserialize(raw[16:])
-    return -1, "", Sketch.deserialize(raw)
+    if raw[:8] != _STATE_MAGIC:
+        raise ValueError(f"{path} is not a streaming state file (no {_STATE_MAGIC.decode()} header)")
+    last_id, ln = struct.unpack("<qI", raw[8:20])
+    lineage = raw[20 : 20 + ln].decode()
+    return last_id, lineage, Sketch.deserialize(raw[20 + ln :])
 
 
 def _read_state_for(path: Path, lineage: str) -> tuple[int, Sketch | None]:
     """(last_merged_batch_id, sketch) of a state file this query may
     use.  Batch ids are only meaningful WITHIN one checkpoint lineage
     (a fresh checkpoint restarts them at 0 and regroups source files),
-    so a sketch stored under any other lineage — the empty one of a
-    legacy layout or of ``merge_batch_into(lineage="")`` included —
-    raises instead of silently dropping or double-counting batches."""
+    so a sketch stored under any other lineage — the empty one of
+    ``merge_batch_into(lineage="")`` included — raises instead of
+    silently dropping or double-counting batches."""
     last_id, stored, sketch = _read_state(path)
     if sketch is not None and stored != lineage:
         raise ValueError(
@@ -104,30 +100,25 @@ def merge_batch_into(
     col: str,
     make_sketch: Callable[[], Sketch],
     *,
-    batch_id: int | None = None,
+    batch_id: int,
     lineage: str = "",
 ) -> Sketch:
     """Build a sketch of batch_df[col] and merge it into the sketch
     persisted at running_path (created if absent).  Atomic replace.
 
-    With ``batch_id`` (foreachBatch's micro-batch id) the merge is an
+    ``batch_id`` (foreachBatch's micro-batch id) makes the merge an
     idempotent replay guard: a batch whose id is <= the persisted
     last-merged id is skipped, so at-least-once redelivery never
-    double-counts.  ``lineage`` — the checkpoint identity — is persisted
-    with the state; a state file of another lineage raises
-    (:func:`_read_state_for`)."""
+    double-counts; an empty batch still advances the id.  ``lineage``
+    — the checkpoint identity — is persisted with the state; a state
+    file of another lineage raises (:func:`_read_state_for`)."""
     running_path = Path(running_path)
     last_id, running = _read_state_for(running_path, lineage)
-    if batch_id is not None and batch_id <= last_id:
+    if batch_id <= last_id:
         return running if running is not None else make_sketch()
     batch_sketch = merged_partials(batch_df, col, make_sketch)
-    if batch_sketch is None:
-        return running if running is not None else make_sketch()
-    if running is not None:
-        running.merge(batch_sketch)
-    else:
-        running = batch_sketch
-    _write_state(running_path, batch_id if batch_id is not None else last_id, lineage, running)
+    running = batch_sketch if running is None else running.merge(batch_sketch)
+    _write_state(running_path, batch_id, lineage, running)
     return running
 
 
@@ -545,9 +536,7 @@ def stream_dedup(
                 )
             )
             add = merged_partials(kept, col, make_bloom)
-            running = bloom if bloom is not None else make_bloom()
-            if add is not None:
-                running = running.merge(add)
+            running = add if bloom is None else bloom.merge(add)
             _write_state(state_path, batch_id, str(checkpoint_dir), running)
         finally:
             kept.unpersist()

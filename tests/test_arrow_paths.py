@@ -162,6 +162,19 @@ def test_queries_arrow_equal_list(mk):
             assert sk.serialize() == ref_sk.serialize(), name
 
 
+def _one_block_xor(keys):
+    """A one-block XorFilter of ``keys``, solved locally by the block
+    solver of the distributed build."""
+    from btl_bloomfilter_spark.operators import xorfilter
+
+    xf = xorfilter.XorFilter(fp_bits=16, n_keys=len(keys))
+    seed, seglen, fps = xorfilter._build_block(H.hash_strings(keys, 1)[:, 0], 0, 0, 16)
+    xf.seeds, xf.seglens = np.array([seed]), np.array([seglen])
+    xf.fps = np.frombuffer(fps, dtype=np.uint16).copy()
+    xf.offsets = np.array([0, 3 * seglen])
+    return xf
+
+
 def test_sequence_sketches_chunked_nulls_equal_list():
     """The sketches that read strings through ``_strings_of`` see a null
     of a chunked Arrow array as ``None`` → ``""``, exactly like the list
@@ -169,7 +182,7 @@ def test_sequence_sketches_chunked_nulls_equal_list():
     as the string "None").  XorFilter and CuckooFilter are static, so
     they are checked through ``contains_batch`` of a filter holding
     ``""``; IBLT through ``update``."""
-    from btl_bloomfilter_spark.operators import cuckoo, xorfilter
+    from btl_bloomfilter_spark.operators import cuckoo
     from btl_bloomfilter_spark.operators.iblt import IBLT
 
     values = ["a", None, "b", None, "c"]
@@ -178,11 +191,7 @@ def test_sequence_sketches_chunked_nulls_equal_list():
     # one-block filters of ``keys``, solved locally by the block solvers
     # of the distributed builds
     u = H.hash_strings(keys, 1)[:, 0]
-    xf = xorfilter.XorFilter(fp_bits=16, n_keys=len(keys))
-    seed, seglen, fps = xorfilter._build_block(u, 0, 0, 16)
-    xf.seeds, xf.seglens = np.array([seed]), np.array([seglen])
-    xf.fps = np.frombuffer(fps, dtype=np.uint16).copy()
-    xf.offsets = np.array([0, 3 * seglen])
+    xf = _one_block_xor(keys)
     cf = cuckoo.CuckooFilter(fp_bits=16, n_keys=len(keys))
     seed, nbuckets, table = cuckoo._build_block(u, 0, 0, 16)
     cf.seeds, cf.nbuckets = np.array([seed]), np.array([nbuckets])
@@ -196,3 +205,40 @@ def test_sequence_sketches_chunked_nulls_equal_list():
     a.update(values)
     b.update(chunked)
     assert a.serialize() == b.serialize()
+
+
+BYTES = [b"abc", None, b"", "h\u00e9llo \u2713".encode(), b"the quick brown fox"]
+DECODED = [None if b is None else b.decode() for b in BYTES]
+
+
+@pytest.mark.parametrize(
+    "mk",
+    [
+        lambda: BloomFilter(1 << 12, 2, 0),
+        lambda: BloomFilter(1 << 12, 2, 3),
+        lambda: HyperLogLog(p=10),
+        lambda: CountMinSketch(512, 4),
+    ],
+    ids=["bloom-k0", "bloom-k3", "hll", "cms"],
+)
+def test_bytes_hash_as_their_decoded_strings(mk):
+    """``bytes`` values (a list, a ``bytearray``, an Arrow ``binary``
+    array with a null) are hashed as their raw bytes, i.e. like the
+    strings they decode to — never as their repr ``"b'abc'"``."""
+    want = mk()
+    want.update(DECODED)
+    for values in (BYTES, [bytearray(b) if b else b for b in BYTES], pa.array(BYTES, pa.binary())):
+        got = mk()
+        got.update(values)
+        assert got.serialize() == want.serialize()
+
+
+def test_bytes_probe_a_xor_filter_as_their_decoded_strings():
+    """XorFilter is static (no ``update``): a filter holding the decoded
+    strings answers a bytes list and an Arrow ``binary`` array like the
+    strings."""
+    xf = _one_block_xor([d for d in DECODED if d] + [f"key {i}" for i in range(200)])
+    expect = xf.contains_batch(DECODED)
+    assert expect[[0, 3, 4]].all()
+    for values in (BYTES, pa.array(BYTES, pa.binary())):
+        np.testing.assert_array_equal(xf.contains_batch(values), expect)

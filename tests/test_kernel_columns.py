@@ -3,7 +3,8 @@ through PySpark's own Arrow→pandas conversion — the one mapInPandas
 applies, session time zone included — so a sketch sees exactly the
 values the pandas UDF path gave it.  Checked against a driver-local
 ``update()`` over the series mapInPandas delivers, under a non-UTC
-session time zone, for the whole-sketch and the grouped kernel."""
+session time zone, for the one build kernel with no keys
+(``build_sketch``) and with group keys (``sketch_by_key``)."""
 
 import pickle
 

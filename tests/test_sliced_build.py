@@ -14,6 +14,8 @@ import numpy as np
 import pytest
 
 from btl_bloomfilter_spark.operators.bloom import BloomFilter
+from btl_bloomfilter_spark.operators.counting import CountingBloomFilter
+from btl_bloomfilter_spark.operators.countsketch import CountSketch
 
 R = 9
 SWEEP = (1, 3, R, 2 * R + 5)
@@ -198,3 +200,26 @@ def test_empty_input_returns_empty_sketch(spark, shape):
     assert df.rdd.getNumPartitions() == (3 if shape == "empty_partitions" else 0)
     for mk in (lambda: BloomFilter(1 << 12, 3, 4), lambda: HyperLogLog(p=8)):
         assert build_sketch(df, "text", mk).serialize() == mk().serialize()
+
+
+@pytest.mark.parametrize(
+    "mk,cell",
+    [(lambda: CountingBloomFilter(1000, 3, 0), np.uint64), (lambda: CountSketch(250, 4), np.int64)],
+    ids=["counting", "countsketch"],
+)
+@pytest.mark.parametrize("defect", ["format_2", "cut_mid_entry", "index_outside"])
+def test_counter_slice_decoder_rejects_malformed(mk, cell, defect):
+    """A counter slice with an unknown format byte, a sparse body cut
+    mid-entry or an index past its range (4 slices of 1000 cells: 250)
+    raises ValueError instead of being misread."""
+    sk = mk()
+    sk.update(["a", "b"])
+    s, good = next((i, b) for i, b in enumerate(sk.state_slices(4)) if b[:1] == b"\x01" and len(b) > 1)
+    bad = {
+        "format_2": b"\x02" + good[1:],
+        "cut_mid_entry": good[:-3],
+        "index_outside": b"\x01" + np.array([250], np.uint32).tobytes() + np.array([1], cell).tobytes(),
+    }[defect]
+    type(sk).merge_slice_blobs(sk.params(), s, 4, [good])  # the intact slice decodes
+    with pytest.raises(ValueError):
+        type(sk).merge_slice_blobs(sk.params(), s, 4, [good, bad])

@@ -137,6 +137,52 @@ def test_state_rejects_foreign_checkpoint_lineage(spark, tmp_path):
 
 
 @pytest.mark.spark
+@pytest.mark.parametrize("layout", ["v1", "bare_blob"])
+def test_state_file_of_another_layout_raises(spark, tmp_path, layout):
+    """Only the BFSTRM02 layout is a state file: an older header or a
+    bare ``Sketch.serialize()`` blob raises, naming the path, from both
+    ``load_running`` and ``merge_batch_into``."""
+    import struct
+
+    from btl_bloomfilter_spark.streaming.accumulate import merge_batch_into
+
+    mk = lambda: BloomFilter(1 << 12, 3, 0)
+    sk = mk()
+    sk.update(["x", "y"])
+    state = tmp_path / "old.sketch"
+    head = b"BFSTRM01" + struct.pack("<q", 4) if layout == "v1" else b""
+    state.write_bytes(head + sk.serialize())
+    with pytest.raises(ValueError, match="old.sketch"):
+        load_running(state)
+    bdf = spark.createDataFrame([("x",)], "text string")
+    with pytest.raises(ValueError, match="old.sketch"):
+        merge_batch_into(state, bdf, "text", mk, batch_id=5)
+    assert state.read_bytes() == head + sk.serialize()
+
+
+@pytest.mark.spark
+def test_zero_partition_batch_advances_batch_id(spark, tmp_path):
+    """A micro-batch with no partitions merges the empty sketch: the
+    state file records its id, like a zero-row batch, so a replay of
+    that id is skipped."""
+    from btl_bloomfilter_spark.operators.counting import CountingBloomFilter
+    from btl_bloomfilter_spark.streaming.accumulate import _read_state, merge_batch_into
+
+    mk = lambda: CountingBloomFilter(1 << 12, 3, 0, counter_bits=32)
+    state = tmp_path / "empty.sketch"
+    bdf = spark.createDataFrame([("x",)] * 3, "text string")
+    empty = bdf.where("false")
+    assert empty.rdd.getNumPartitions() == 0
+    merge_batch_into(state, empty, "text", mk, batch_id=7)
+    last_id, _, sk = _read_state(state)
+    assert last_id == 7 and sk.serialize() == mk().serialize()
+    merge_batch_into(state, bdf, "text", mk, batch_id=7)  # replay: skipped
+    assert load_running(state).estimate_batch(["x"])[0] == 0
+    merge_batch_into(state, bdf, "text", mk, batch_id=8)
+    assert load_running(state).estimate_batch(["x"])[0] == 3
+
+
+@pytest.mark.spark
 def test_probe_and_classify_work_on_streams(spark, tmp_path):
     """The broadcast probe paths are plain maps, so they must compose
     with Structured Streaming unchanged: a file-source stream screened

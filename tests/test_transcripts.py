@@ -163,6 +163,19 @@ def test_sketch_by_key_with_salting(spark, tdf):
     assert a == b  # register-max merge is exact regardless of salting
 
 
+@pytest.mark.parametrize("salt", [None, 3])
+def test_sketch_by_key_keys_named_like_kernel_columns(spark, tdf, salt):
+    """Keys named like the build kernel's row columns (``slice``,
+    ``n_rows``) group exactly as the same keys under other names."""
+    hll = lambda: HyperLogLog(p=10)
+    two = "cast(turn_idx % 2 as bigint)"
+    named = tdf.selectExpr("role as slice", f"{two} as n_rows", "conv_id")
+    got = sketch_by_key(named, ["slice", "n_rows"], "conv_id", hll, lambda s: s.estimate(), "est", salt_partitions=salt)
+    plain = tdf.selectExpr("role", f"{two} as half", "conv_id")
+    want = sketch_by_key(plain, ["role", "half"], "conv_id", hll, lambda s: s.estimate(), "est", salt_partitions=salt)
+    assert {(r.slice, r.n_rows): r.est for r in got.collect()} == {(r.role, r.half): r.est for r in want.collect()}
+
+
 @pytest.mark.spark
 def test_build_sketches_job_end_to_end(spark, tmp_path):
     """The north-rule spark-submit job: full sketch suite over a

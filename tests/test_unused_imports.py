@@ -24,6 +24,7 @@ CORE = [
     "operators/kll.py",
     "operators/tdigest.py",
     "operators/counting.py",
+    "operators/countsketch.py",
     "operators/topk.py",
     "operators/mibf.py",
     "plans/agg.py",
