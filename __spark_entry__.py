@@ -693,7 +693,7 @@ def q31_distinct_convs_by_role(spark, sf_dir):
     t = _transcripts_for(spark, sf_dir)
     est = sketch_by_key(
         t, ["role"], "conv_id", lambda: HyperLogLog(p=13), lambda s: s.estimate(), "hll_est",
-        salt_partitions=4,  # hot conv_id prefixes (north_rule skew note)
+        salt_partitions=4,  # accepted; adds no stage (the one-wave kernel bounds a hot key's fan-in)
     )
     exact = t.groupBy("role").agg(F.countDistinct("conv_id").alias("exact"))
     bound = 4 * 1.04 / np.sqrt(1 << 13)

@@ -6,24 +6,32 @@ every partition builds a private sketch and an associative,
 commutative merge combines them, so partition order never matters
 (tests verify under permutations).  ``build_sketch`` is one plan:
 
-    scan (column-pruned) → [repartition] → coalesce(R) →
+    scan (column-pruned) → [repartition] → coalesce(W) →
     mapInArrow kernel → merge → driver finalize
 
-R = max(16, min(256, 2·defaultParallelism)).  The coalesce is narrow:
-it does nothing for inputs of ≤ R partitions and otherwise caps the
-kernel at R tasks without a shuffle.  One kernel builds every partial,
-one sketch per (partition, key tuple): ``build_sketch`` passes no keys
-(one sketch per partition) and ``sketch_by_key`` its group keys.  It
-feeds a string column to a sketch with ``update_arrow`` as the Arrow
-array (the hashing sketches read its UTF-8 buffers zero-copy) and every
-other column to ``update()`` through PySpark's own Arrow→pandas
-conversion, then emits ``state_slices(R)`` rows; a sketch with no
-byte-range layout, or a keyed one, emits one whole-blob row.  Sliced
-sketches merge by a groupBy(slice) reduce-scatter: each of R reduce
-tasks merges one byte range of every partial and the driver
-concatenates the ranges.  One-row sketches collect ≤ R blobs and merge
-on the driver.  Either way driver and per-reducer memory are bounded by
-R, not by the input's partitions.
+R = max(16, min(256, 2·defaultParallelism)) is the slice count of the
+reduce-scatter merge.  The kernel width W has two values.  A sketch
+with a byte-range layout (Bloom, counting Bloom, CountSketch) keeps
+W = R: its partial grows with the input it sees, and a Bloom partial
+fed two partitions' windows passes its m/8 pending-position cap and
+folds into the dense array.  Every other sketch emits one small blob
+per task, so it runs one wave, W = min(defaultParallelism, R): a Python
+task costs 60–130 ms whatever its work, and a second wave of them costs
+more than the kernel.  The coalesce is narrow: it does nothing for
+inputs of ≤ W partitions and otherwise caps the kernel at W tasks
+without a shuffle.  One kernel builds every partial, one sketch per
+(task, key tuple): ``build_sketch`` passes no keys (one sketch per
+task) and ``sketch_by_key`` its group keys.  It feeds a string column
+to a sketch with ``update_arrow`` as the Arrow array (the hashing
+sketches read its UTF-8 buffers zero-copy) and every other column to
+``update()`` through PySpark's own Arrow→pandas conversion, then emits
+``state_slices(R)`` rows; a sketch with no byte-range layout, or a
+keyed one, emits one whole-blob row.  Sliced sketches merge by a
+groupBy(slice) reduce-scatter: each of R reduce tasks merges one byte
+range of every partial and the driver concatenates the ranges.
+One-row sketches collect ≤ W blobs and merge on the driver.  Either
+way driver and per-reducer memory are bounded by R, not by the input's
+partitions.
 
 Checkpointing (north_rule): with ``checkpoint_dir`` the kernel output
 is persisted to a Parquet state table with partition ids, lineage and
@@ -48,12 +56,22 @@ _SLICED_COLS = [c.split()[0] for c in SLICED_SCHEMA.split(", ")]
 #: bumped whenever the persisted kernel rows change shape, so a state
 #: table written by another layout is rebuilt instead of misread
 _CHECKPOINT_LAYOUT = 2
+#: live keyed sketches one kernel task holds before it emits them all
+#: and starts over: worker memory is this many sketches, whatever the
+#: number of keys in the input
+_KERNEL_MAX_KEYS = 1024
 
 
 def _n_slices(spark: SparkSession) -> int:
-    """R: the slice count of the reduce-scatter merge, and the bound on
-    kernel tasks and on blobs collected to the driver."""
+    """R: the slice count of the reduce-scatter merge, and the kernel
+    width of a sliced build."""
     return max(16, min(256, spark.sparkContext.defaultParallelism * 2))
+
+
+def _one_wave(spark: SparkSession) -> int:
+    """The kernel width of every build that emits whole blobs: one task
+    per core, at most R."""
+    return min(spark.sparkContext.defaultParallelism, _n_slices(spark))
 
 
 def _uses_arrow(proto: Sketch, sdf: DataFrame, col: str) -> bool:
@@ -89,13 +107,16 @@ def _kernel(
     timezone: str,
     with_metrics: bool,
 ):
-    """mapInArrow body: one sketch per (partition, key tuple) — with no
-    keys exactly one per partition, an empty one included.  Each sketch
-    emits its key columns and ``state_slices(n_slices)`` rows, or one
-    whole-blob row when ``n_slices`` is None or the sketch has no
-    byte-range layout.  Its counters ride on its first row; so do
-    ``pid`` and ``metrics`` when checkpointing (``metrics()`` is not
-    free: a Bloom popcount costs ~40 ms per 8 MiB partial)."""
+    """mapInArrow body: one sketch per (task, key tuple) — with no keys
+    exactly one per task, an empty one included.  Each sketch emits its
+    key columns and ``state_slices(n_slices)`` rows, or one whole-blob
+    row when ``n_slices`` is None or the sketch has no byte-range
+    layout.  Its counters ride on its first row; so do ``pid`` and
+    ``metrics`` when checkpointing (``metrics()`` is not free: a Bloom
+    popcount costs ~40 ms per 8 MiB partial).  A keyed task about to
+    hold more than ``_KERNEL_MAX_KEYS`` sketches first emits all it
+    holds and starts over, so one key may get several rows per task."""
+    max_keys = _KERNEL_MAX_KEYS  # read here, so the workers see the driver's value
 
     def fn(batches):
         import numpy as np
@@ -106,6 +127,32 @@ def _kernel(
         states: dict[tuple, Sketch] = {} if keys else {(): make_sketch()}
         n_rows: dict[tuple, int] = {}
         key_types: list = []
+        names = [*keys, *_SLICED_COLS] + (["pid", "metrics"] if with_metrics else [])
+
+        def emit():
+            for kv, sk in states.items():
+                blobs = sk.state_slices(n_slices) if n_slices else None
+                if blobs is None:
+                    blobs = [sk.serialize()]
+                pad = [0] * (len(blobs) - 1)
+                # explicit key types: pa.array([None]) is null-typed and the
+                # JVM cannot read it as the declared key column (null keys
+                # crashed the job; pandas NaN keys normalize back to null)
+                arrays = [pa.array([None if pd.isna(v) else v] * len(blobs), t) for v, t in zip(kv, key_types)]
+                arrays += [
+                    pa.array(range(len(blobs)), pa.int64()),
+                    pa.array(blobs, pa.binary()),
+                    pa.array([n_rows.get(kv, 0)] + pad, pa.int64()),
+                    pa.array([getattr(sk, "n_entry", 0)] + pad, pa.int64()),
+                    pa.array([getattr(sk, "t_entry", 0)] + pad, pa.int64()),
+                ]
+                if with_metrics:
+                    arrays.append(pa.array([TaskContext.get().partitionId()] * len(blobs), pa.int64()))
+                    arrays.append(pa.array([json.dumps(sk.metrics())] + [None] * len(pad), pa.string()))
+                yield pa.record_batch(arrays, names=names)
+            states.clear()
+            n_rows.clear()
+
         for rb in batches:
             vals = rb.column(rb.schema.get_field_index(col))
             spans = [((), 0, rb.num_rows)]  # (key, start, len)
@@ -129,33 +176,15 @@ def _kernel(
             for kv, start, ln in spans:
                 sk = states.get(kv)
                 if sk is None:
+                    if len(states) >= max_keys:
+                        yield from emit()
                     sk = states[kv] = make_sketch()
                 if arrow:
                     sk.update_arrow(vals.slice(start, ln))
                 else:
                     sk.update(vals.iloc[start : start + ln])
                 n_rows[kv] = n_rows.get(kv, 0) + ln
-        names = [*keys, *_SLICED_COLS] + (["pid", "metrics"] if with_metrics else [])
-        for kv, sk in states.items():
-            blobs = sk.state_slices(n_slices) if n_slices else None
-            if blobs is None:
-                blobs = [sk.serialize()]
-            pad = [0] * (len(blobs) - 1)
-            # explicit key types: pa.array([None]) is null-typed and the
-            # JVM cannot read it as the declared key column (null keys
-            # crashed the job; pandas NaN keys normalize back to null)
-            arrays = [pa.array([None if pd.isna(v) else v] * len(blobs), t) for v, t in zip(kv, key_types)]
-            arrays += [
-                pa.array(range(len(blobs)), pa.int64()),
-                pa.array(blobs, pa.binary()),
-                pa.array([n_rows.get(kv, 0)] + pad, pa.int64()),
-                pa.array([getattr(sk, "n_entry", 0)] + pad, pa.int64()),
-                pa.array([getattr(sk, "t_entry", 0)] + pad, pa.int64()),
-            ]
-            if with_metrics:
-                arrays.append(pa.array([TaskContext.get().partitionId()] * len(blobs), pa.int64()))
-                arrays.append(pa.array([json.dumps(sk.metrics())] + [None] * len(pad), pa.string()))
-            yield pa.record_batch(arrays, names=names)
+        yield from emit()
 
     return fn
 
@@ -170,9 +199,11 @@ def _partials(
     repartition: int | None = None,
     with_metrics: bool = False,
 ) -> DataFrame:
-    """Stage 1: the kernel DataFrame.  ``select(col)`` first so Catalyst
-    prunes columns at the scan; ``proto`` is only inspected (a GB-scale
-    filter is real memory, so callers pass the one they already made)."""
+    """Stage 1: the kernel DataFrame, R tasks wide when sliced (then
+    ``n_slices`` is R) and one wave wide otherwise.  ``select(col)``
+    first so Catalyst prunes columns at the scan; ``proto`` is only
+    inspected (a GB-scale filter is real memory, so callers pass the
+    one they already made)."""
     spark = df.sparkSession
     sdf = df.select(col)
     if repartition:
@@ -187,11 +218,11 @@ def _partials(
         with_metrics=with_metrics,
     )
     schema = SLICED_SCHEMA + (", pid long, metrics string" if with_metrics else "")
-    return sdf.coalesce(_n_slices(spark)).mapInArrow(kernel, schema)
+    return sdf.coalesce(n_slices or _one_wave(spark)).mapInArrow(kernel, schema)
 
 
 def _driver_merge(partials: DataFrame, proto: Sketch) -> Sketch:
-    """Collect the whole-blob rows (≤ R) and merge them on the driver;
+    """Collect the whole-blob rows (≤ one wave) and merge them on the driver;
     ``proto`` (the empty sketch) when the input had no partitions."""
     blobs = [bytes(r["blob"]) for r in partials.select("blob").collect()]
     return Sketch.merge_blobs(blobs) if blobs else proto
@@ -352,18 +383,29 @@ def sketch_by_key(
     ``out_type`` is the DDL type of ``finalize``'s return value —
     default scalar ``double``; pass e.g. ``array<double>`` for
     multi-quantile finalizes (the value is emitted as-is then).
+    ``key_schema`` types the output keys (default: their types in
+    ``df``); ``out_col`` may not be a key.
 
-    Stage 1 (mapInArrow) builds one partial sketch per (partition,
-    key) — the sketch analog of a map-side combine, so only
-    (key, blob) rows shuffle, never raw values.  Stage 2 merges per
-    key and finalizes.  With ``salt_partitions`` an intermediate
-    groupBy(keys, salt) stage splits hot keys across reducers before
-    the final merge (north_rule skew mitigation).
+    One shuffle: the kernel (mapInArrow, one wave of
+    min(defaultParallelism, R) tasks) builds one partial sketch per
+    (task, key) — the sketch analog of a map-side combine, so only
+    (key, blob) rows shuffle, never raw values — then one
+    ``repartition(keys)`` stage merges per key and finalizes.  A task
+    about to hold more than ``_KERNEL_MAX_KEYS`` sketches emits them and
+    starts over, so worker memory does not grow with the number of keys.
+    Each key thus receives at most one blob per task and flush: a hot
+    key's fan-in is bounded by the kernel width, and ``salt_partitions``
+    (once a groupBy(keys, salt) pre-merge stage that split hot keys
+    across reducers) is accepted and adds no stage.
     """
     keys = list(keys)
+    if out_col in keys:
+        raise ValueError(f"out_col {out_col!r} is also a key column of sketch_by_key; pick another out_col")
+    spark = df.sparkSession
     key_schema = key_schema or _key_schema(df, keys)
-
-    # the kernel sees the keys as __key<i>: a key may be named like a kernel column
+    # the kernel and the merge see the keys as __key<i> (a key may be
+    # named like one of their columns: slice, blob, …); the merge's
+    # output schema names them back
     tmp = [f"__key{i}" for i in range(len(keys))]
     sdf = df.select(*[F.col(k).alias(t) for k, t in zip(keys, tmp)], col)
     kernel = _kernel(
@@ -372,59 +414,29 @@ def sketch_by_key(
         col,
         None,
         arrow=_uses_arrow(make_sketch(), sdf, col),
-        timezone=df.sparkSession.conf.get("spark.sql.session.timeZone"),
+        timezone=spark.conf.get("spark.sql.session.timeZone"),
         with_metrics=False,
     )
-    partials = sdf.mapInArrow(kernel, f"{_key_schema(sdf, tmp)}, {SLICED_SCHEMA}")
-    partials = partials.select(*[F.col(t).alias(k) for t, k in zip(tmp, keys)], "blob")
+    partials = sdf.coalesce(_one_wave(spark)).mapInArrow(kernel, f"{_key_schema(sdf, tmp)}, {SLICED_SCHEMA}")
+    emit = (lambda sk: float(finalize(sk))) if out_type == "double" else finalize
 
-    def _merge_partition_fn(group_cols: list[str], payload_col: str, emit):
+    def merge(batches):
         """mapInPandas body: merge blobs per key WITHIN a hash-
         partitioned partition.  One Python call per PARTITION (a
         groupBy().applyInPandas here pays per-GROUP call overhead —
         at thousands of keys that dominates the whole job)."""
-
-        def fn(batches):
-            acc: dict[tuple, Sketch] = {}
-            for pdf in batches:
-                for kv, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                    if not isinstance(kv, tuple):
-                        kv = (kv,)
-                    sk = Sketch.merge_blobs([bytes(b) for b in sub["blob"]])
-                    prev = acc.get(kv)
-                    acc[kv] = sk if prev is None else prev.merge(sk)
-            if not acc:
-                return
-            rows: dict[str, list] = {c: [] for c in group_cols}
-            rows[payload_col] = []
-            for kv, sk in acc.items():
-                for c, v in zip(group_cols, kv):
-                    rows[c].append(v)
-                rows[payload_col].append(emit(sk))
+        acc: dict[tuple, Sketch] = {}
+        for pdf in batches:
+            for kv, sub in pdf.groupby(tmp, dropna=False, sort=False):
+                if not isinstance(kv, tuple):
+                    kv = (kv,)
+                sk = Sketch.merge_blobs([bytes(b) for b in sub["blob"]])
+                prev = acc.get(kv)
+                acc[kv] = sk if prev is None else prev.merge(sk)
+        if acc:
+            rows = {k: [kv[i] for kv in acc] for i, k in enumerate(keys)}
+            rows[out_col] = [emit(sk) for sk in acc.values()]
             yield pd.DataFrame(rows)
 
-        return fn
-
-    if salt_partitions:
-        # salt must be DETERMINISTIC: a nondeterministic expression
-        # (e.g. monotonically_increasing_id) feeding a groupBy shuffle
-        # re-salts rows differently on stage retry, duplicating or
-        # dropping partial blobs.  Hashing (keys, blob) is a pure
-        # function of the row, so recomputes land in the same bucket.
-        salted = partials.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.col("blob")), F.lit(salt_partitions)),
-        )
-        partials = (
-            salted.repartition(*[F.col(k) for k in keys], F.col("__salt"))
-            .mapInPandas(
-                _merge_partition_fn(keys + ["__salt"], "blob", lambda sk: sk.serialize()),
-                f"{key_schema}, __salt bigint, blob binary",
-            )
-            .drop("__salt")
-        )
-
-    emit = (lambda sk: float(finalize(sk))) if out_type == "double" else finalize
-    return partials.repartition(*[F.col(k) for k in keys]).mapInPandas(
-        _merge_partition_fn(keys, out_col, emit), f"{key_schema}, {out_col} {out_type}"
-    )
+    merged = partials.select(*tmp, "blob").repartition(*tmp)
+    return merged.mapInPandas(merge, f"{key_schema}, {out_col} {out_type}")

@@ -122,16 +122,114 @@ def test_partition_sweep_quantiles(spark, small_r):
 
 @pytest.mark.spark
 def test_kernel_coalesces_above_r(spark, small_r):
-    """Above R the kernel DataFrame has R partitions (one blob or R
-    slices each), so the driver collects at most R whole blobs."""
+    """A one-row sketch's kernel runs one wave: min(P,
+    defaultParallelism, R) tasks of one blob each, so the driver
+    collects at most that many blobs.  A sliced sketch's kernel keeps
+    min(P, R) tasks of R slices each."""
     from btl_bloomfilter_spark.operators.hll import HyperLogLog
     from btl_bloomfilter_spark.plans import agg
 
+    wave = spark.sparkContext.defaultParallelism
     mk = lambda: HyperLogLog(p=10)
-    for parts, want in ((3, 3), (2 * R + 5, R)):
+    bf = lambda: BloomFilter(1 << 16, 3, 6)
+    for parts in (3, 2 * R + 5):
         kernel = agg._partials(_table(spark, parts), "text", mk, mk(), None)
-        assert kernel.rdd.getNumPartitions() == want
-        assert kernel.count() == want
+        assert kernel.rdd.getNumPartitions() == min(parts, wave, R)
+        assert kernel.count() == min(parts, wave, R)
+        sliced = agg._partials(_table(spark, parts), "text", bf, bf(), R)
+        assert sliced.rdd.getNumPartitions() == min(parts, R)
+        assert sliced.count() == min(parts, R) * R
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("salt", [None, 4])
+def test_sketch_by_key_one_wave_one_exchange(spark, small_r, monkeypatch, salt):
+    """sketch_by_key's kernel runs min(P, defaultParallelism, R) tasks
+    and its plan has exactly one Exchange, with or without
+    ``salt_partitions``."""
+    import re
+
+    from btl_bloomfilter_spark.operators.hll import HyperLogLog
+    from btl_bloomfilter_spark.plans.agg import sketch_by_key
+    from tests.test_plans import _plan
+
+    cls = type(spark.range(1))
+    real = cls.mapInArrow
+    kernels = []
+    monkeypatch.setattr(cls, "mapInArrow", lambda self, *a, **k: kernels.append(real(self, *a, **k)) or kernels[-1])
+    wave = spark.sparkContext.defaultParallelism
+    for parts in (3, 2 * R + 5):
+        kernels.clear()
+        hll = lambda: HyperLogLog(p=10)
+        out = sketch_by_key(_table(spark, parts), ["key"], "text", hll, HyperLogLog.estimate, salt_partitions=salt)
+        (kernel,) = kernels
+        assert kernel.rdd.getNumPartitions() == min(parts, wave, R)
+        assert len(re.findall(r"^\(\d+\) Exchange", _plan(out), re.M)) == 1
+        assert out.count() == 38  # 37 keys and the null key
+
+
+def test_kernel_flush_emits_live_sketches(monkeypatch):
+    """A keyed kernel task about to hold more than ``_KERNEL_MAX_KEYS``
+    sketches emits them all and starts over: with a limit of 2 and
+    three interleaved keys every key gets several partials, which merge
+    to the sketch of all its rows."""
+    import pyarrow as pa
+
+    from btl_bloomfilter_spark.operators.base import Sketch
+    from btl_bloomfilter_spark.operators.hll import HyperLogLog
+    from btl_bloomfilter_spark.plans import agg
+
+    monkeypatch.setattr(agg, "_KERNEL_MAX_KEYS", 2)
+    mk = lambda: HyperLogLog(p=10)
+    keys = [f"g{i % 3}" for i in range(300)]
+    vals = [f"v{i}" for i in range(300)]
+    batches = [pa.record_batch([pa.array(keys[j : j + 50]), pa.array(vals[j : j + 50])], names=["__key0", "v"]) for j in range(0, 300, 50)]
+    kernel = agg._kernel(mk, ["__key0"], "v", None, arrow=True, timezone="UTC", with_metrics=False)
+    rows = pa.Table.from_batches(list(kernel(iter(batches)))).to_pylist()
+    for g in ("g0", "g1", "g2"):
+        mine = [r for r in rows if r["__key0"] == g]
+        assert len(mine) > 1
+        assert sum(r["n_rows"] for r in mine) == 100
+        want = mk()
+        want.update([v for k, v in zip(keys, vals) if k == g])
+        assert Sketch.merge_blobs([r["blob"] for r in mine]).serialize() == want.serialize()
+
+
+@pytest.mark.spark
+def test_sketch_by_key_flushed_rows(spark, monkeypatch):
+    """Kernels that flush at 2 live keys give the same HLL and CMS rows
+    as kernels that never flush (exact merges), and KLL stays inside its
+    rank bound."""
+    from btl_bloomfilter_spark.operators.base import Sketch
+    from btl_bloomfilter_spark.operators.counting import CountMinSketch
+    from btl_bloomfilter_spark.operators.hll import HyperLogLog
+    from btl_bloomfilter_spark.operators.kll import KLL
+    from btl_bloomfilter_spark.plans import agg
+    from tests.test_quantiles import _rank_err
+
+    # g: k0..k9 and null (11 keys); n: key length 2, 3 or null
+    df = _table(spark, 5).selectExpr("substr(key, 1, 2) as g", "length(key) as n", "text", "x")
+
+    def rows(key, col, mk):
+        out = agg.sketch_by_key(df, [key], col, mk, lambda s: s.serialize(), "b", out_type="binary").collect()
+        return {r[key]: bytes(r["b"]) for r in out}
+
+    exact = [lambda: HyperLogLog(p=10), lambda: CountMinSketch.from_error(0.01, 0.01)]
+    want = [rows("g", "text", mk) for mk in exact]
+    monkeypatch.setattr(agg, "_KERNEL_MAX_KEYS", 2)
+    assert [rows("g", "text", mk) for mk in exact] == want
+    assert len(want[0]) == 11
+    data: dict = {}
+    for r in df.collect():
+        if r["x"] is not None:
+            data.setdefault(r["n"], []).append(r["x"])
+    got = rows("n", "x", lambda: KLL(k=200, seed=5))
+    assert set(got) == set(data)
+    for n, blob in got.items():
+        kll = Sketch.deserialize(blob)
+        assert kll.n == len(data[n])
+        for q in (0.1, 0.5, 0.9):
+            assert _rank_err(kll.quantile, np.array(data[n]), q) <= 0.02, (n, q)
 
 
 @pytest.mark.spark

@@ -166,14 +166,34 @@ def test_sketch_by_key_with_salting(spark, tdf):
 @pytest.mark.parametrize("salt", [None, 3])
 def test_sketch_by_key_keys_named_like_kernel_columns(spark, tdf, salt):
     """Keys named like the build kernel's row columns (``slice``,
-    ``n_rows``) group exactly as the same keys under other names."""
+    ``n_rows``, ``blob``) group exactly as the same keys under other
+    names."""
     hll = lambda: HyperLogLog(p=10)
-    two = "cast(turn_idx % 2 as bigint)"
-    named = tdf.selectExpr("role as slice", f"{two} as n_rows", "conv_id")
-    got = sketch_by_key(named, ["slice", "n_rows"], "conv_id", hll, lambda s: s.estimate(), "est", salt_partitions=salt)
-    plain = tdf.selectExpr("role", f"{two} as half", "conv_id")
-    want = sketch_by_key(plain, ["role", "half"], "conv_id", hll, lambda s: s.estimate(), "est", salt_partitions=salt)
-    assert {(r.slice, r.n_rows): r.est for r in got.collect()} == {(r.role, r.half): r.est for r in want.collect()}
+    two, three = "cast(turn_idx % 2 as bigint)", "cast(turn_idx % 3 as bigint)"
+    named = tdf.selectExpr("role as slice", f"{two} as n_rows", f"{three} as blob", "conv_id")
+    got = sketch_by_key(
+        named, ["slice", "n_rows", "blob"], "conv_id", hll, lambda s: s.estimate(), "est", salt_partitions=salt
+    )
+    plain = tdf.selectExpr("role", f"{two} as half", f"{three} as third", "conv_id")
+    want = sketch_by_key(
+        plain, ["role", "half", "third"], "conv_id", hll, lambda s: s.estimate(), "est", salt_partitions=salt
+    )
+    assert {(r.slice, r.n_rows, r.blob): r.est for r in got.collect()} == {
+        (r.role, r.half, r.third): r.est for r in want.collect()
+    }
+
+
+def test_sketch_by_key_out_col_named_like_a_key(spark, tdf):
+    """An ``out_col`` equal to a key raises before any job runs; the
+    payload name ``blob`` is a valid ``out_col``."""
+    hll = lambda: HyperLogLog(p=10)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup()
+    with pytest.raises(ValueError, match="'role'"):
+        sketch_by_key(tdf, ["role"], "conv_id", hll, lambda s: s.estimate(), "role")
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup() == jobs
+    rows = sketch_by_key(tdf, ["role"], "conv_id", hll, lambda s: s.serialize(), "blob", out_type="binary").collect()
+    plain = sketch_by_key(tdf, ["role"], "conv_id", hll, lambda s: s.estimate(), "est").collect()
+    assert {r.role: HyperLogLog.deserialize(bytes(r.blob)).estimate() for r in rows} == {r.role: r.est for r in plain}
 
 
 @pytest.mark.spark
