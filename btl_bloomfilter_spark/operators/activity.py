@@ -96,7 +96,6 @@ def trailing_active_hll(
         lambda: HyperLogLog(p=precision),
         lambda sk: float(sk.estimate()),
         "n_active_est",
-        key_schema="period long",
     )
 
 

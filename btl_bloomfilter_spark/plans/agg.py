@@ -374,7 +374,6 @@ def sketch_by_key(
     finalize: Callable[[Sketch], float],
     out_col: str = "estimate",
     *,
-    key_schema: str | None = None,
     salt_partitions: int | None = None,
     out_type: str = "double",
 ) -> DataFrame:
@@ -382,9 +381,9 @@ def sketch_by_key(
 
     ``out_type`` is the DDL type of ``finalize``'s return value —
     default scalar ``double``; pass e.g. ``array<double>`` for
-    multi-quantile finalizes (the value is emitted as-is then).
-    ``key_schema`` types the output keys (default: their types in
-    ``df``); ``out_col`` may not be a key.
+    multi-quantile finalizes (the value is emitted as-is then).  The
+    output keys keep their types in ``df``; ``out_col`` may not be a
+    key.
 
     One shuffle: the kernel (mapInArrow, one wave of
     min(defaultParallelism, R) tasks) builds one partial sketch per
@@ -402,7 +401,6 @@ def sketch_by_key(
     if out_col in keys:
         raise ValueError(f"out_col {out_col!r} is also a key column of sketch_by_key; pick another out_col")
     spark = df.sparkSession
-    key_schema = key_schema or _key_schema(df, keys)
     # the kernel and the merge see the keys as __key<i> (a key may be
     # named like one of their columns: slice, blob, …); the merge's
     # output schema names them back
@@ -439,4 +437,4 @@ def sketch_by_key(
             yield pd.DataFrame(rows)
 
     merged = partials.select(*tmp, "blob").repartition(*tmp)
-    return merged.mapInPandas(merge, f"{key_schema}, {out_col} {out_type}")
+    return merged.mapInPandas(merge, f"{_key_schema(df, keys)}, {out_col} {out_type}")

@@ -12,8 +12,9 @@ re-persisted atomically per batch (write-new + rename).
 This is the `applyInPandasWithState`-free design: state is one
 bounded blob (m bits / registers), not per-key rows, so a single
 driver-side merge per micro-batch is cheaper than a keyed state
-store.  For per-key streaming sketches use plans.agg.sketch_by_key
-inside foreachBatch the same way.
+store.  Per-key streaming sketches use
+:func:`stream_windowed_sketch_by_key`, whose watermark frees each
+(window, key)'s state, so keyed state stays bounded too.
 
 Replay semantics: foreachBatch is AT-LEAST-ONCE — after a failure the
 same micro-batch (same batch_id) can be delivered again.  The state
@@ -46,27 +47,16 @@ def _read_state(path: Path) -> tuple[int, str, Sketch | None]:
     raw = path.read_bytes()
     if raw[:8] != _STATE_MAGIC:
         raise ValueError(f"{path} is not a streaming state file (no {_STATE_MAGIC.decode()} header)")
-    last_id, ln = struct.unpack("<qI", raw[8:20])
+    # zero-padded so a file shorter than the 20-byte header still
+    # unpacks: its declared end, 20 + ln, then lies past the file's end
+    last_id, ln = struct.unpack("<qI", raw[8:20].ljust(12, b"\0"))
+    if len(raw) <= 20 + ln:
+        raise ValueError(
+            f"{path} is a truncated streaming state file: {len(raw)} bytes, but its header "
+            f"and {ln}-byte lineage end at byte {20 + ln} with no sketch after them"
+        )
     lineage = raw[20 : 20 + ln].decode()
     return last_id, lineage, Sketch.deserialize(raw[20 + ln :])
-
-
-def _read_state_for(path: Path, lineage: str) -> tuple[int, Sketch | None]:
-    """(last_merged_batch_id, sketch) of a state file this query may
-    use.  Batch ids are only meaningful WITHIN one checkpoint lineage
-    (a fresh checkpoint restarts them at 0 and regroups source files),
-    so a sketch stored under any other lineage — the empty one of
-    ``merge_batch_into(lineage="")`` included — raises instead of
-    silently dropping or double-counting batches."""
-    last_id, stored, sketch = _read_state(path)
-    if sketch is not None and stored != lineage:
-        raise ValueError(
-            f"state file {path} was built under checkpoint lineage "
-            f"{stored!r} but this query runs under {lineage!r}; micro-batch "
-            "ids are not comparable across checkpoint lineages — use a fresh "
-            "state file per checkpoint (or the same checkpoint dir to resume)"
-        )
-    return last_id, sketch
 
 
 def _start_foreach_batch(stream_df: DataFrame, checkpoint_dir, on_batch, trigger_available_now: bool):
@@ -94,6 +84,36 @@ def _write_state(path: Path, batch_id: int, lineage: str, sketch: Sketch) -> Non
     os.replace(tmp, path)  # single atomic replace: id + blob never skew
 
 
+def _commit(
+    path: Path, lineage: str, batch_id: int, step: Callable[[Sketch | None], Sketch]
+) -> Sketch | None:
+    """Apply one micro-batch to the state file at ``path`` exactly once
+    and return the sketch it then holds (None: absent and not written).
+
+    Batch ids are only meaningful WITHIN one checkpoint lineage (a
+    fresh checkpoint restarts them at 0 and regroups source files), so
+    a sketch stored under any other lineage — the empty one of
+    ``merge_batch_into(lineage="")`` included — raises instead of
+    silently dropping or double-counting batches.  A ``batch_id`` <=
+    the stored one is a replay and returns the stored sketch
+    untouched; otherwise ``step(stored)`` — the batch's own work,
+    given None when the file is absent — is persisted under
+    ``batch_id`` (write-new + rename)."""
+    last_id, stored, sketch = _read_state(path)
+    if sketch is not None and stored != lineage:
+        raise ValueError(
+            f"state file {path} was built under checkpoint lineage "
+            f"{stored!r} but this query runs under {lineage!r}; micro-batch "
+            "ids are not comparable across checkpoint lineages — use a fresh "
+            "state file per checkpoint (or the same checkpoint dir to resume)"
+        )
+    if batch_id <= last_id:
+        return sketch
+    sketch = step(sketch)
+    _write_state(path, batch_id, lineage, sketch)
+    return sketch
+
+
 def merge_batch_into(
     running_path: str | Path,
     batch_df: DataFrame,
@@ -111,15 +131,14 @@ def merge_batch_into(
     last-merged id is skipped, so at-least-once redelivery never
     double-counts; an empty batch still advances the id.  ``lineage``
     — the checkpoint identity — is persisted with the state; a state
-    file of another lineage raises (:func:`_read_state_for`)."""
-    running_path = Path(running_path)
-    last_id, running = _read_state_for(running_path, lineage)
-    if batch_id <= last_id:
-        return running if running is not None else make_sketch()
-    batch_sketch = merged_partials(batch_df, col, make_sketch)
-    running = batch_sketch if running is None else running.merge(batch_sketch)
-    _write_state(running_path, batch_id, lineage, running)
-    return running
+    file of another lineage raises (:func:`_commit`)."""
+
+    def merge(running: Sketch | None) -> Sketch:
+        batch_sketch = merged_partials(batch_df, col, make_sketch)
+        return batch_sketch if running is None else running.merge(batch_sketch)
+
+    running = _commit(Path(running_path), lineage, batch_id, merge)
+    return running if running is not None else make_sketch()
 
 
 def stream_build_sketch(
@@ -150,50 +169,6 @@ def load_running(state_path: str | Path) -> Sketch:
     if sk is None:
         raise FileNotFoundError(state_path)
     return sk
-
-
-def stream_sketch_by_key(
-    stream_df: DataFrame,
-    keys: list[str],
-    col: str,
-    make_sketch: Callable[[], Sketch],
-    finalize: Callable[[Sketch], float],
-    *,
-    out_col: str = "estimate",
-    key_schema: str | None = None,
-):
-    """Keyed streaming sketch via ``applyInPandasWithState``: one
-    serialized sketch blob per key lives in Spark's managed state
-    store (checkpointed with the query), each micro-batch merges its
-    rows in and emits the key's refreshed estimate (update mode).
-
-    Unlike the single-blob ``stream_build_sketch`` this scales to many
-    keys — state is per-key and co-partitioned by the stream's keyed
-    shuffle, the streaming analog of plans.agg.sketch_by_key.
-    Returns the transformed streaming DataFrame; start it with
-    ``.writeStream.outputMode("update")``.
-    """
-    import pandas as pd
-
-    key_schema = key_schema or _key_schema(stream_df, keys)
-    out_schema = f"{key_schema}, {out_col} double"
-    state_schema = "blob binary"
-
-    def update_fn(key, pdf_iter, state):
-        if state.exists:
-            sk = Sketch.deserialize(bytes(state.get[0]))
-        else:
-            sk = make_sketch()
-        for pdf in pdf_iter:
-            sk.update(pdf[col])
-        state.update((sk.serialize(),))
-        out = {k: [v] for k, v in zip(keys, key)}
-        out[out_col] = [float(finalize(sk))]
-        yield pd.DataFrame(out)
-
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        update_fn, out_schema, state_schema, "update", "NoTimeout"
-    )
 
 
 def stream_insert_online_mibf(
@@ -237,23 +212,35 @@ def stream_insert_online_mibf(
         _write_state(state_path, -1, lineage, initial)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last_id, mibf = _read_state_for(state_path, lineage)
-        if mibf is None:
-            raise FileNotFoundError(
-                f"{state_path}: seed the online-insert state with initial= "
-                f"(a miBF whose bit vector covers the stream's elements)"
-            )
-        if batch_id <= last_id:
-            return
-        rows = batch_df.select(id_col, text_col).collect()
-        for r in sorted(rows, key=lambda r: (int(r[0]), str(r[1]))):
-            if strand:
-                mibf.insert_seq_online_strand(str(r[1]), int(r[0]), max_count)
-            else:
-                mibf.insert_seq_online(str(r[1]), int(r[0]), max_count)
-        _write_state(state_path, batch_id, lineage, mibf)
+        def insert(mibf: Sketch | None) -> Sketch:
+            if mibf is None:
+                raise FileNotFoundError(
+                    f"{state_path}: seed the online-insert state with initial= "
+                    f"(a miBF whose bit vector covers the stream's elements)"
+                )
+            rows = batch_df.select(id_col, text_col).collect()
+            for r in sorted(rows, key=lambda r: (int(r[0]), str(r[1]))):
+                if strand:
+                    mibf.insert_seq_online_strand(str(r[1]), int(r[0]), max_count)
+                else:
+                    mibf.insert_seq_online(str(r[1]), int(r[0]), max_count)
+            return mibf
+
+        _commit(state_path, lineage, batch_id, insert)
 
     return _start_foreach_batch(stream_df, checkpoint_dir, on_batch, trigger_available_now)
+
+
+_KEYED_STATE = "blob binary, n long"  # group state of the keyed operators: sketch + rows in it
+
+
+def _keyed_load(state, make_sketch: Callable[[], Sketch]) -> tuple[Sketch, int]:
+    """(sketch, rows folded in) of a group's ``_KEYED_STATE``; a fresh
+    ``make_sketch()`` and 0 for a group with no state yet."""
+    if not state.exists:
+        return make_sketch(), 0
+    blob, n = state.get
+    return Sketch.deserialize(bytes(blob)), int(n)
 
 
 def stream_keyed_online_mibf(
@@ -266,7 +253,6 @@ def stream_keyed_online_mibf(
     max_count: int = 1,
     strand: bool = False,
     emit_blob: bool = False,
-    key_schema: str | None = None,
 ):
     """Keyed streaming ONLINE miBF build via ``applyInPandasWithState``
     — the remaining streaming frontier from r4: per-key filter blobs
@@ -305,22 +291,14 @@ def stream_keyed_online_mibf(
     """
     import pandas as pd
 
-    key_schema = key_schema or _key_schema(stream_df, keys)
-    out_schema = f"{key_schema}, n_inserted long, occupied_frac double, saturated_frac double"
+    out_schema = f"{_key_schema(stream_df, keys)}, n_inserted long, occupied_frac double, saturated_frac double"
     if emit_blob:
         out_schema += ", blob binary"
-    state_schema = "blob binary, n long"
 
     def update_fn(key, pdf_iter, state):
         from ..operators.mibf import SAT_BIT
 
-        if state.exists:
-            raw, n_ins = state.get
-            mibf = Sketch.deserialize(bytes(raw))
-            n_ins = int(n_ins)
-        else:
-            mibf = make_initial()
-            n_ins = 0
+        mibf, n_ins = _keyed_load(state, make_initial)
         rows = []
         for pdf in pdf_iter:
             rows.extend(zip((int(v) for v in pdf[id_col]), (str(t) for t in pdf[text_col])))
@@ -345,7 +323,7 @@ def stream_keyed_online_mibf(
         yield pd.DataFrame(out)
 
     return stream_df.groupBy(*keys).applyInPandasWithState(
-        update_fn, out_schema, state_schema, "update", "NoTimeout"
+        update_fn, out_schema, _KEYED_STATE, "update", "NoTimeout"
     )
 
 
@@ -360,7 +338,6 @@ def stream_windowed_sketch_by_key(
     window_duration: str = "10 seconds",
     watermark_delay: str = "0 seconds",
     out_col: str = "estimate",
-    key_schema: str | None = None,
 ):
     """Event-time-windowed per-key sketch aggregation with
     watermark-governed late-data handling — the brief's "watermarks +
@@ -386,12 +363,10 @@ def stream_windowed_sketch_by_key(
 
     from pyspark.sql import functions as F
 
-    key_schema = key_schema or _key_schema(stream_df, keys)
     out_schema = (
-        f"win_start timestamp, win_end timestamp, {key_schema}, "
+        f"win_start timestamp, win_end timestamp, {_key_schema(stream_df, keys)}, "
         f"{out_col} double, n_rows long, is_final boolean"
     )
-    state_schema = "blob binary, n long"
     # the window struct reaches the Python worker as a NAIVE datetime
     # rendered in the SESSION timezone; treating it as UTC would skew
     # setTimeoutTimestamp/the late-group guard by the tz offset on any
@@ -428,22 +403,16 @@ def stream_windowed_sketch_by_key(
 
         if state.hasTimedOut:
             if state.exists:
-                blob, n = state.get
-                sk = Sketch.deserialize(bytes(blob))
+                sk, n = _keyed_load(state, make_sketch)
                 state.remove()
-                yield row(sk, int(n), True)
+                yield row(sk, n, True)
             return
         if state.getCurrentWatermarkMs() >= end_ms:
             # late group: its window already closed — do not resurrect
             for _ in pdf_iter:
                 pass
             return
-        if state.exists:
-            blob, n = state.get
-            sk = Sketch.deserialize(bytes(blob))
-            n = int(n)
-        else:
-            sk, n = make_sketch(), 0
+        sk, n = _keyed_load(state, make_sketch)
         for pdf in pdf_iter:
             sk.update(pdf[col])
             n += len(pdf)
@@ -459,7 +428,7 @@ def stream_windowed_sketch_by_key(
         .drop(ts_col)
     )
     return s.groupBy("__win", *keys).applyInPandasWithState(
-        update_fn, out_schema, state_schema, "update", "EventTimeTimeout"
+        update_fn, out_schema, _KEYED_STATE, "update", "EventTimeTimeout"
     )
 
 
@@ -509,36 +478,30 @@ def stream_dedup(
     state_path = Path(state_path)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last_id, bloom = _read_state_for(state_path, str(checkpoint_dir))
-        if batch_id <= last_id:
-            return  # replay: output dir + filter state already committed
-        spark = batch_df.sparkSession
-        if id_col is not None:
-            from pyspark.sql import Window
+        def dedup(bloom: Sketch | None) -> Sketch:
+            spark = batch_df.sparkSession
+            if id_col is not None:
+                from pyspark.sql import Window
 
-            w = Window.partitionBy(col).orderBy(id_col)
-            batch_df = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        else:
-            batch_df = batch_df.dropDuplicates([col])
-        if bloom is not None:
-            batch_df = batch_df.where(
-                bloom_seen_fraction(spark, bloom, F.col(col)) < 1.0
-            )
-        kept = batch_df.cache()
-        try:
-            (
-                kept.write.mode("overwrite").parquet(
-                    str(out_dir / f"batch_id={batch_id}")
+                w = Window.partitionBy(col).orderBy(id_col)
+                kept = (
+                    batch_df.withColumn("__rn", F.row_number().over(w))
+                    .where(F.col("__rn") == 1)
+                    .drop("__rn")
                 )
-            )
-            add = merged_partials(kept, col, make_bloom)
-            running = add if bloom is None else bloom.merge(add)
-            _write_state(state_path, batch_id, str(checkpoint_dir), running)
-        finally:
-            kept.unpersist()
+            else:
+                kept = batch_df.dropDuplicates([col])
+            if bloom is not None:
+                kept = kept.where(bloom_seen_fraction(spark, bloom, F.col(col)) < 1.0)
+            kept = kept.cache()
+            try:
+                kept.write.mode("overwrite").parquet(str(out_dir / f"batch_id={batch_id}"))
+                add = merged_partials(kept, col, make_bloom)
+                return add if bloom is None else bloom.merge(add)
+            finally:
+                kept.unpersist()
+
+        # a replay skips dedup: output dir + filter state already committed
+        _commit(state_path, str(checkpoint_dir), batch_id, dedup)
 
     return _start_foreach_batch(stream_df, checkpoint_dir, on_batch, trigger_available_now)

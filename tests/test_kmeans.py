@@ -187,9 +187,10 @@ def test_q129_planted_twins_recovered_exactly(spark, sf_dir):
     # in the synthetic corpus is ~0.51), and each twin co-clusters with
     # its original under the L2 fit
     import importlib.util
+    import pathlib
 
     spec = importlib.util.spec_from_file_location(
-        "_entry129", "/root/repo/__spark_entry__.py"
+        "_entry129", str(pathlib.Path(__file__).resolve().parent.parent / "__spark_entry__.py")
     )
     em = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(em)

@@ -2,6 +2,8 @@
 consumed micro-batch-wise must yield the same Bloom filter as one
 batch build over the union (OR-merge law extended to time)."""
 
+from pathlib import Path
+
 import numpy as np
 import pytest
 
@@ -50,52 +52,6 @@ def test_stream_equals_batch(spark, tmp_path):
 
 
 @pytest.mark.spark
-def test_stream_sketch_by_key_matches_batch(spark, tmp_path):
-    """applyInPandasWithState keyed streaming sketch: after draining
-    the stream, per-key HLL estimates equal the batch build's."""
-    from btl_bloomfilter_spark.operators.hll import HyperLogLog
-    from btl_bloomfilter_spark.plans.agg import sketch_by_key
-    from btl_bloomfilter_spark.streaming.accumulate import stream_sketch_by_key
-
-    src = tmp_path / "ksrc"
-    src.mkdir()
-    rows = []
-    for part in range(3):
-        rows_part = [(f"k{i % 4}", f"user{part}-{i % 57}") for i in range(400)]
-        rows += rows_part
-        spark.createDataFrame(rows_part, "k string, v string").coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    mk = lambda: HyperLogLog(p=12)
-    stream = spark.readStream.schema("k string, v string").option("maxFilesPerTrigger", "2").parquet(str(src))
-    out = stream_sketch_by_key(stream, ["k"], "v", mk, lambda s: s.estimate(), out_col="est")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("keyed_sketch")
-        .option("checkpointLocation", str(tmp_path / "kckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["k"]: r["est"]
-        for r in spark.sql(
-            "SELECT k, est FROM (SELECT *, row_number() OVER (PARTITION BY k ORDER BY est DESC) rn "
-            "FROM keyed_sketch) WHERE rn = 1"
-        ).collect()
-    }
-    batch = sketch_by_key(
-        spark.createDataFrame(rows, "k string, v string"), ["k"], "v", mk, lambda s: s.estimate(), "est"
-    )
-    want = {r["k"]: r["est"] for r in batch.collect()}
-    assert got.keys() == want.keys()
-    for k in want:
-        assert got[k] == pytest.approx(want[k]), k
-
-
-@pytest.mark.spark
 def test_replayed_batch_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: redelivering the same batch_id
     must NOT double-count (counting sketches are not idempotent)."""
@@ -137,11 +93,13 @@ def test_state_rejects_foreign_checkpoint_lineage(spark, tmp_path):
 
 
 @pytest.mark.spark
-@pytest.mark.parametrize("layout", ["v1", "bare_blob"])
+@pytest.mark.parametrize("layout", ["v1", "bare_blob", "short_header", "lineage_past_end", "no_envelope"])
 def test_state_file_of_another_layout_raises(spark, tmp_path, layout):
-    """Only the BFSTRM02 layout is a state file: an older header or a
-    bare ``Sketch.serialize()`` blob raises, naming the path, from both
-    ``load_running`` and ``merge_batch_into``."""
+    """Only a whole BFSTRM02 file is a state file: an older header, a
+    bare ``Sketch.serialize()`` blob, or a BFSTRM02 file cut short
+    (inside its 20-byte header, inside its lineage, or right after it)
+    raises ValueError, naming the path, from both ``load_running`` and
+    ``merge_batch_into``, and leaves the file untouched."""
     import struct
 
     from btl_bloomfilter_spark.streaming.accumulate import merge_batch_into
@@ -150,14 +108,57 @@ def test_state_file_of_another_layout_raises(spark, tmp_path, layout):
     sk = mk()
     sk.update(["x", "y"])
     state = tmp_path / "old.sketch"
-    head = b"BFSTRM01" + struct.pack("<q", 4) if layout == "v1" else b""
-    state.write_bytes(head + sk.serialize())
+    raw = {
+        "v1": b"BFSTRM01" + struct.pack("<q", 4) + sk.serialize(),
+        "bare_blob": sk.serialize(),
+        "short_header": b"BFSTRM02" + b"\x04\x00\x00",
+        "lineage_past_end": b"BFSTRM02" + struct.pack("<qI", 4, 100) + b"ck-",
+        "no_envelope": b"BFSTRM02" + struct.pack("<qI", 4, 3) + b"ck-",
+    }[layout]
+    state.write_bytes(raw)
     with pytest.raises(ValueError, match="old.sketch"):
         load_running(state)
     bdf = spark.createDataFrame([("x",)], "text string")
     with pytest.raises(ValueError, match="old.sketch"):
         merge_batch_into(state, bdf, "text", mk, batch_id=5)
-    assert state.read_bytes() == head + sk.serialize()
+    assert state.read_bytes() == raw
+
+
+@pytest.mark.spark
+def test_crash_between_write_and_rename_keeps_state(spark, tmp_path, monkeypatch):
+    """A crash after the new state is written but before it replaces
+    the old one (``os.replace`` raising) leaves the state file
+    byte-identical; the leftover ``.tmp`` is never read, and the
+    redelivered batch merges exactly once."""
+    from btl_bloomfilter_spark.operators.counting import CountingBloomFilter
+    from btl_bloomfilter_spark.streaming import accumulate
+    from btl_bloomfilter_spark.streaming.accumulate import merge_batch_into
+
+    mk = lambda: CountingBloomFilter(1 << 12, 3, 0, counter_bits=32)
+    state = tmp_path / "crash.sketch"
+    bdf = spark.createDataFrame([("aaa",)] * 4 + [("bbb",)] * 2, "text string")
+    merge_batch_into(state, bdf, "text", mk, batch_id=0)
+    before = state.read_bytes()
+    first = load_running(state).estimate_batch(["aaa", "bbb"])
+
+    real_replace, crashes = accumulate.os.replace, []
+
+    def replace_crashing_once(src, dst):
+        if Path(dst) == state and not crashes:
+            crashes.append(src)
+            raise OSError("simulated crash before rename")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(accumulate.os, "replace", replace_crashing_once)
+    with pytest.raises(OSError, match="simulated crash"):
+        merge_batch_into(state, bdf, "text", mk, batch_id=1)
+    assert state.read_bytes() == before
+    assert (tmp_path / "crash.sketch.tmp").exists()
+    np.testing.assert_array_equal(load_running(state).estimate_batch(["aaa", "bbb"]), first)
+
+    merge_batch_into(state, bdf, "text", mk, batch_id=1)  # redelivery
+    merge_batch_into(state, bdf, "text", mk, batch_id=1)  # and its replay
+    np.testing.assert_array_equal(load_running(state).estimate_batch(["aaa", "bbb"]), first * 2)
 
 
 @pytest.mark.spark
@@ -285,6 +286,31 @@ def test_stream_insert_online_mibf(spark, tmp_path):
     )
     q2.awaitTermination(60)
     assert load_running(state).serialize() == blob1
+
+
+@pytest.mark.spark
+def test_stream_insert_online_mibf_rejects_foreign_lineage(spark, tmp_path):
+    """A miBF state file written under another checkpoint lineage must
+    not drive this query's replay guard: the first micro-batch raises
+    and the file stays byte-unchanged."""
+    from btl_bloomfilter_spark.operators.mibf import MIBloomFilter
+    from btl_bloomfilter_spark.streaming.accumulate import _write_state, stream_insert_online_mibf
+
+    text = "ACGT" * 20
+    bf = BloomFilter(1 << 12, 3, 9)
+    bf.update([text])
+    mibf = MIBloomFilter(1 << 12, 3, 9)
+    mibf.freeze(bf.bits.copy())
+    state = tmp_path / "running.mibf"
+    _write_state(state, 5, str(tmp_path / "other_ck"), mibf)
+    before = state.read_bytes()
+    src = tmp_path / "src"
+    spark.createDataFrame([(1, text)], "rid long, text string").coalesce(1).write.parquet(str(src))
+    stream = spark.readStream.schema("rid long, text string").parquet(str(src))
+    q = stream_insert_online_mibf(stream, "text", "rid", state_path=state, checkpoint_dir=tmp_path / "ck")
+    with pytest.raises(Exception, match="lineage"):
+        q.awaitTermination(120)
+    assert state.read_bytes() == before
 
 
 def test_stream_keyed_online_mibf(spark, tmp_path):
